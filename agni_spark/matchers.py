@@ -8,20 +8,18 @@ stores empty values (querier.go:189-195), so any matcher that matches
 "" cannot be answered from the postings index alone — the reference
 defers it and drops series post-fetch (querier.go:457-462).
 
-Spark-first translation: for each matcher we build a *value condition*
-on the exploded `series_labels(series_id, name, value)` table and pick
-the join strategy from whether the matcher accepts "":
-
-- does NOT match ""  -> LEFT SEMI join against rows where the condition
-  holds (classic postings lookup; pushdown-friendly).
-- DOES match ""      -> LEFT ANTI join against rows where the condition
-  FAILS (series with the label present-but-not-matching are excluded;
-  series lacking the label survive the anti-join). This one rule yields
-  correct semantics for l="" (absent), l!="v", l!~"re", and regexes
-  that match the empty string.
+Spark-first translation: the querier (`Querier.select_series`) pivots
+the `series_labels(series_id, name, value)` rows of the matchers' label
+names into one column per name, then evaluates each matcher's *value
+condition* on that column, with an ABSENT label (NULL after the pivot)
+reading as "": it passes exactly when the matcher accepts "". This one
+rule yields correct semantics for l="" (absent), l!="v", l!~"re", and
+regexes that match the empty string. Series carrying none of the names
+can only match when every matcher accepts "", and only then does the
+querier bring in the full series list.
 
 A conjunction of matchers (tsdb.Intersect, postings.go:168-233) is the
-chain of these joins; regex/IN value expansion (tsdb.Merge,
+AND of these conditions; regex/IN value expansion (tsdb.Merge,
 postings.go:235-317) is subsumed by the OR inside one condition.
 """
 
@@ -94,10 +92,6 @@ class Matcher:
         if self.op == IN:
             return value_col.isin(list(self.value))
         raise AssertionError(self.op)
-
-    def negated_condition(self, value_col: Column) -> Column:
-        """Column condition: label present and value does NOT match."""
-        return ~self.positive_condition(value_col)
 
     def simplify(self) -> "Matcher":
         """Logical rewrite (the optimization Prometheus' own engine and

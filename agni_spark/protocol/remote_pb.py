@@ -115,8 +115,7 @@ def _varint_field(fno: int, v: int) -> bytes:
     return _key(fno, 0) + _uv(v)
 
 
-def _double_field(fno: int, v: float) -> bytes:
-    return _key(fno, 1) + struct.pack("<d", v)
+_pack_double = struct.Struct("<d").pack
 
 
 # -- primitive readers ------------------------------------------------------
@@ -210,20 +209,10 @@ def decode_read_request(buf: bytes) -> ReadRequest:
 
 
 def encode_read_response(resp: ReadResponse) -> bytes:
-    out = b""
-    for result in resp.results:
-        rb = b""
-        for ts in result:
-            tsb = b""
-            for name, value in ts.labels:
-                tsb += _ld(1, _ld(1, name.encode()) + _ld(2, value.encode()))
-            for value, t in ts.samples:
-                # both fields always emitted (proto3 default-elision is
-                # legal but explicit fields decode everywhere)
-                tsb += _ld(2, _double_field(1, value) + _varint_field(2, t))
-            rb += _ld(1, tsb)
-        out += _ld(1, rb)
-    return out
+    return b"".join(
+        _ld(1, b"".join(_ld(1, _encode_timeseries(ts)) for ts in result))
+        for result in resp.results
+    )
 
 
 def decode_read_response(buf: bytes) -> ReadResponse:
@@ -320,12 +309,18 @@ class WriteRequest:
 
 
 def _encode_timeseries(ts: TimeSeries) -> bytes:
-    tsb = b""
-    for name, value in ts.labels:
-        tsb += _ld(1, _ld(1, name.encode()) + _ld(2, value.encode()))
+    parts = [
+        _ld(1, _ld(1, name.encode()) + _ld(2, value.encode()))
+        for name, value in ts.labels
+    ]
     for value, t in ts.samples:
-        tsb += _ld(2, _double_field(1, value) + _varint_field(2, t))
-    return tsb
+        # Sample (field 2) = {1: double, key 0x09; 2: varint ms, key 0x10},
+        # inline: the per-sample hot loop. Both fields always emitted
+        # (proto3 elision is legal; explicit fields decode everywhere). The
+        # body is <= 20 bytes, so its length prefix is one byte.
+        body = b"\x09" + _pack_double(value) + b"\x10" + _uv(t)
+        parts.append(b"\x12" + bytes((len(body),)) + body)
+    return b"".join(parts)
 
 
 def _decode_timeseries(buf: bytes) -> TimeSeries:

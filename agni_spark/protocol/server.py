@@ -4,14 +4,17 @@ Request path, mirroring agni server.go:64-97 stage by stage:
   POST /read body --snappy--> protobuf ReadRequest        (S12)
   per Query: (start_ms, end_ms, matchers)                  (server.go:100-103)
   matcher translation -> agni_spark.Matcher                (server.go:107-132)
-  Querier.select(...) -> ONE Catalyst plan                 (stages 4-5 collapse)
+  Querier.select(..., sort=False) -> ONE Catalyst plan    (stages 4-5 collapse)
   matrix assembly: groupBy(series) sorted sample arrays    (server.go:134-162)
   proto ReadResponse --snappy--> HTTP 200                  (S13)
 
 The only collect() in the engine sits here, at the serving edge —
-everything upstream is distributed. Matrix rows arrive series-sorted
-(label-set order == series_id order) with time-sorted samples, the
-reference's output contract (querier.go:314-328).
+everything upstream is distributed. The plan carries no global sort:
+samples are time-sorted per series by sort_array, and the collected
+per-series rows are put in series_id order (label-set order) on the
+driver, the reference's output contract (querier.go:314-328). PromQL
+range and instant results are likewise sorted on the driver after
+the collect.
 """
 
 from __future__ import annotations
@@ -35,52 +38,46 @@ def matchers_from_proto(ms: list[pb.LabelMatcher]) -> list[Matcher]:
     return [Matcher(_WIRE_OPS[m.type], m.name, m.value) for m in ms]
 
 
-def evaluate_query(querier: Querier, q: pb.Query) -> list[pb.TimeSeries]:
-    """One remote-read Query -> list of TimeSeries (the Matrix).
+def _series_points(querier: Querier, q: pb.Query):
+    """(labels, ts_ms list, value list) per series matching one
+    remote-read Query, in series_id order; samples are time-sorted.
 
     Sample arrays are assembled DISTRIBUTED per series
     (sort_array(collect_list(...)) — SURVEY §1.4 Matrix mapping); the
-    driver only receives the final per-series rows."""
+    driver receives two primitive arrays per series, not a Row per
+    sample, and orders the series itself: no range-partition sort."""
     sel = querier.select(
-        matchers_from_proto(q.matchers), mint_ms=q.start_ms, maxt_ms=q.end_ms
+        matchers_from_proto(q.matchers),
+        mint_ms=q.start_ms,
+        maxt_ms=q.end_ms,
+        sort=False,
     )
+    pts = F.sort_array(F.collect_list(F.struct("ts_ms", "value")))
     per_series = (
         sel.groupBy("series_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("ts_ms", "value"))
-            ).alias("pts")
-        )
+        .agg(pts.alias("pts"))
+        # `__` names are reserved in Prometheus: no label column clashes
+        .select("series_id", F.col("pts.ts_ms").alias("__ts"),
+                F.col("pts.value").alias("__vs"))
         .join(querier.series, "series_id")
-        .orderBy("series_id")
     )
     label_cols = [c for c in querier.series.columns if c != "series_id"]
-    out = []
-    for row in per_series.collect():  # serving edge: results only
-        labels = []
-        for c in label_cols:
-            v = row[c]
-            if v is not None:
-                name = "__name__" if c == "metric" else c
-                labels.append((name, v))
-        labels.sort()
-        out.append(
-            pb.TimeSeries(
-                labels=labels,
-                samples=[(p.value, p.ts_ms) for p in row.pts],
-            )
+    rows = per_series.collect()  # serving edge: results only
+    for row in sorted(rows, key=lambda r: r.series_id):
+        labels = sorted(
+            ("__name__" if c == "metric" else c, row[c])
+            for c in label_cols
+            if row[c] is not None
         )
-    return out
+        yield labels, row["__ts"], row["__vs"]
 
 
-def handle_read(querier: Querier, body: bytes) -> bytes:
-    """Full request pipeline on raw bytes (transport-independent —
-    tested without sockets; the HTTP handler below is a thin shell)."""
-    req = pb.decode_read_request(snappy.decompress(body))
-    resp = pb.ReadResponse(
-        results=[evaluate_query(querier, q) for q in req.queries]
-    )
-    return snappy.compress(pb.encode_read_response(resp))
+def evaluate_query(querier: Querier, q: pb.Query) -> list[pb.TimeSeries]:
+    """One remote-read Query -> list of TimeSeries (the Matrix)."""
+    return [
+        pb.TimeSeries(labels=labels, samples=list(zip(vs, ts)))
+        for labels, ts, vs in _series_points(querier, q)
+    ]
 
 
 # -- streamed remote read (STREAMED_XOR_CHUNKS) ------------------------------
@@ -150,29 +147,9 @@ def evaluate_query_chunked(
     decodes with its existing path."""
     from agni_spark.sources.tsdb_format import ENC_XOR, encode_xor_chunk
 
-    sel = querier.select(
-        matchers_from_proto(q.matchers), mint_ms=q.start_ms, maxt_ms=q.end_ms
-    )
-    per_series = (
-        sel.groupBy("series_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("ts_ms", "value"))
-            ).alias("pts")
-        )
-        .join(querier.series, "series_id")
-        .orderBy("series_id")
-    )
-    label_cols = [c for c in querier.series.columns if c != "series_id"]
     frames = []
-    for row in per_series.collect():  # serving edge: results only
-        labels = []
-        for c in label_cols:
-            v = row[c]
-            if v is not None:
-                labels.append(("__name__" if c == "metric" else c, v))
-        labels.sort()
-        pts = [(p.ts_ms, p.value) for p in row.pts]
+    for labels, ts, vs in _series_points(querier, q):
+        pts = list(zip(ts, vs))
         chunks = []
         for i in range(0, len(pts), _SAMPLES_PER_CHUNK):
             part = pts[i : i + _SAMPLES_PER_CHUNK]
@@ -417,6 +394,16 @@ def handle_write(spark, body: bytes, store_path: str, block_ms: int = 7_200_000)
 
 # -- PromQL query API (beyond reference: upstream Prometheus's job) ---------
 
+def _asc(v) -> tuple:
+    """Sort key placing `v` where Spark's ascending ORDER BY does:
+    NULLS FIRST, and NaN after every other double."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float) and v != v:
+        return (2,)
+    return (1, v)
+
+
 def eval_promql(
     querier: Querier,
     expr_text: str,
@@ -471,18 +458,20 @@ def eval_promql(
         # resolve series ids to label sets
         df = df.join(querier.series, "series_id")
         label_cols = [c for c in querier.series.columns if c != "series_id"]
-    order = (label_cols + [tcol]) if tcol else label_cols
-    rows = df.orderBy(*order).collect()
+    # ORDER BY labels, time on the driver, with sort-key work per label
+    # set, not per point: group the points, sort the sets, then each
+    # set's points by time
+    n, tc = len(label_cols), F.col(tcol) if tcol else F.lit(end_ms or 0)
+    groups: dict[tuple, list] = {}
+    for r in df.select(*label_cols, tc, "value").collect():
+        groups.setdefault(tuple(r[:n]), []).append(tuple(r[n:]))
     result: list[dict] = []
-    current_key, current = None, None
-    for r in rows:
-        key = tuple((c, r[c]) for c in label_cols if r[c] is not None)
-        if key != current_key:
-            current = {"metric": dict(key), "values": []}
-            result.append(current)
-            current_key = key
-        t = r[tcol] if tcol else (end_ms or 0)
-        current["values"].append([t / 1000.0, str(r["value"])])
+    for key in sorted(groups, key=lambda k: tuple(map(_asc, k))):
+        points = sorted(groups[key], key=lambda p: _asc(p[0]))
+        result.append({
+            "metric": {c: v for c, v in zip(label_cols, key) if v is not None},
+            "values": [[t / 1000.0, str(v)] for t, v in points],
+        })
     return {
         "status": "success",
         "data": {"resultType": "matrix", "result": result},
@@ -621,7 +610,7 @@ def eval_instant(
         raise ValueError(
             "instant query supports selectors and label aggregations"
         )
-    rows = df.orderBy(*keys).collect() if keys else df.collect()
+    rows = sorted(df.collect(), key=lambda r: tuple(_asc(r[c]) for c in keys))
     result = []
     for r in rows:
         metric = {}

@@ -7,8 +7,9 @@ plan:
 
     samples (huge fact, time-partitioned parquet)
       |> partition/row-group pruning on ts_ms          (P1, P7, P8)
-      |> LEFT SEMI join w/ broadcast(matched series)   (P2-P6, A1, A2)
-      |> ORDER BY series_id, ts_ms                     (M1, M2, A3)
+      |> LEFT SEMI join w/ broadcast(matched series),
+         matched in ONE pass over the postings         (P2-P6, A1, A2)
+      |> ORDER BY series_id, ts_ms unless sort=False   (M1, M2, A3)
 
 Scale notes (100 TB posture):
 - `series_labels` is the dimension side (series count << sample count);
@@ -67,27 +68,37 @@ class Querier:
 
         Equality/regex/prefix postings lookup: agni querier.go:236-283;
         intersection tree: vendor tsdb postings.go:168-233; absent-label
-        deferral: querier.go:189-195,457-462. See matchers.py for the
-        semi/anti join rule.
+        deferral: querier.go:189-195,457-462. One pass over the
+        postings: see matchers.py for the pivot + conjunction rule.
         """
-        out = self.series.select("series_id")
-        sl = self.series_labels
-        for m in matchers:
-            # literal-regex rewrite: =~"a|b" -> IN, =~"lit.*" -> prefix
-            # (pushdown-capable predicates; rlike never pushes)
-            m = m.simplify()
-            if m.matches_empty():
-                # series with the label present-but-not-matching are out;
-                # series lacking the label survive (absent == "").
-                bad = sl.where(
-                    (F.col("name") == m.name) & m.negated_condition(F.col("value"))
-                ).select("series_id")
-                out = out.join(bad, "series_id", "left_anti")
-            else:
-                good = sl.where(
-                    (F.col("name") == m.name) & m.positive_condition(F.col("value"))
-                ).select("series_id").distinct()
-                out = out.join(good, "series_id", "left_semi")
+        # literal-regex rewrite: =~"a|b" -> IN, =~"lit.*" -> prefix
+        # (pushdown-capable predicates; rlike never pushes)
+        ms = [m.simplify() for m in matchers]
+        if not ms:
+            out = self.series.select("series_id")
+        else:
+            names = sorted({m.name for m in ms})
+            col = {n: f"_l{i}" for i, n in enumerate(names)}
+            out = (
+                self.series_labels.where(F.col("name").isin(names))
+                .groupBy("series_id")
+                .agg(
+                    *[
+                        F.max(F.when(F.col("name") == n, F.col("value"))).alias(c)
+                        for n, c in col.items()
+                    ]
+                )
+            )
+            if all(m.matches_empty() for m in ms):
+                out = self.series.select("series_id").join(out, "series_id", "left")
+            # absent (NULL) -> matches_empty(), as for the left join
+            pred = F.lit(True)
+            for m in ms:
+                v = F.col(col[m.name])
+                pred = pred & F.when(v.isNull(), F.lit(m.matches_empty())).otherwise(
+                    m.positive_condition(v)
+                )
+            out = out.where(pred).select("series_id")
         if broadcast_series:
             out = F.broadcast(out)
         return out
@@ -112,10 +123,13 @@ class Querier:
         label-sorted order), samples in time order (querier.go:314-328).
 
         `sort=False` skips the global range-partition sort for
-        INTERNAL consumers (the PromQL compute tier) whose next step is
-        a hash-partitioned window or aggregation on series_id anyway —
-        at scale the output sort is a full extra shuffle the window
-        immediately redoes. Serving paths keep the sorted contract.
+        consumers whose next step is a hash-partitioned window or
+        aggregation on series_id anyway (the PromQL compute tier, the
+        serving edge's per-series assembly) — at scale the output sort
+        is a full extra shuffle the window immediately redoes. The
+        serving edge restores the (series_id, ts_ms) order itself:
+        sort_array per series, then a driver-side sort of the collected
+        per-series rows.
         """
         matchers = list(matchers)
         df = self.samples

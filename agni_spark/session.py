@@ -30,6 +30,9 @@ def get_spark(app_name: str = "agni-spark", cpus: int | None = None) -> SparkSes
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # per-query codegen classes overflow a C1-only JVM's 48 MB default
+        # code cache, which then flushes and recompiles hot engine code
+        .config("spark.driver.defaultJavaOptions", "-XX:ReservedCodeCacheSize=256m")
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

@@ -29,6 +29,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from agni_spark.datamodel import BLOCK_MS
 
@@ -66,6 +67,17 @@ def _fs_rename(spark: SparkSession, src: str, dst: str) -> bool:
 def _fs_exists(spark: SparkSession, path: str) -> bool:
     fs, P = _hfs(spark, path)
     return fs.exists(P(path))
+
+
+def _partition_values(spark: SparkSession, path: str, key: str) -> list[str]:
+    """Values of the `key=<value>` directories directly under `path`
+    (one FS listing, no Spark job); [] when `path` does not exist."""
+    fs, P = _hfs(spark, path)
+    if not fs.exists(P(path)):
+        return []
+    prefix = f"{key}="
+    names = (st.getPath().getName() for st in fs.listStatus(P(path)))
+    return [n[len(prefix):] for n in names if n.startswith(prefix)]
 
 
 def registry_block_ids(spark: SparkSession, path: str) -> list[int]:
@@ -117,7 +129,10 @@ def write_blocks(
     )
     # registry written AFTER data = commit point (marker-key-last,
     # shipper.go:311-319)
-    refresh_registry(samples.sparkSession, path, block_ms, level)
+    refresh_registry(
+        samples.sparkSession, path, block_ms, level,
+        levels={} if mode == "overwrite" else None,
+    )
 
 
 def refresh_registry(
@@ -134,9 +149,17 @@ def refresh_registry(
 
     `levels` assigns per-block compaction levels (block_id -> level);
     blocks absent from the map get `level`. This lets compaction bump
-    levels in the SAME registry commit instead of a second rewrite."""
+    levels in the SAME registry commit instead of a second rewrite.
+    Without `levels`, blocks already in the registry keep their
+    registered level (an append must not undo a compaction) and only
+    new blocks get `level`.
+
+    The O(#blocks) summary is computed once, collected, and written as
+    both the live registry and the next history version."""
     data_path = os.path.join(path, "data")
-    reg = (
+    if levels is None:
+        levels = _registered_levels(spark, path)
+    summary = (
         spark.read.parquet(data_path)
         # partition-dir inference types block_id as INT; widen before
         # arithmetic (INT * 7_200_000 overflows under ANSI mode)
@@ -158,34 +181,26 @@ def refresh_registry(
             "num_series",
             "data_mint_ms",
             "data_maxt_ms",
-            F.lit(level).cast("int").alias("compaction_level"),
         )
     )
-    if levels:
-        # levels is O(blocks) tiny — broadcast-join it onto the summary
-        lv = spark.createDataFrame(
-            [(int(b), int(l)) for b, l in sorted(levels.items())],
-            "block_id long, lvl int",
-        )
-        reg = (
-            reg.join(F.broadcast(lv), "block_id", "left")
-            .withColumn(
-                "compaction_level",
-                F.coalesce(F.col("lvl"), F.col("compaction_level")).cast("int"),
-            )
-            .drop("lvl")
-            .select(
-                "ulid", "block_id", "mint_ms", "maxt_ms", "num_samples",
-                "num_series", "data_mint_ms", "data_maxt_ms", "compaction_level",
-            )
-        )
-    reg = reg.repartition(1)
+    # pandas both ways: Arrow transfers, no Python workers
+    pdf = summary.toPandas().sort_values("block_id", ignore_index=True)
+    pdf["compaction_level"] = [levels.get(int(b), level) for b in pdf["block_id"]]
+    schema = T.StructType(
+        [*summary.schema, T.StructField("compaction_level", T.IntegerType(), False)]
+    )
+    reg = spark.createDataFrame(pdf, schema).coalesce(1)
     reg.write.mode("overwrite").parquet(os.path.join(path, "registry"))
     # snapshot history: every commit ALSO lands as an immutable
     # registry_history/version=N partition (after the live registry —
     # the live write stays the commit point; history is the audit/
     # time-travel surface). O(#blocks) rows per version, negligible
     # next to the data.
+    _append_history(spark, path, reg)
+
+
+def _append_history(spark: SparkSession, path: str, reg: DataFrame) -> None:
+    """Land `reg` as the next registry_history/version=N partition."""
     vs = registry_versions(spark, path)
     nxt = (max(vs) + 1) if vs else 0
     reg.withColumn("version", F.lit(nxt).cast("long")).write.partitionBy(
@@ -214,14 +229,23 @@ def read_registry(
     )
 
 
+def _registered_levels(spark: SparkSession, path: str) -> dict[int, int]:
+    """block_id -> compaction level per the live registry ({} before
+    the first commit)."""
+    if not _fs_exists(spark, os.path.join(path, "registry")):
+        return {}
+    reg = read_registry(spark, path).select("block_id", "compaction_level")
+    return {r.block_id: r.compaction_level for r in reg.collect()}
+
+
 def registry_versions(spark: SparkSession, path: str) -> list[int]:
-    """Committed registry snapshot versions, oldest first."""
-    hist = os.path.join(path, "registry_history")
-    if not _fs_exists(spark, hist):
-        return []
+    """Committed registry snapshot versions, oldest first (a listing
+    of the `version=N` directories, not a scan of the history)."""
     return sorted(
-        r.version
-        for r in spark.read.parquet(hist).select("version").distinct().collect()
+        int(v)
+        for v in _partition_values(
+            spark, os.path.join(path, "registry_history"), "version"
+        )
     )
 
 
@@ -291,13 +315,7 @@ def compact(
     data_path = os.path.join(path, "data")
     df = spark.read.parquet(data_path)
     # remember pre-compaction levels so untouched blocks keep theirs
-    try:
-        old_levels = {
-            r.block_id: r.compaction_level
-            for r in read_registry(spark, path).collect()
-        }
-    except Exception:  # no registry yet
-        old_levels = {}
+    old_levels = _registered_levels(spark, path)
     if block_ids is not None:
         df = df.where(F.col("block_id").isin(block_ids))
         compacted = set(block_ids)
@@ -523,20 +541,14 @@ def vacuum_store(spark: SparkSession, path: str) -> list[int]:
     untouched — vacuum removes only what was never committed. Returns
     the orphaned block ids removed."""
     data_path = os.path.join(path, "data")
-    fs, P = _hfs(spark, data_path)
-    if not fs.exists(P(data_path)):
+    found = _partition_values(spark, data_path, "block_id")
+    if not found:
         return []
     committed = set(registry_block_ids(spark, path))
-    removed = []
-    for st in fs.listStatus(P(data_path)):
-        name = st.getPath().getName()
-        if not name.startswith("block_id="):
-            continue
-        bid = int(name.split("=", 1)[1])
-        if bid not in committed:
-            _fs_delete(spark, os.path.join(data_path, name))
-            removed.append(bid)
-    return sorted(removed)
+    removed = sorted(int(b) for b in found if int(b) not in committed)
+    for bid in removed:
+        _fs_delete(spark, os.path.join(data_path, f"block_id={bid}"))
+    return removed
 
 
 # ---------------------------------------------------------------------------
@@ -564,14 +576,7 @@ def write_tenant_blocks(
 
 
 def tenants(spark: SparkSession, root: str) -> list[str]:
-    fs, P = _hfs(spark, root)
-    if not fs.exists(P(root)):
-        return []
-    return sorted(
-        st.getPath().getName().split("=", 1)[1]
-        for st in fs.listStatus(P(root))
-        if st.getPath().getName().startswith("tenant=")
-    )
+    return sorted(_partition_values(spark, root, "tenant"))
 
 
 def cross_tenant_samples(
@@ -664,11 +669,7 @@ def rollback_store(spark: SparkSession, path: str, version: int) -> None:
     _fs_rename(
         spark, os.path.join(path, "registry_tmp"), os.path.join(path, "registry")
     )
-    vs = registry_versions(spark, path)
-    nxt = (max(vs) + 1) if vs else 0
-    snap.withColumn("version", F.lit(nxt).cast("long")).write.partitionBy(
-        "version"
-    ).mode("append").parquet(os.path.join(path, "registry_history"))
+    _append_history(spark, path, snap)
 
 
 # ---------------------------------------------------------------------------

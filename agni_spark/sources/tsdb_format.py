@@ -44,29 +44,33 @@ ENC_XOR = 1  # chunks/chunk.go:36-49
 # bit stream
 # ---------------------------------------------------------------------------
 class BitWriter:
-    """MSB-first bit appender (vendor tsdb chunks/bstream.go)."""
+    """MSB-first bit appender (vendor tsdb chunks/bstream.go). Whole
+    bytes land in `buf` as they fill; the last < 8 bits wait in `acc`."""
 
     def __init__(self) -> None:
         self.buf = bytearray()
-        self.nbits = 0  # bits used in last byte
-
-    def write_bit(self, bit: int) -> None:
-        if self.nbits == 0:
-            self.buf.append(0)
-            self.nbits = 8
-        self.nbits -= 1
-        if bit:
-            self.buf[-1] |= 1 << self.nbits
+        self.acc = 0  # pending bits, MSB first
+        self.nacc = 0  # how many; fewer than 8 between calls
 
     def write_bits(self, value: int, n: int) -> None:
-        value &= (1 << n) - 1
-        for i in range(n - 1, -1, -1):
-            self.write_bit((value >> i) & 1)
+        acc = (self.acc << n) | (value & ((1 << n) - 1))
+        nacc = self.nacc + n
+        if nacc >= 8:
+            rem = nacc & 7
+            self.buf += (acc >> rem).to_bytes(nacc >> 3, "big")
+            acc &= (1 << rem) - 1
+            nacc = rem
+        self.acc, self.nacc = acc, nacc
+
+    def write_bit(self, bit: int) -> None:
+        self.write_bits(bit, 1)
 
     def write_byte(self, b: int) -> None:
         self.write_bits(b, 8)
 
     def bytes(self) -> bytes:
+        if self.nacc:  # the partial last byte, zero-padded on the right
+            return bytes(self.buf) + bytes((self.acc << (8 - self.nacc),))
         return bytes(self.buf)
 
 

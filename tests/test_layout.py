@@ -588,3 +588,41 @@ def test_zorder_prunes_2d_rectangle(spark, tmp_path):
     # layout is performance-only: the data itself is identical
     rect = x_slab & y_slab
     assert spark.read.parquet(zpath).where(rect).count() == 16 * 16
+
+
+def test_append_keeps_compacted_levels(spark, tmp_path):
+    """A compacted block keeps its registered level across later
+    appends (write_blocks and the remote-write receiver), so
+    plan_compaction does not plan it again; an overwrite restarts
+    every block at `level`."""
+    from agni_spark.protocol import remote_pb as pb
+    from agni_spark.protocol import snappy_codec as snappy
+    from agni_spark.protocol.server import handle_write
+
+    def levels():
+        return {
+            r.block_id: r.compaction_level
+            for r in layout.read_registry(spark, path).collect()
+        }
+
+    path = str(tmp_path / "lv_store")
+    samples = spark.createDataFrame(
+        [(s, b * 7_200_000 + s, float(s)) for s in (1, 2) for b in (0, 1)],
+        "series_id long, ts_ms long, value double",
+    )
+    layout.write_blocks(samples, path)
+    layout.compact(spark, path, block_ids=[1])
+    assert levels() == {0: 1, 1: 2}
+
+    more = spark.createDataFrame(
+        [(3, 500, 3.0)], "series_id long, ts_ms long, value double"
+    )
+    layout.write_blocks(more, path, mode="append")
+    assert levels() == {0: 1, 1: 2}
+    w = pb.WriteRequest([pb.TimeSeries(labels=[("a", "b")], samples=[(1.0, 700)])])
+    assert handle_write(spark, snappy.compress(pb.encode_write_request(w)), path) == 1
+    assert levels() == {0: 1, 1: 2}
+    assert layout.read_samples(spark, path).count() == 6
+
+    layout.write_blocks(samples, path)
+    assert levels() == {0: 1, 1: 1}

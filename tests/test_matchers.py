@@ -94,8 +94,11 @@ def test_single_matcher(querier, m):
         [eq("job", "api"), eq("pod", "")],
         [neq("pod", ""), re_match("job", "(api|web).*")],
         [re_match("pod", "(pod-1)?"), neq("env", "dev")],
+        [eq("pod", ""), neq("job", "api")],
+        [eq("job", "web"), neq("zone", "eu")],
     ],
-    ids=["eq+eq", "eq+absent", "present+re", "emptyre+neq"],
+    ids=["eq+eq", "eq+absent", "present+re", "emptyre+neq", "all-empty",
+         "unknown-label"],
 )
 def test_conjunction(querier, ms):
     got = {r.series_id for r in querier.select_series(ms).collect()}

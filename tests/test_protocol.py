@@ -421,6 +421,34 @@ def test_http_write_endpoint(spark, served_querier, tmp_path):
         srv.stop()
 
 
+def test_query_range_result_order(spark):
+    """Range results are ordered on the driver as Spark's ORDER BY
+    labels, time would: an absent label (NULL) sorts first, and each
+    label set's points come in time order whatever the collect order."""
+    from agni_spark.protocol.server import eval_promql
+    from agni_spark.querier import Querier
+
+    dim = [(0, "up", "b"), (1, "up", None), (2, "up", "a")]
+    samples = spark.createDataFrame(
+        [(s, t, float(10 * s + t)) for t in (3, 1, 2) for s, _, _ in dim],
+        "series_id long, ts_ms long, value double",
+    )
+    series = spark.createDataFrame(
+        dim, "series_id long, metric string, pod string"
+    )
+    sl = spark.createDataFrame(
+        [(s, n, v) for s, m, p in dim
+         for n, v in (("__name__", m), ("pod", p)) if v is not None],
+        "series_id long, name string, value string",
+    )
+    body = eval_promql(Querier(samples, series, sl), "up", 0, 10)
+    got = [(r["metric"].get("pod"), r["values"]) for r in body["data"]["result"]]
+    assert got == [
+        (p, [[t / 1000.0, str(float(10 * s + t))] for t in (1, 2, 3)])
+        for s, p in ((1, None), (2, "a"), (0, "b"))
+    ]
+
+
 def test_query_range_step_sliding(served_querier):
     import json
     import urllib.parse
@@ -808,3 +836,63 @@ def test_http_streamed_read_end_to_end(served_querier):
         ] == [(150, 5.0)]
     finally:
         srv.stop()
+
+
+def test_serving_edge_job_budget(spark, tmp_path):
+    """A sampled read, a streamed read and a `sum by (rate)` range query
+    each run in a handful of Spark jobs: matchers resolve in one pass
+    over the postings and the edge sorts its collected rows itself."""
+    import json
+
+    from agni_spark.protocol.server import (
+        handle_query_range, handle_read_negotiated, read_chunked_frames,
+    )
+    from agni_spark.querier import querier_from_store
+    from agni_spark.sources import layout
+
+    store = str(tmp_path / "budget_store")
+    series = [
+        (sid, {"__name__": "http_requests_total", "job": job, "instance": f"i{sid}"})
+        for sid, job in enumerate(["api", "api", "web", "db"])
+    ]
+    samples = spark.createDataFrame(
+        [(sid, t * 60_000, float(t * (sid + 1))) for sid, _ in series for t in range(120)],
+        "series_id long, ts_ms long, value double",
+    )
+    layout.write_blocks(samples, store)
+    spark.createDataFrame(series, "series_id long, labels map<string,string>").write.parquet(
+        f"{store}/series"
+    )
+    q = querier_from_store(spark, store)
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def read(types):
+        req = pb.ReadRequest(
+            [pb.Query(0, 3_600_000, [pb.LabelMatcher(0, "job", "api"),
+                                     pb.LabelMatcher(1, "instance", "i9")])],
+            accepted_response_types=types,
+        )
+        return handle_read_negotiated(q, snappy.compress(pb.encode_read_request(req)))
+
+    (body, _), n = jobs("budget-sampled", lambda: read([]))
+    [result] = pb.decode_read_response(snappy.decompress(body)).results
+    assert len(result) == 2 and n <= 6
+    (body, _), n = jobs("budget-streamed", lambda: read([pb.RESPONSE_STREAMED_XOR_CHUNKS]))
+    assert len(read_chunked_frames(body)) == 2 and n <= 6
+    params = {
+        "query": ["sum by (job) (rate(http_requests_total[5m]))"],
+        "start": ["0"], "end": ["7199"], "step": ["300"],
+    }
+    body, n = jobs("budget-range", lambda: handle_query_range(q, params))
+    out = json.loads(body)
+    assert out["status"] == "success" and len(out["data"]["result"]) == 3
+    assert n <= 6
+
