@@ -430,41 +430,31 @@ def append_minhash_index(
     """Register a new batch in the signature index: O(batch) work, no
     existing partition read or rewritten; manifest rewrite LAST is the
     commit point."""
-    from agni_spark.functions.simsearch import (
-        MINHASH_INDEX_SUBDIRS,
-        _append_manifest,
-        _claim_commit_id,
-        _manifest_snapshot,
-    )
+    from agni_spark.functions.simsearch import MINHASH_INDEX_SUBDIRS, _commit
 
-    ver, mrows, applied_map = _manifest_snapshot(spark, path)
+    def stage(nxt, _commits):
+        sigs = minhash_signatures(new_docs, k, bands * rows)
+        (
+            sigs.withColumn("commit", F.lit(nxt).cast("long"))
+            .write.partitionBy("commit")
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .parquet(f"{path}/sigs")
+        )
+        (
+            minhash_buckets(sigs, bands, rows)
+            .withColumn("commit", F.lit(nxt).cast("long"))
+            .repartition("band")
+            .write.partitionBy("commit", "band")
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .parquet(f"{path}/buckets")
+        )
+
     # the exclusive claim clears a crashed compact's uncommitted
-    # leftover under the id (dynamic overwrite below replaces only
-    # our own partitions)
-    nxt = _claim_commit_id(spark, path, mrows, MINHASH_INDEX_SUBDIRS)
-    sigs = minhash_signatures(new_docs, k, bands * rows)
-    (
-        sigs.withColumn("commit", F.lit(nxt).cast("long"))
-        .write.partitionBy("commit")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(f"{path}/sigs")
-    )
-    (
-        minhash_buckets(sigs, bands, rows)
-        .withColumn("commit", F.lit(nxt).cast("long"))
-        .repartition("band")
-        .write.partitionBy("commit", "band")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(f"{path}/buckets")
-    )
-    _append_manifest(
-        spark, path, mrows, nxt,
-        subdirs=MINHASH_INDEX_SUBDIRS,
-        read_version=ver if ver is not None else 0,
-        applied=applied_map,
-    )
+    # leftover under the id (dynamic overwrite replaces only our own
+    # partitions)
+    _commit(spark, path, MINHASH_INDEX_SUBDIRS, stage)
 
 
 def incremental_dup_pairs(

@@ -13,7 +13,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+from functools import partial
+from typing import NamedTuple
+
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from agni_spark.functions.dedup import cosine, py_hash60
@@ -460,7 +464,7 @@ def semantic_dedup_stored(
         spark, index
     )
     live = _anti_tombstones(
-        h.cells.select("centroid_id", "vec_id", "ce", "commit"),
+        h.scan.select("centroid_id", "vec_id", "ce", "commit"),
         h.tombstones,
     ).select("centroid_id", "vec_id", "ce")
     return _semdedup_sweep(live, threshold, cell_cap)
@@ -1446,10 +1450,11 @@ def _clear_uncommitted_commit(
 # stored-index subdir layouts: (subdir, routing partition column) — the
 # shared commit-partition convention every stored index here uses
 IVF_INDEX_SUBDIRS = [("cells", "centroid_id")]
+SQ_INDEX_SUBDIRS = [("codes", "centroid_id")]
+BQ_INDEX_SUBDIRS = [("codes", "centroid_id")]
 # `vectors/` is OPTIONAL (write_pq_index(store_vectors=True)) —
 # compact/vacuum skip absent subdirs
 PQ_INDEX_SUBDIRS = [("codes", "centroid_id"), ("vectors", "centroid_id")]
-LSH_INDEX_SUBDIRS = [("buckets", "bucket")]
 GRAPH_INDEX_SUBDIRS = [("edges", "bucket"), ("nodes", "bucket")]
 # `positions/` is OPTIONAL (write_text_index(positions=True)) — like
 # the PQ layout's vectors/, compact/vacuum skip it when absent
@@ -1459,6 +1464,78 @@ TEXT_INDEX_SUBDIRS = [
     ("positions", "bucket"),
 ]
 MINHASH_INDEX_SUBDIRS = [("sigs", None), ("buckets", "band")]
+
+
+def _commit(
+    spark, path: str, staged: list, stage, batch_id: int | None = None,
+    app_id: str | None = None, scoped: tuple | None = None,
+    race_hook=None,
+) -> int | None:
+    """The ONE write-commit sequence of every stored-index append,
+    upsert and delete — the block store's marker-key-last rule (data
+    first, then the manifest entry that makes it visible):
+
+    1. snapshot the manifest (serving version, commit rows, per-app
+       replay watermarks, see _manifest_snapshot);
+    2. replay check: a streaming micro-batch this app already
+       committed (batch_id <= its watermark) returns None BEFORE
+       anything is written — a blind replay of an upsert would re-land
+       its tombstone under a new id and hide its own earlier rows;
+    3. claim an EXCLUSIVE commit id against `staged`, the exact subdir
+       layout this write stages (claim-time debris clearing and the
+       OCC renumber move exactly these). The claim records
+       (batch_id, app_id), so a replay of a crashed attempt adopts its
+       own claim and its dynamic-partition-overwrite staging replaces
+       the crashed files — exactly-once under replay;
+    4. `scoped=(ids, id_col)` (upserts): the horizon-scoped tombstone
+       under the claimed id (see _write_tombstones);
+    5. `stage(nxt, commits)`: the family callback that writes the
+       `commit=nxt` partitions, given the snapshot's committed ids;
+    6. `race_hook()`: the deterministic fault-injection seam — it runs
+       after read, claim and staging but BEFORE the manifest CAS, so
+       concurrency tests and the *_concurrent_* oracle rows commit a
+       racing writer here and force the OCC retry path without
+       wall-clock-dependent thread interleaving;
+    7. _append_manifest: the commit point, with OCC retry.
+
+    Returns the final commit id (it changes under an OCC renumber), or
+    None when the micro-batch was already applied."""
+    ver, rows, applied = _manifest_snapshot(spark, path)
+    wm = _applied_watermark(applied, app_id)
+    if batch_id is not None and wm is not None and batch_id <= wm:
+        return None
+    nxt = _claim_commit_id(
+        spark, path, rows, staged, batch_id=batch_id, app_id=app_id
+    )
+    if scoped is not None:
+        _write_tombstones(scoped[0], path, scoped[1], nxt, horizon=nxt)
+    stage(nxt, [c for c, _ in rows])
+    if race_hook is not None:
+        race_hook()
+    return _append_manifest(
+        spark, path, rows, nxt, batch_id=batch_id, subdirs=staged,
+        read_version=ver if ver is not None else 0,
+        app_id=app_id, applied=applied,
+    )
+
+
+def _write_commit(
+    df: DataFrame, path: str, sub: str, routing: str, commit: int,
+    build: bool = False,
+) -> None:
+    """Land `df` as the `commit=` partition of `{path}/{sub}`, clustered
+    on its routing column. A build overwrites the whole subdir; every
+    later writer uses dynamic partition overwrite, so a replay that
+    adopted its crashed attempt's claim replaces that attempt's files
+    instead of doubling rows."""
+    w = (
+        df.withColumn("commit", F.lit(commit).cast("long"))
+        .repartition(routing)
+        .write.partitionBy("commit", routing)
+    )
+    if not build:
+        w = w.option("partitionOverwriteMode", "dynamic")
+    w.mode("overwrite").parquet(f"{path}/{sub}")
 
 
 def _commit_sizes(spark, path: str, primary: str, commits: list) -> dict:
@@ -2088,30 +2165,28 @@ def clone_index(
     _write_index_manifest(spark, dst, [0])
 
 
+def _clone_family(kind: str, spark, src: str, dst: str, as_of) -> None:
+    """clone_index with a family row's layout and frozen-model dirs."""
+    fam = ANN_FAMILIES[kind]
+    clone_index(spark, src, dst, fam.subdirs, aux=fam.model, as_of=as_of)
+
+
 def clone_ivf_index(spark, src: str, dst: str, as_of: int | None = None):
     """Deep-clone a stored IVF-flat index (see clone_index)."""
-    clone_index(
-        spark, src, dst, IVF_INDEX_SUBDIRS, aux=("centroids",), as_of=as_of
-    )
+    _clone_family("ivf", spark, src, dst, as_of)
 
 
 def clone_sq_index(spark, src: str, dst: str, as_of: int | None = None):
     """Deep-clone a stored IVF-SQ8 index: codes + the frozen coarse
     quantizer AND the per-dim scalar bounds (meta) — the clone encodes
     nothing, it copies the committed codes as-is."""
-    clone_index(
-        spark, src, dst, SQ_INDEX_SUBDIRS, aux=("centroids", "meta"),
-        as_of=as_of,
-    )
+    _clone_family("sq", spark, src, dst, as_of)
 
 
 def clone_pq_index(spark, src: str, dst: str, as_of: int | None = None):
     """Deep-clone a stored IVF-PQ index (codes + optional raw vectors
     + the frozen centroids/codebooks/meta model dirs)."""
-    clone_index(
-        spark, src, dst, PQ_INDEX_SUBDIRS,
-        aux=("centroids", "codebooks", "meta"), as_of=as_of,
-    )
+    _clone_family("pq", spark, src, dst, as_of)
 
 
 def clone_graph_index(spark, src: str, dst: str, as_of: int | None = None):
@@ -2174,40 +2249,26 @@ def delete_from_index(
     the layout's id column — vec_id for the vector families, doc_id
     for the text index; the stored column name doubles as the scrub
     key compaction matches against."""
-    ver, rows, applied_map = _manifest_snapshot(spark, path)
-    staged = subdirs + [("tombstones", None), ("meta", None)]
-    nxt = _claim_commit_id(spark, path, rows, staged)
-    (
-        ids.select(F.col(id_col).cast("long"))
-        .distinct()
-        # NULL horizon = the global delete (hides the key everywhere,
-        # wins over later re-appends); upserts write a finite horizon
-        .withColumn("horizon", F.lit(None).cast("long"))
-        .withColumn("commit", F.lit(nxt).cast("long"))
-        .repartition(1)
-        .write.partitionBy("commit")
-        .mode("append")
-        .parquet(f"{path}/tombstones")
-    )
-    return _append_manifest(
-        spark, path, rows, nxt,
-        subdirs=staged, read_version=ver if ver is not None else 0,
-        applied=applied_map,
+    # NULL horizon = the global delete (hides the key everywhere, wins
+    # over later re-appends); upserts write a finite horizon
+    return _commit(
+        spark, path, subdirs + [("tombstones", None), ("meta", None)],
+        lambda nxt, _commits: _write_tombstones(ids, path, id_col, nxt, None),
     )
 
 
-def _write_scoped_tombstones(
-    ids: DataFrame, path: str, id_col: str, nxt: int
+def _write_tombstones(
+    ids: DataFrame, path: str, id_col: str, nxt: int, horizon: int | None
 ) -> None:
-    """The upsert family's tombstone write: horizon = the upsert's own
-    commit, so only STRICTLY OLDER rows of each key are hidden — the
-    replacement rows land in commit=nxt itself and stay visible, as
-    does any later re-append. Same commit-partition idiom as
-    delete_from_index; the caller appends the manifest LAST."""
+    """Land the ids' tombstones under `tombstones/commit=nxt` (the
+    caller appends the manifest LAST). `horizon` None is the global
+    delete; an upsert passes its own commit, so only STRICTLY OLDER
+    rows of each key are hidden — the replacement rows land in
+    commit=nxt itself and stay visible, as does any later re-append."""
     (
         ids.select(F.col(id_col).cast("long"))
         .distinct()
-        .withColumn("horizon", F.lit(nxt).cast("long"))
+        .withColumn("horizon", F.lit(horizon).cast("long"))
         .withColumn("commit", F.lit(nxt).cast("long"))
         .repartition(1)
         .write.partitionBy("commit")
@@ -2338,6 +2399,171 @@ def _hide_superseded(
     ).drop("horizon")
 
 
+# ---------------------------------------------------------------------------
+# The coarse-routed families — IVF-flat, IVF-SQ8, IVF-BQ. Each is one
+# row of ANN_FAMILIES (payload subdir + column, frozen-model dirs,
+# encode and score expressions); the build, encode-on-append, upsert,
+# handle and probe below serve all three. IVF-PQ shares the handle and
+# the commit path but keeps its own training and ADC probe.
+# ---------------------------------------------------------------------------
+def _encode_cells(fam, vectors: DataFrame, cents: DataFrame, meta) -> DataFrame:
+    """(vec_id, centroid_id, <payload>) for (vec_id, embedding) rows:
+    each vector routes by its RAW embedding to the nearest centroid
+    and is stored as the family's encoding of it (`meta` is the frozen
+    meta row; None for IVF-flat)."""
+    cells = _nearest_centroids(
+        vectors.select("vec_id", F.col("embedding").alias("ce")),
+        cents, "vec_id", "ce", 1,
+    )
+    return cells.select(
+        "vec_id", "centroid_id", fam.encode(F.col("ce"), meta).alias(fam.col)
+    )
+
+
+def _write_coarse_index(
+    fam, corpus: DataFrame, path: str, n_centroids: int, iters: int,
+    centroids: DataFrame | None, meta=None,
+) -> None:
+    """The coarse-routed families' build: payload cells under
+    `commit=0` partitioned by (commit, centroid_id), `centroids/`,
+    the frozen `meta/` row when the family has one, and the manifest
+    LAST (the commit marker)."""
+    spark = corpus.sparkSession
+    cents = (
+        centroids if centroids is not None
+        else ivf_centroids(corpus, n_centroids, iters)
+    )
+    sub, routing = fam.subdirs[0]
+    _write_commit(
+        _encode_cells(fam, corpus, cents, meta), path, sub, routing, 0,
+        build=True,
+    )
+    cents.select(
+        "centroid_id", F.col("cvec").cast("array<double>").alias("cvec")
+    ).repartition(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    if meta is not None:
+        spark.createDataFrame([meta], fam.meta_schema).repartition(1).write.mode(
+            "overwrite"
+        ).parquet(f"{path}/meta")
+    _write_index_manifest(spark, path, [0])
+
+
+def _coarse_commit(
+    fam, spark, path: str, new_vectors: DataFrame, batch_id: int | None,
+    app_id: str | None, upsert: bool = False, race_hook=None,
+) -> int | None:
+    """Encode-on-append for a coarse-routed family, committed through
+    _commit: the new vectors route to the FROZEN centroids and encode
+    with the FROZEN meta (standard IVF add() semantics — nothing is
+    retrained, nothing existing is read or rewritten). `upsert` adds
+    the horizon-scoped vec_id tombstone to the same commit."""
+
+    def stage(nxt, _commits):
+        cents = spark.read.parquet(f"{path}/centroids")
+        meta = (
+            spark.read.parquet(f"{path}/meta").first()
+            if "meta" in fam.model else None
+        )
+        sub, routing = fam.subdirs[0]
+        _write_commit(
+            _encode_cells(fam, new_vectors, cents, meta), path, sub, routing,
+            nxt,
+        )
+
+    return _commit(
+        spark, path, fam.subdirs + ([("tombstones", None)] if upsert else []),
+        stage, batch_id=batch_id, app_id=app_id,
+        scoped=(new_vectors, "vec_id") if upsert else None,
+        race_hook=race_hook,
+    )
+
+
+class IvfIndexHandle:
+    """An OPENED stored coarse-routed index (IVF-flat here; the SQ8, BQ
+    and PQ handles are this class with another family row): centroid
+    table, the frozen `meta` row (None for IVF-flat), the committed
+    payload `scan` (cells or codes) and the committed tombstone set,
+    resolved once at open with the manifest snapshot pinned (reopen to
+    see later writes). `as_of` pins an older snapshot (see
+    _snapshot_commits): probes serve the index exactly as it stood
+    after that commit — sound because the coarse quantizer and every
+    model dir are frozen at build time."""
+
+    kind = "ivf"
+
+    def __init__(self, spark, path: str, as_of: int | None = None):
+        fam = self.family = ANN_FAMILIES[self.kind]
+        self.path = path
+        self.cents = spark.read.parquet(f"{path}/centroids")
+        self.meta = (
+            spark.read.parquet(f"{path}/meta").first()
+            if "meta" in fam.model else None
+        )
+        self.commits = _snapshot_commits(spark, path, as_of)
+        # `commit` stays on the scan: the tombstone exclusion is
+        # horizon-scoped against it (upserts); probes project it away
+        # right after the anti-join
+        self.scan = spark.read.parquet(f"{path}/{fam.subdirs[0][0]}").where(
+            F.col("commit").isin(self.commits)
+        )
+        self.tombstones = _tombstones(spark, path, self.commits)
+
+
+def _coarse_probe(
+    h: IvfIndexHandle, queries: DataFrame, k: int, nprobe: int,
+    allowed: DataFrame | None,
+) -> DataFrame:
+    """The coarse-routed families' probe: route each query to its
+    nprobe nearest centroids, join the probes against the partitioned
+    payload scan on the partition column (dynamic partition pruning —
+    only the probed centroid_id dirs are read), filter, score with the
+    family's expression and rank (score DESC, vec_id ASC)."""
+    fam = h.family
+    probes = _nearest_centroids(
+        queries.select("query_id", F.col("embedding").alias("qe")),
+        h.cents, "query_id", "qe", nprobe,
+    )
+    # The cells ⋈ probes join keys on centroid_id — n_centroids
+    # DISTINCT VALUES, so its output lands in <= n_centroids non-empty
+    # partitions and the exact rerank (the expensive part:
+    # higher-order-function folds over the vectors) would run nearly
+    # serial regardless of cluster size. Redistribute the candidate
+    # pairs on (query_id, vec_id) BEFORE scoring (same bytes the rank
+    # window would have shuffled anyway, moved one stage earlier), then
+    # project narrow rows so the window's own query_id shuffle carries
+    # only (ids, score). knn_graph (all-points queries) went 17s -> ~2s
+    # at sf0.1 from this alone.
+    cand = h.scan.join(probes, "centroid_id").where(
+        F.col("vec_id") != F.col("query_id")
+    )
+    if allowed is not None:
+        # semi-join ABOVE the probes join, so the DPP relationship
+        # between probes and the cells scan is untouched - the filter
+        # narrows candidates, never widens what the index reads
+        cand = cand.join(
+            allowed.select("vec_id").distinct(), "vec_id", "semi"
+        )
+    # tombstoned ids drop BEFORE the rank, so survivors fill k (see
+    # delete_from_index); no-op (plan untouched) when no deletes exist
+    cand = _anti_tombstones(cand, h.tombstones)
+    scored = cand.repartition(F.col("query_id"), F.col("vec_id")).select(
+        "query_id",
+        "vec_id",
+        fam.score(F.col("qe"), F.col(fam.col), h.meta).alias(fam.out),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(fam.out).desc(), F.col("vec_id").asc()
+    )
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
+        .select(
+            "query_id", "vec_id", fam.out, F.col("rk").cast("int").alias("rk")
+        )
+        .orderBy("query_id", "rk")
+    )
+
+
 def write_ivf_index(
     corpus: DataFrame, path: str, n_centroids: int = 8, iters: int = 1,
     centroids: DataFrame | None = None,
@@ -2352,87 +2578,31 @@ def write_ivf_index(
     `centroids` pins a precomputed coarse quantizer instead of
     training one from this corpus (used by tests to rebuild an index
     equivalent to build+append)."""
-    spark = corpus.sparkSession
-    cents = (
-        centroids if centroids is not None
-        else ivf_centroids(corpus, n_centroids, iters)
+    _write_coarse_index(
+        ANN_FAMILIES["ivf"], corpus, path, n_centroids, iters, centroids
     )
-    cells = _nearest_centroids(
-        corpus.select("vec_id", F.col("embedding").alias("ce")),
-        cents, "vec_id", "ce", 1,
-    )
-    (
-        cells.withColumn("commit", F.lit(0).cast("long"))
-        .repartition("centroid_id")
-        .write.partitionBy("commit", "centroid_id")
-        .mode("overwrite")
-        .parquet(f"{path}/cells")
-    )
-    cents.select(
-        "centroid_id", F.col("cvec").cast("array<double>").alias("cvec")
-    ).repartition(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    _write_index_manifest(spark, path, [0])
 
 
 def append_ivf_index(
     spark, path: str, new_vectors: DataFrame, batch_id: int | None = None,
     app_id: str | None = None,
     _race_hook=None,
-) -> None:
+) -> int | None:
     """Incremental index maintenance: assign ONLY the new vectors to
     the index's FROZEN centroids (standard IVF add() semantics — the
     coarse quantizer is not retrained) and land them in a fresh
     `commit=` partition; the manifest rewrite LAST is the commit
     point. No existing data is read or rewritten — the append's cost
-    is O(new rows), not O(index).
+    is O(new rows), not O(index). Returns the commit id.
 
     `batch_id` (streaming callers): recorded in the manifest row of
-    the new commit, atomically with the commit itself. A replay whose
-    previous attempt already reached the manifest (crash between
-    manifest write and streaming-checkpoint commit — the window
-    dynamic partition overwrite alone cannot cover, because
-    max(commits)+1 has advanced) is detected as batch_id <= the max
-    applied id and skipped. foreachBatch ids are monotone, which is
-    what makes the <= rule sufficient."""
-    ver, rows, applied_map = _manifest_snapshot(spark, path)
-    wm = _applied_watermark(applied_map, app_id)
-    if batch_id is not None and wm is not None and batch_id <= wm:
-        return
-    cents = spark.read.parquet(f"{path}/centroids")
-    nxt = _claim_commit_id(
-        spark, path, rows, IVF_INDEX_SUBDIRS, batch_id=batch_id,
-        app_id=app_id,
-    )
-    cells = _nearest_centroids(
-        new_vectors.select("vec_id", F.col("embedding").alias("ce")),
-        cents, "vec_id", "ce", 1,
-    )
-    # dynamic partition overwrite, not append: a crashed-then-replayed
-    # append ADOPTS the same claimed commit id (claim records the
-    # micro-batch id) and the same deterministic partitions —
-    # overwrite replaces the crashed attempt's files instead of
-    # doubling rows, which is what makes the streaming wrapper
-    # (stream_ann_index) exactly-once under replay
-    (
-        cells.withColumn("commit", F.lit(nxt).cast("long"))
-        .repartition("centroid_id")
-        .write.partitionBy("commit", "centroid_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(f"{path}/cells")
-    )
-    if _race_hook is not None:
-        # deterministic fault-injection seam: runs after this writer
-        # has read, claimed, and staged but BEFORE its manifest CAS —
-        # concurrency tests and the simsearch_ivf_concurrent_append
-        # oracle row commit a racing writer here, forcing the OCC
-        # retry path without wall-clock-dependent thread interleaving
-        _race_hook()
-    _append_manifest(
-        spark, path, rows, nxt, batch_id=batch_id,
-        subdirs=IVF_INDEX_SUBDIRS,
-        read_version=ver if ver is not None else 0,
-        app_id=app_id, applied=applied_map,
+    the new commit, atomically with the commit itself; a replay whose
+    previous attempt already reached the manifest is skipped (returns
+    None). The replay contract, the exclusive claim and `_race_hook`
+    (the deterministic concurrency seam) are _commit's."""
+    return _coarse_commit(
+        ANN_FAMILIES["ivf"], spark, path, new_vectors, batch_id, app_id,
+        race_hook=_race_hook,
     )
 
 
@@ -2443,7 +2613,7 @@ def upsert_ivf_index(
     """UPSERT (replace-or-insert) into a stored IVF index, round 11:
     one atomic commit that both HIDES every older row of the upserted
     vec_ids (a horizon-scoped tombstone — hides rows committed strictly
-    before this commit, see _write_scoped_tombstones) and LANDS the
+    before this commit, see _write_tombstones) and LANDS the
     replacement vectors, assigned to the FROZEN coarse quantizer like
     any append. Ids new to the index simply insert (their tombstone
     hides nothing). This is the filter-at-query / cleanup-at-compaction
@@ -2465,68 +2635,15 @@ def upsert_ivf_index(
     contract violation (appends are for NEW ids); upsert is the
     supported write-same-id-again operation.
 
-    Crash contract: tombstones/commit=N and cells/commit=N are both
-    written BEFORE the manifest append — a crash anywhere leaves the
-    index serving exactly the old manifest; a replay recomputes the
-    same N and dynamic-partition-overwrites both. Returns N.
-
-    `batch_id` (streaming callers — stream_ann_index(mode='upsert')):
-    same replay contract as append_ivf_index, and for an upsert the
-    applied-id check MUST run before anything is written — a replay
-    whose previous attempt already reached the manifest would
-    otherwise re-write the scoped tombstone under a NEW commit id,
-    with a horizon that hides the original attempt's replacement
-    rows. Returns None when the batch was already applied."""
-    ver, rows, applied_map = _manifest_snapshot(spark, path)
-    wm = _applied_watermark(applied_map, app_id)
-    if batch_id is not None and wm is not None and batch_id <= wm:
-        return None
-    staged = IVF_INDEX_SUBDIRS + [("tombstones", None), ("meta", None)]
-    nxt = _claim_commit_id(spark, path, rows, staged, batch_id=batch_id, app_id=app_id)
-    _write_scoped_tombstones(new_vectors, path, "vec_id", nxt)
-    cents = spark.read.parquet(f"{path}/centroids")
-    cells = _nearest_centroids(
-        new_vectors.select("vec_id", F.col("embedding").alias("ce")),
-        cents, "vec_id", "ce", 1,
+    Crash contract (see _commit): tombstones/commit=N and
+    cells/commit=N are both written BEFORE the manifest append — a
+    crash anywhere leaves the index serving exactly the old manifest.
+    Returns N, or None when the streaming `batch_id` was already
+    applied (checked before anything is written)."""
+    return _coarse_commit(
+        ANN_FAMILIES["ivf"], spark, path, new_vectors, batch_id, app_id,
+        upsert=True, race_hook=_race_hook,
     )
-    (
-        cells.withColumn("commit", F.lit(nxt).cast("long"))
-        .repartition("centroid_id")
-        .write.partitionBy("commit", "centroid_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(f"{path}/cells")
-    )
-    if _race_hook is not None:
-        # deterministic concurrency seam (see append_ivf_index) —
-        # here it additionally exercises the horizon REWRITE: the
-        # renumbered loser's scoped tombstone must follow its new id
-        _race_hook()
-    return _append_manifest(
-        spark, path, rows, nxt, batch_id=batch_id,
-        subdirs=staged, read_version=ver if ver is not None else 0,
-        app_id=app_id, applied=applied_map,
-    )
-
-
-class IvfIndexHandle:
-    """An OPENED stored IVF-flat index: centroid table + committed
-    cells scan resolved once at open (the serving twin of
-    Graph/PQ/TextIndexHandle; manifest snapshot pinned at open).
-    `as_of` pins an older snapshot (see _snapshot_commits): probes
-    serve the index exactly as it stood after that commit."""
-
-    def __init__(self, spark, path: str, as_of: int | None = None):
-        self.path = path
-        self.cents = spark.read.parquet(f"{path}/centroids")
-        self.commits = _snapshot_commits(spark, path, as_of)
-        # `commit` stays on the scan: the tombstone exclusion is
-        # horizon-scoped against it (upserts); probes project it away
-        # right after the anti-join
-        self.cells = spark.read.parquet(f"{path}/cells").where(
-            F.col("commit").isin(self.commits)
-        )
-        self.tombstones = _tombstones(spark, path, self.commits)
 
 
 def open_ivf_index(
@@ -2543,14 +2660,14 @@ def ivf_ann_stored(
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """Probe a stored IVF index: route each query to its nprobe nearest
-    centroids (broadcast centroid table), then join probes against the
-    partitioned cells store. The join key IS the partition column, so
-    Catalyst plans dynamic partition pruning — the cells scan reads
-    only the probed centroid_id directories (plan-asserted in
-    tests/test_plans.py). Results are identical to ivf_ann() built
-    from the same corpus/params; only manifest-committed commit
-    partitions are served (static partition pruning on the IN list).
-    `index` is a path or an open IvfIndexHandle.
+    centroids, then join probes against the partitioned cells store.
+    The join key IS the partition column, so Catalyst plans dynamic
+    partition pruning — the cells scan reads only the probed
+    centroid_id directories (plan-asserted in tests/test_plans.py).
+    Results are identical to ivf_ann() built from the same
+    corpus/params; only manifest-committed commit partitions are
+    served (static partition pruning on the IN list). `index` is a
+    path or an open IvfIndexHandle.
 
     `allowed` (optional) makes this a FILTERED vector search — the
     standard predicate-plus-ANN serving shape: a one-column (vec_id)
@@ -2568,176 +2685,7 @@ def ivf_ann_stored(
     h = index if isinstance(index, IvfIndexHandle) else IvfIndexHandle(
         spark, index
     )
-    cents = h.cents
-    probes = _nearest_centroids(
-        queries.select("query_id", F.col("embedding").alias("qe")),
-        cents, "query_id", "qe", nprobe,
-    )
-    cells = h.cells
-    # The cells ⋈ probes join keys on centroid_id — n_centroids
-    # DISTINCT VALUES, so its output lands in <= n_centroids non-empty
-    # partitions and the exact cosine rerank (the expensive part:
-    # higher-order-function folds over the vectors) would run nearly
-    # serial regardless of cluster size. Redistribute the candidate
-    # pairs on (query_id, vec_id) BEFORE scoring (same bytes the rank
-    # window would have shuffled anyway, moved one stage earlier), then
-    # project narrow rows so the window's own query_id shuffle carries
-    # only (ids, cos). knn_graph (all-points queries) went 17s -> ~2s
-    # at sf0.1 from this alone.
-    cand = cells.join(probes, "centroid_id").where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    if allowed is not None:
-        # semi-join ABOVE the probes join, so the DPP relationship
-        # between probes and the cells scan is untouched - the filter
-        # narrows candidates, never widens what the index reads
-        cand = cand.join(
-            allowed.select("vec_id").distinct(), "vec_id", "semi"
-        )
-    # tombstoned ids drop BEFORE the rank, so survivors fill k (see
-    # delete_from_index); no-op (plan untouched) when no deletes exist
-    cand = _anti_tombstones(cand, h.tombstones)
-    scored = (
-        cand.repartition(F.col("query_id"), F.col("vec_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cos", F.col("rk").cast("int").alias("rk"))
-        .orderBy("query_id", "rk")
-    )
-
-
-def write_lsh_index(
-    corpus: DataFrame, path: str, n_planes: int = 8, dim: int = 64
-) -> None:
-    """Persist the sign-LSH table partitioned by (commit, bucket)
-    (2^n_planes bucket dirs; each vector in exactly one) with a
-    manifest commit marker written LAST."""
-    planes = hyperplanes(dim, n_planes)
-    c = corpus.select(
-        "vec_id",
-        F.col("embedding").alias("ce"),
-        _bucket(F.col("embedding"), planes).alias("bucket"),
-    )
-    (
-        c.withColumn("commit", F.lit(0).cast("long"))
-        .repartition("bucket")
-        .write.partitionBy("commit", "bucket")
-        .mode("overwrite")
-        .parquet(f"{path}/buckets")
-    )
-    _write_index_manifest(corpus.sparkSession, path, [0])
-
-
-def append_lsh_index(
-    spark, path: str, new_vectors: DataFrame,
-    n_planes: int = 8, dim: int = 64,
-) -> None:
-    """Incremental LSH maintenance: bucket only the new vectors with
-    the SAME deterministic hyperplanes (the hash family is the frozen
-    quantizer) into a fresh commit partition, manifest rewrite last.
-    O(new rows), no index rewrite."""
-    planes = hyperplanes(dim, n_planes)
-    ver, rows, applied_map = _manifest_snapshot(spark, path)
-    nxt = _claim_commit_id(spark, path, rows, LSH_INDEX_SUBDIRS)
-    c = new_vectors.select(
-        "vec_id",
-        F.col("embedding").alias("ce"),
-        _bucket(F.col("embedding"), planes).alias("bucket"),
-    )
-    (
-        c.withColumn("commit", F.lit(nxt).cast("long"))
-        .repartition("bucket")
-        .write.partitionBy("commit", "bucket")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(f"{path}/buckets")
-    )
-    _append_manifest(
-        spark, path, rows, nxt,
-        subdirs=LSH_INDEX_SUBDIRS,
-        read_version=ver if ver is not None else 0,
-        applied=applied_map,
-    )
-
-
-class LshIndexHandle:
-    """An OPENED stored LSH table: committed buckets scan resolved
-    once (serving twin of the other *IndexHandle classes; manifest
-    snapshot pinned at open). `as_of` pins an older snapshot — sound
-    because the hyperplanes are frozen at build time."""
-
-    def __init__(self, spark, path: str, as_of: int | None = None):
-        self.path = path
-        self.commits = _snapshot_commits(spark, path, as_of)
-        self.buckets = (
-            spark.read.parquet(f"{path}/buckets")
-            .where(F.col("commit").isin(self.commits))
-            .drop("commit")
-        )
-
-
-def open_lsh_index(
-    spark, path: str, as_of: int | None = None
-) -> LshIndexHandle:
-    """Open a stored LSH table for repeated probing (see
-    LshIndexHandle). `as_of=N` opens the commit-N snapshot."""
-    return LshIndexHandle(spark, path, as_of=as_of)
-
-
-def lsh_ann_stored(
-    spark,
-    index,
-    queries: DataFrame,
-    k: int = 10,
-    n_planes: int = 8,
-    multiprobe: bool = False,
-) -> DataFrame:
-    """Probe a stored LSH table: bucket each query with the same
-    deterministic planes, join on the bucket partition column
-    (dynamic partition pruning -> only probed bucket dirs scanned),
-    exact cosine rerank inside. Matches lsh_ann() on the same
-    corpus/params. `index` is a path or an open LshIndexHandle."""
-    h = index if isinstance(index, LshIndexHandle) else LshIndexHandle(
-        spark, index
-    )
-    planes = hyperplanes(64, n_planes)
-    qb = _bucket(F.col("embedding"), planes)
-    if multiprobe:
-        probes = F.explode(
-            F.array(qb, *[qb.bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)])
-        )
-    else:
-        probes = qb
-    q = F.broadcast(
-        queries.select(
-            "query_id", F.col("embedding").alias("qe"), probes.alias("bucket")
-        )
-    )
-    c = h.buckets
-    scored = (
-        c.join(q, "bucket")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos", F.round(cosine(F.col("qe"), F.col("ce")), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cos", F.col("rk").cast("int").alias("rk"))
-        .orderBy("query_id", "rk")
-    )
+    return _coarse_probe(h, queries, k, nprobe, allowed)
 
 
 # ---------------------------------------------------------------------------
@@ -3634,22 +3582,12 @@ def write_pq_index(
         )
         .join(cells.select("vec_id", "centroid_id"), "vec_id")
     )
-    (
-        packed.withColumn("commit", F.lit(0).cast("long"))
-        .repartition("centroid_id")
-        .write.partitionBy("commit", "centroid_id")
-        .mode("overwrite")
-        .parquet(f"{path}/codes")
-    )
+    _write_commit(packed, path, "codes", "centroid_id", 0, build=True)
     if store_vectors:
-        (
+        _write_commit(
             corpus.select("vec_id", "embedding")
-            .join(cells.select("vec_id", "centroid_id"), "vec_id")
-            .withColumn("commit", F.lit(0).cast("long"))
-            .repartition("centroid_id")
-            .write.partitionBy("commit", "centroid_id")
-            .mode("overwrite")
-            .parquet(f"{path}/vectors")
+            .join(cells.select("vec_id", "centroid_id"), "vec_id"),
+            path, "vectors", "centroid_id", 0, build=True,
         )
     cents.select("centroid_id", F.col("cvec").cast("array<double>").alias("cvec")) \
         .repartition(1).write.mode("overwrite").parquet(f"{path}/centroids")
@@ -3664,31 +3602,14 @@ def write_pq_index(
         df_.unpersist()
 
 
-def append_pq_index(
-    spark, path: str, new_vectors: DataFrame, batch_id: int | None = None,
-    app_id: str | None = None,
-    _pre: tuple | None = None,
-) -> int | None:
-    """Incremental IVF-PQ maintenance (IndexIVFPQ.add_with_ids
-    semantics): assign ONLY the new vectors to the index's FROZEN
-    coarse quantizer, encode their residuals with the FROZEN
-    codebooks — nothing is retrained, matching FAISS's add() contract
-    — and land the packed codes in a fresh `commit=` partition;
-    manifest rewrite LAST is the commit point. O(new rows), no index
-    rewrite. `batch_id` gives streaming callers the same replay
-    idempotency as append_ivf_index (recorded atomically in the
-    manifest; <= max applied id -> skip)."""
-    if _pre is None:
-        ver, rows, applied_map = _manifest_snapshot(spark, path)
-        wm = _applied_watermark(applied_map, app_id)
-        if batch_id is not None and wm is not None and batch_id <= wm:
-            return
-        staged = PQ_INDEX_SUBDIRS
-        nxt = _claim_commit_id(spark, path, rows, staged, batch_id=batch_id, app_id=app_id)
-    else:
-        # upsert_pq_index already claimed the id (its staged layout
-        # includes the tombstones dir) and did the replay check
-        ver, rows, nxt, staged, applied_map = _pre
+def _pq_append(
+    spark, path: str, new_vectors: DataFrame, nxt: int, _commits: list
+) -> None:
+    """The IVF-PQ encode-on-append stage (see _commit): assign the new
+    vectors to the FROZEN coarse quantizer, encode their residuals
+    with the FROZEN codebooks (IndexIVFPQ.add_with_ids — nothing is
+    retrained) and land the packed codes, plus the raw vectors when
+    the index keeps the `vectors/` sidecar."""
     meta = spark.read.parquet(f"{path}/meta").first()
     m = int(meta.m)
     cents = spark.read.parquet(f"{path}/centroids")
@@ -3725,33 +3646,35 @@ def append_pq_index(
             lambda s: s.getField("cid"),
         ).alias("code")
     ).select("vec_id", "code", "centroid_id")
-    (
-        packed.withColumn("commit", F.lit(nxt).cast("long"))
-        .repartition("centroid_id")
-        .write.partitionBy("commit", "centroid_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(f"{path}/codes")
-    )
+    _write_commit(packed, path, "codes", "centroid_id", nxt)
     # a store_vectors=True index keeps its raw-vector sidecar in step
-    from agni_spark.sources.layout import _hfs
+    from agni_spark.sources.layout import _fs_exists
 
-    fs, P = _hfs(spark, f"{path}/vectors")
-    if fs.exists(P(f"{path}/vectors")):
-        (
+    if _fs_exists(spark, f"{path}/vectors"):
+        _write_commit(
             new_vectors.select("vec_id", "embedding")
-            .join(cells.select("vec_id", "centroid_id"), "vec_id")
-            .withColumn("commit", F.lit(nxt).cast("long"))
-            .repartition("centroid_id")
-            .write.partitionBy("commit", "centroid_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(f"{path}/vectors")
+            .join(cells.select("vec_id", "centroid_id"), "vec_id"),
+            path, "vectors", "centroid_id", nxt,
         )
-    return _append_manifest(
-        spark, path, rows, nxt, batch_id=batch_id,
-        subdirs=staged, read_version=ver if ver is not None else 0,
-        app_id=app_id, applied=applied_map,
+
+
+def append_pq_index(
+    spark, path: str, new_vectors: DataFrame, batch_id: int | None = None,
+    app_id: str | None = None,
+) -> int | None:
+    """Incremental IVF-PQ maintenance (IndexIVFPQ.add_with_ids
+    semantics): assign ONLY the new vectors to the index's FROZEN
+    coarse quantizer, encode their residuals with the FROZEN
+    codebooks — nothing is retrained, matching FAISS's add() contract
+    — and land the packed codes in a fresh `commit=` partition;
+    manifest rewrite LAST is the commit point (see _commit). O(new
+    rows), no index rewrite. `batch_id` gives streaming callers the
+    same replay idempotency as every append here (recorded atomically
+    in the manifest; <= the app's applied id -> skip, None)."""
+    return _commit(
+        spark, path, PQ_INDEX_SUBDIRS,
+        partial(_pq_append, spark, path, new_vectors),
+        batch_id=batch_id, app_id=app_id,
     )
 
 
@@ -3766,49 +3689,30 @@ def upsert_pq_index(
     frozen quantizer + codebooks and land with the tombstone under one
     manifest swap. The codes probe and the vectors sidecar rerank both
     apply the horizon-scoped exclusion, so exactly the live encoding
-    of each id is served. Returns the new commit id. `batch_id`: same
-    streaming replay contract as upsert_ivf_index — checked BEFORE the
+    of each id is served. Returns the new commit id. `batch_id`: the
+    streaming replay contract of _commit — checked BEFORE the
     tombstone write (None when already applied)."""
-    ver, rows, applied_map = _manifest_snapshot(spark, path)
-    wm = _applied_watermark(applied_map, app_id)
-    if batch_id is not None and wm is not None and batch_id <= wm:
-        return None
-    # claim once for the whole composed write (tombstones included in
-    # the staged layout so an OCC renumber moves them too) and hand
-    # the claim to append_pq_index, which commits both atomically
-    staged = PQ_INDEX_SUBDIRS + [("tombstones", None)]
-    nxt = _claim_commit_id(spark, path, rows, staged, batch_id=batch_id, app_id=app_id)
-    _write_scoped_tombstones(new_vectors, path, "vec_id", nxt)
-    return append_pq_index(
-        spark, path, new_vectors, batch_id=batch_id,
-        app_id=app_id,
-        _pre=(ver, rows, nxt, staged, applied_map),
+    return _commit(
+        spark, path, PQ_INDEX_SUBDIRS + [("tombstones", None)],
+        partial(_pq_append, spark, path, new_vectors), batch_id=batch_id,
+        app_id=app_id, scoped=(new_vectors, "vec_id"),
     )
 
 
-class PQIndexHandle:
-    """An OPENED stored IVF-PQ index: meta, the committed-commit list,
-    the (tiny) centroid/codebook tables, and the codes scan resolved
-    once at open time — the serving twin of GraphIndexHandle. Probes
-    through a handle skip the per-call meta/manifest/model reads; the
-    handle pins the manifest snapshot read at open (reopen to see
-    later appends). `as_of` pins an older snapshot (time travel —
-    sound here because the coarse quantizer and codebooks are frozen
-    at build time, so every historical commit was encoded against the
-    same model the handle reads)."""
+class PQIndexHandle(IvfIndexHandle):
+    """An OPENED stored IVF-PQ index: the shared coarse-routed handle
+    (meta row with the frozen m/ksub, centroid table, committed codes
+    `scan`, tombstones — see IvfIndexHandle) plus the frozen residual
+    codebooks `cb`. Probes through a handle skip the per-call
+    meta/manifest/model reads; `as_of` time travel is sound because
+    the coarse quantizer and codebooks are frozen at build time, so
+    every historical commit was encoded against the same model."""
+
+    kind = "pq"
 
     def __init__(self, spark, path: str, as_of: int | None = None):
-        self.path = path
-        meta = spark.read.parquet(f"{path}/meta").first()
-        self.m = int(meta.m)
-        self.commits = _snapshot_commits(spark, path, as_of)
-        self.cents = spark.read.parquet(f"{path}/centroids")
+        super().__init__(spark, path, as_of)
         self.cb = spark.read.parquet(f"{path}/codebooks")
-        self.codes = (
-            spark.read.parquet(f"{path}/codes")
-            .where(F.col("commit").isin(self.commits))
-        )
-        self.tombstones = _tombstones(spark, path, self.commits)
 
 
 def open_pq_index(
@@ -3849,13 +3753,13 @@ def ivfpq_stored(
     h = index if isinstance(index, PQIndexHandle) else PQIndexHandle(
         spark, index
     )
-    m, cents, cb = h.m, h.cents, h.cb
+    m, cents, cb = int(h.meta.m), h.cents, h.cb
     probes = _nearest_centroids(
         queries.select("query_id", F.col("embedding").alias("qe")),
         cents, "query_id", "qe", nprobe,
     ).select("query_id", "centroid_id")
     cand = (
-        h.codes
+        h.scan
         .join(F.broadcast(probes), "centroid_id")
         .where(F.col("vec_id") != F.col("query_id"))
     )
@@ -4689,24 +4593,16 @@ def write_graph_index(
             _upper_layer_edges(corpus, entries, lvl, layers, layer_mult, knn)
         )
     bucket = F.pmod(F.hash("node"), F.lit(n_buckets)).cast("int")
-    (
-        edges.withColumn("bucket", bucket)
-        .withColumn("commit", F.lit(0).cast("long"))
-        .repartition("bucket")
-        .write.partitionBy("commit", "bucket")
-        .mode("overwrite")
-        .parquet(f"{path}/edges")
+    _write_commit(
+        edges.withColumn("bucket", bucket), path, "edges", "bucket", 0,
+        build=True,
     )
     nodes = corpus.select(
         F.col("vec_id").alias("node"), F.col("embedding").alias("ce")
     )
-    (
-        nodes.withColumn("bucket", bucket)
-        .withColumn("commit", F.lit(0).cast("long"))
-        .repartition("bucket")
-        .write.partitionBy("commit", "bucket")
-        .mode("overwrite")
-        .parquet(f"{path}/nodes")
+    _write_commit(
+        nodes.withColumn("bucket", bucket), path, "nodes", "bucket", 0,
+        build=True,
     )
     # versioned meta at commit 0. max_deg = knn exactly: every layer's
     # edge set is a kNN-graph top-k, so no node's per-layer out-degree
@@ -4721,7 +4617,7 @@ def write_graph_index(
 def append_graph_index(
     spark, path: str, new_corpus: DataFrame, batch_id: int | None = None,
     app_id: str | None = None, _race_hook=None,
-) -> None:
+) -> int | None:
     """Incremental NSW insertion into a stored graph index: each new
     node links to its EXACT top-knn among the COMMITTED nodes
     (cosine_topk — the bounded new batch broadcasts into one scan of
@@ -4749,16 +4645,10 @@ def append_graph_index(
     appends shrink the fraction of the corpus the upper layers
     describe and layered recall decays toward the flat walk's number
     (test-pinned: recall after a 2x append stays >= flat + 0.15)."""
-    ver, rows, applied_map = _manifest_snapshot(spark, path)
-    wm = _applied_watermark(applied_map, app_id)
-    if batch_id is not None and wm is not None and batch_id <= wm:
-        return  # replayed micro-batch already committed (see ivf twin)
-    staged = GRAPH_INDEX_SUBDIRS + [("meta", None), ("tombstones", None)]
-    nxt = _claim_commit_id(spark, path, rows, staged, batch_id=batch_id, app_id=app_id)
-    _graph_insert_commit(
-        spark, path, rows, new_corpus, nxt, batch_id,
-        staged=staged, read_version=ver,
-        app_id=app_id, applied=applied_map, race_hook=_race_hook,
+    return _commit(
+        spark, path, GRAPH_INDEX_SUBDIRS + [("meta", None), ("tombstones", None)],
+        partial(_graph_insert, spark, path, new_corpus, None),
+        batch_id=batch_id, app_id=app_id, race_hook=_race_hook,
     )
 
 
@@ -4793,43 +4683,30 @@ def upsert_graph_index(
     the stale rows + nothing else; delete-wins composition is
     unchanged (a global tombstone's max horizon outranks any upsert).
 
-    Replay contract (streaming): identical to the ivf twin — the
+    Replay contract (streaming): _commit's — the
     applied batch id is checked BEFORE any write, and a crash before
     the manifest append replays into the same commit id with every
     subdir cleared first. Returns the new commit id (None when the
     batch was already applied)."""
-    ver, rows, applied_map = _manifest_snapshot(spark, path)
-    wm = _applied_watermark(applied_map, app_id)
-    if batch_id is not None and wm is not None and batch_id <= wm:
-        return None
-    staged = GRAPH_INDEX_SUBDIRS + [("meta", None), ("tombstones", None)]
-    nxt = _claim_commit_id(spark, path, rows, staged, batch_id=batch_id, app_id=app_id)
     new = new_vectors.select("vec_id", "embedding")
-    _write_scoped_tombstones(new, path, "vec_id", nxt)
-    return _graph_insert_commit(
-        spark, path, rows, new, nxt, batch_id,
-        link_exclude=new.select("vec_id"),
-        staged=staged, read_version=ver,
-        app_id=app_id, applied=applied_map,
+    return _commit(
+        spark, path, GRAPH_INDEX_SUBDIRS + [("meta", None), ("tombstones", None)],
+        partial(_graph_insert, spark, path, new, new.select("vec_id")),
+        batch_id=batch_id, app_id=app_id, scoped=(new, "vec_id"),
     )
 
 
-def _graph_insert_commit(
-    spark, path: str, rows: list, new_corpus: DataFrame, nxt: int,
-    batch_id: int | None, link_exclude: DataFrame | None = None,
-    staged: list | None = None, read_version: int | None = None,
-    app_id: str | None = None, applied: dict | None = None,
-    race_hook=None,
-) -> int | None:
-    """Shared NSW insertion core for append_graph_index /
-    upsert_graph_index: computes the new nodes' forward+reverse links
-    against the committed LIVE node set (superseded upsert rows
-    hidden — links must target each id's newest vector), writes
-    edges/nodes/meta under `commit=nxt`, and appends the manifest
-    LAST. `link_exclude` (upserts) removes the batch's own keys from
-    the link targets. The caller has already done the replay check
-    and cleared the uncommitted commit dir."""
-    commits = [c for c, _ in rows]
+def _graph_insert(
+    spark, path: str, new_corpus: DataFrame,
+    link_exclude: DataFrame | None, nxt: int, commits: list,
+) -> None:
+    """The NSW insertion stage (see _commit) shared by
+    append_graph_index / upsert_graph_index: computes the new nodes'
+    forward+reverse links against the snapshot's committed LIVE node
+    set (superseded upsert rows hidden — links must target each id's
+    newest vector) and writes edges/nodes/meta under `commit=nxt`.
+    `link_exclude` (upserts) removes the batch's own keys from the
+    link targets."""
     meta = _read_graph_meta(spark, path, commits)
     versioned = "commit" in meta.__fields__
     n_buckets = int(meta.n_buckets)
@@ -4887,24 +4764,13 @@ def _graph_insert_commit(
             ).withColumn("layer", F.lit(lvl))
         )
     bucket = F.pmod(F.hash("node"), F.lit(n_buckets)).cast("int")
-    (
-        edges_new.withColumn("bucket", bucket)
-        .withColumn("commit", F.lit(nxt).cast("long"))
-        .repartition("bucket")
-        .write.partitionBy("commit", "bucket")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(f"{path}/edges")
+    _write_commit(
+        edges_new.withColumn("bucket", bucket), path, "edges", "bucket", nxt
     )
-    (
+    _write_commit(
         new.select(F.col("vec_id").alias("node"), F.col("embedding").alias("ce"))
-        .withColumn("bucket", bucket)
-        .withColumn("commit", F.lit(nxt).cast("long"))
-        .repartition("bucket")
-        .write.partitionBy("commit", "bucket")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(f"{path}/nodes")
+        .withColumn("bucket", bucket),
+        path, "nodes", "bucket", nxt,
     )
     if versioned and _meta_field(meta, "max_deg") is not None:
         # maintain the persisted state-guard degree bound where the new
@@ -4923,15 +4789,6 @@ def _graph_insert_commit(
             n_entries=int(_meta_field(meta, "n_entries", len(entries))),
             max_deg=new_bound,
         )
-    if race_hook is not None:
-        # deterministic concurrency fault-injection seam (see
-        # append_ivf_index): after claim+staging, before the CAS
-        race_hook()
-    return _append_manifest(
-        spark, path, rows, nxt, batch_id=batch_id, subdirs=staged,
-        read_version=read_version if read_version is not None else 0,
-        app_id=app_id, applied=applied,
-    )
 
 
 def compact_graph_index(spark, path: str) -> int:
@@ -5960,9 +5817,6 @@ def reduced_rerank_topk(
 # candidate), the standard SQ-ADC trade: far better recall than PQ at
 # 4x (not 16x+) compression.
 # ---------------------------------------------------------------------------
-SQ_INDEX_SUBDIRS = [("codes", "centroid_id")]
-
-
 def sq8_bounds(
     corpus: DataFrame, trim: float = 0.001
 ) -> tuple[list[float], list[float]]:
@@ -6035,6 +5889,21 @@ def _sq8_dequant(codes_col, lo: list[float], hi: list[float]):
     return F.transform(codes_col, dec)
 
 
+def _sq8_score(qe_col, codes_col, meta):
+    """Asymmetric SQ8 score: exact cosine of the full-precision query
+    against the dequantized candidate, 6dp. Zero-norm guard: a
+    candidate whose every dimension clamps at the trained lo can
+    dequantize to the all-zero vector (e.g. an upsert far outside the
+    frozen bounds); a zero vector has no direction, so it scores 0
+    instead of dividing by zero — the oracle carries the same CASE
+    (see _sql_simsearch_sq8)."""
+    xhat = _sq8_dequant(codes_col, meta.lo, meta.hi)
+    nx = F.aggregate(xhat, F.lit(0.0), lambda acc, v: acc + v * v)
+    return F.when(nx == 0, F.lit(0.0)).otherwise(
+        F.round(cosine(qe_col, xhat), 6)
+    )
+
+
 def write_sq_index(
     corpus: DataFrame, path: str, n_centroids: int = 8, iters: int = 1,
     centroids: DataFrame | None = None,
@@ -6054,81 +5923,22 @@ def write_sq_index(
     `centroids`/`bounds` pin a precomputed model instead of training
     from this corpus (tests rebuild an index equivalent to
     build+append with them, mirroring write_ivf_index)."""
-    spark = corpus.sparkSession
-    cents = (
-        centroids if centroids is not None
-        else ivf_centroids(corpus, n_centroids, iters)
-    )
     lo, hi = bounds if bounds is not None else sq8_bounds(corpus)
-    cells = _nearest_centroids(
-        corpus.select("vec_id", F.col("embedding").alias("ce")),
-        cents, "vec_id", "ce", 1,
-    )
-    (
-        cells.select(
-            "vec_id", "centroid_id",
-            _sq8_codes(F.col("ce"), lo, hi).alias("codes"),
-        )
-        .withColumn("commit", F.lit(0).cast("long"))
-        .repartition("centroid_id")
-        .write.partitionBy("commit", "centroid_id")
-        .mode("overwrite")
-        .parquet(f"{path}/codes")
-    )
-    cents.select(
-        "centroid_id", F.col("cvec").cast("array<double>").alias("cvec")
-    ).repartition(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [(lo, hi, len(lo))], "lo array<double>, hi array<double>, dim int"
-    ).repartition(1).write.mode("overwrite").parquet(f"{path}/meta")
-    _write_index_manifest(spark, path, [0])
-
-
-def _sq_encode_cells(spark, path: str, new_vectors: DataFrame) -> DataFrame:
-    """Assign new vectors to the FROZEN coarse quantizer and encode
-    them with the FROZEN bounds — the shared append/upsert payload."""
-    cents = spark.read.parquet(f"{path}/centroids")
-    meta = spark.read.parquet(f"{path}/meta").first()
-    lo, hi = list(meta.lo), list(meta.hi)
-    cells = _nearest_centroids(
-        new_vectors.select("vec_id", F.col("embedding").alias("ce")),
-        cents, "vec_id", "ce", 1,
-    )
-    return cells.select(
-        "vec_id", "centroid_id", _sq8_codes(F.col("ce"), lo, hi).alias("codes")
+    _write_coarse_index(
+        ANN_FAMILIES["sq"], corpus, path, n_centroids, iters, centroids,
+        Row(lo=lo, hi=hi, dim=len(lo)),
     )
 
 
 def append_sq_index(
     spark, path: str, new_vectors: DataFrame, batch_id: int | None = None,
     app_id: str | None = None,
-) -> None:
+) -> int | None:
     """Incremental IVF-SQ8 maintenance: frozen quantizer + frozen
     bounds, new commit partition, manifest last — O(new rows), same
-    replay contract as append_ivf_index (batch_id recorded in the
-    manifest row, <= max applied id skips)."""
-    ver, rows, applied_map = _manifest_snapshot(spark, path)
-    wm = _applied_watermark(applied_map, app_id)
-    if batch_id is not None and wm is not None and batch_id <= wm:
-        return
-    nxt = _claim_commit_id(
-        spark, path, rows, SQ_INDEX_SUBDIRS, batch_id=batch_id,
-        app_id=app_id,
-    )
-    (
-        _sq_encode_cells(spark, path, new_vectors)
-        .withColumn("commit", F.lit(nxt).cast("long"))
-        .repartition("centroid_id")
-        .write.partitionBy("commit", "centroid_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(f"{path}/codes")
-    )
-    _append_manifest(
-        spark, path, rows, nxt, batch_id=batch_id,
-        subdirs=SQ_INDEX_SUBDIRS,
-        read_version=ver if ver is not None else 0,
-        app_id=app_id, applied=applied_map,
+    replay contract as every append here (see _commit)."""
+    return _coarse_commit(
+        ANN_FAMILIES["sq"], spark, path, new_vectors, batch_id, app_id
     )
 
 
@@ -6138,48 +5948,20 @@ def upsert_sq_index(
 ) -> int | None:
     """UPSERT into a stored IVF-SQ8 index: one atomic commit carrying
     a horizon-scoped tombstone for the upserted vec_ids plus their
-    re-encoded replacement codes — identical semantics and crash
-    contract to upsert_ivf_index (which see)."""
-    ver, rows, applied_map = _manifest_snapshot(spark, path)
-    wm = _applied_watermark(applied_map, app_id)
-    if batch_id is not None and wm is not None and batch_id <= wm:
-        return None
-    staged = SQ_INDEX_SUBDIRS + [("tombstones", None)]
-    nxt = _claim_commit_id(spark, path, rows, staged, batch_id=batch_id, app_id=app_id)
-    _write_scoped_tombstones(new_vectors, path, "vec_id", nxt)
-    (
-        _sq_encode_cells(spark, path, new_vectors)
-        .withColumn("commit", F.lit(nxt).cast("long"))
-        .repartition("centroid_id")
-        .write.partitionBy("commit", "centroid_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(f"{path}/codes")
-    )
-    return _append_manifest(
-        spark, path, rows, nxt, batch_id=batch_id,
-        subdirs=staged, read_version=ver if ver is not None else 0,
-        app_id=app_id, applied=applied_map,
+    re-encoded replacement codes — the semantics of upsert_ivf_index,
+    the crash and replay contract of _commit."""
+    return _coarse_commit(
+        ANN_FAMILIES["sq"], spark, path, new_vectors, batch_id, app_id,
+        upsert=True,
     )
 
 
-class SqIndexHandle:
-    """An OPENED stored IVF-SQ8 index: bounds + centroid table + the
-    committed codes scan resolved once at open (serving twin of the
-    other *IndexHandle classes; manifest snapshot pinned at open;
-    `as_of` time travel — sound because both the coarse quantizer and
-    the scalar bounds are frozen at build time)."""
+class SqIndexHandle(IvfIndexHandle):
+    """An OPENED stored IVF-SQ8 index (the shared coarse-routed handle,
+    see IvfIndexHandle): `meta` holds the frozen per-dim bounds
+    (lo, hi, dim), `scan` the committed codes."""
 
-    def __init__(self, spark, path: str, as_of: int | None = None):
-        self.path = path
-        self.cents = spark.read.parquet(f"{path}/centroids")
-        meta = spark.read.parquet(f"{path}/meta").first()
-        self.lo, self.hi = list(meta.lo), list(meta.hi)
-        self.commits = _snapshot_commits(spark, path, as_of)
-        self.codes = spark.read.parquet(f"{path}/codes").where(
-            F.col("commit").isin(self.commits)
-        )
-        self.tombstones = _tombstones(spark, path, self.commits)
+    kind = "sq"
 
 
 def open_sq_index(
@@ -6206,46 +5988,7 @@ def sq_ann_stored(
     h = index if isinstance(index, SqIndexHandle) else SqIndexHandle(
         spark, index
     )
-    probes = _nearest_centroids(
-        queries.select("query_id", F.col("embedding").alias("qe")),
-        h.cents, "query_id", "qe", nprobe,
-    )
-    cand = h.codes.join(probes, "centroid_id").where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    if allowed is not None:
-        cand = cand.join(
-            allowed.select("vec_id").distinct(), "vec_id", "semi"
-        )
-    cand = _anti_tombstones(cand, h.tombstones)
-    # zero-norm guard: a candidate whose every dimension clamps at the
-    # trained lo can dequantize to the all-zero vector (e.g. an upsert
-    # far outside the frozen bounds); a zero vector has no direction,
-    # so score it 0 instead of dividing by zero — the oracle carries
-    # the same CASE (see _sql_simsearch_sq8)
-    xhat = _sq8_dequant(F.col("codes"), h.lo, h.hi)
-    nx = F.aggregate(xhat, F.lit(0.0), lambda acc, v: acc + v * v)
-    scored = (
-        cand.repartition(F.col("query_id"), F.col("vec_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.when(nx == 0, F.lit(0.0))
-            .otherwise(F.round(cosine(F.col("qe"), xhat), 6))
-            .alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select(
-            "query_id", "vec_id", "cos", F.col("rk").cast("int").alias("rk")
-        )
-        .orderBy("query_id", "rk")
-    )
+    return _coarse_probe(h, queries, k, nprobe, allowed)
 
 
 def index_txns(spark, path: str) -> DataFrame:
@@ -6373,7 +6116,7 @@ def reindex_ivf(
     unmodified throughout — cutover is the caller swapping paths, and
     the old index remains probeable until then."""
     h = IvfIndexHandle(spark, src_path)
-    live = _anti_tombstones(h.cells, h.tombstones)
+    live = _anti_tombstones(h.scan, h.tombstones)
     write_ivf_index(
         live.select("vec_id", F.col("ce").alias("embedding")),
         dst_path, n_centroids=n_centroids, iters=iters,
@@ -6453,13 +6196,13 @@ def reindex_sq8(
     a transform() over the pruned int-codes scan, nothing corpus-sized
     reaches the driver; src stays live throughout."""
     h = SqIndexHandle(spark, src_path)
-    live = _anti_tombstones(h.codes, h.tombstones)
+    live = _anti_tombstones(h.scan, h.tombstones)
     # keep the dequantized values as DOUBLES: _sq8_dequant's exact
     # arithmetic is what the oracle mirrors — a float round-trip here
     # would retrain on different numbers than the SQL chain
     recon = live.select(
         "vec_id",
-        _sq8_dequant(F.col("codes"), h.lo, h.hi).alias("embedding"),
+        _sq8_dequant(F.col("codes"), h.meta.lo, h.meta.hi).alias("embedding"),
     )
     write_sq_index(
         recon, dst_path, n_centroids=n_centroids, iters=iters,
@@ -6536,8 +6279,8 @@ def sq8_quantization_error(spark, path: str, corpus: DataFrame) -> DataFrame:
     corpus + a scalar aggregation — map-side combined, nothing
     corpus-sized reaches the driver."""
     h = SqIndexHandle(spark, path)
-    live = _anti_tombstones(h.codes, h.tombstones)
-    xhat = _sq8_dequant(F.col("codes"), h.lo, h.hi)
+    live = _anti_tombstones(h.scan, h.tombstones)
+    xhat = _sq8_dequant(F.col("codes"), h.meta.lo, h.meta.hi)
     # per-row 6dp discretization BEFORE the aggregates: the mean then
     # sums identical doubles on both engines and the max is exact
     err = F.floor(
@@ -6570,7 +6313,7 @@ def pq_reconstruction_error(spark, path: str, corpus: DataFrame) -> DataFrame:
     join against the corpus + a scalar aggregation — map-side
     combined, nothing corpus-sized on the driver."""
     h = PQIndexHandle(spark, path)
-    live = _anti_tombstones(h.codes, h.tombstones)
+    live = _anti_tombstones(h.scan, h.tombstones)
     ex = live.select(
         "vec_id", "centroid_id", F.posexplode("code").alias("sub", "cid")
     )
@@ -6619,7 +6362,6 @@ def pq_reconstruction_error(spark, path: str, corpus: DataFrame) -> DataFrame:
 # (append/upsert/delete/compact/vacuum/stats/as_of/clone/streaming)
 # rides the generic machinery.
 # ---------------------------------------------------------------------------
-BQ_INDEX_SUBDIRS = [("codes", "centroid_id")]
 _BQ_WORD_BITS = 32
 
 
@@ -6707,78 +6449,22 @@ def write_bq_index(
     RAW vector), `meta/` (the per-dim thresholds — the frozen
     binarizer), `manifest/` LAST. `centroids`/`thresholds` pin a
     precomputed model (tests rebuild build+append equivalents)."""
-    spark = corpus.sparkSession
-    cents = (
-        centroids if centroids is not None
-        else ivf_centroids(corpus, n_centroids, iters)
-    )
     thr = thresholds if thresholds is not None else bq_thresholds(corpus)
-    cells = _nearest_centroids(
-        corpus.select("vec_id", F.col("embedding").alias("ce")),
-        cents, "vec_id", "ce", 1,
-    )
-    (
-        cells.select(
-            "vec_id", "centroid_id", _bq_words(F.col("ce"), thr).alias("words")
-        )
-        .withColumn("commit", F.lit(0).cast("long"))
-        .repartition("centroid_id")
-        .write.partitionBy("commit", "centroid_id")
-        .mode("overwrite")
-        .parquet(f"{path}/codes")
-    )
-    cents.select(
-        "centroid_id", F.col("cvec").cast("array<double>").alias("cvec")
-    ).repartition(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [(thr, len(thr))], "thr array<double>, dim int"
-    ).repartition(1).write.mode("overwrite").parquet(f"{path}/meta")
-    _write_index_manifest(spark, path, [0])
-
-
-def _bq_encode_cells(spark, path: str, new_vectors: DataFrame) -> DataFrame:
-    """Assign new vectors to the FROZEN coarse quantizer and binarize
-    with the FROZEN thresholds — the shared append/upsert payload."""
-    cents = spark.read.parquet(f"{path}/centroids")
-    thr = list(spark.read.parquet(f"{path}/meta").first().thr)
-    cells = _nearest_centroids(
-        new_vectors.select("vec_id", F.col("embedding").alias("ce")),
-        cents, "vec_id", "ce", 1,
-    )
-    return cells.select(
-        "vec_id", "centroid_id", _bq_words(F.col("ce"), thr).alias("words")
+    _write_coarse_index(
+        ANN_FAMILIES["bq"], corpus, path, n_centroids, iters, centroids,
+        Row(thr=thr, dim=len(thr)),
     )
 
 
 def append_bq_index(
     spark, path: str, new_vectors: DataFrame, batch_id: int | None = None,
     app_id: str | None = None,
-) -> None:
+) -> int | None:
     """Incremental IVF-BQ maintenance: frozen quantizer + frozen
     thresholds, new commit partition, manifest last — same replay
-    contract as every append here."""
-    ver, rows, applied_map = _manifest_snapshot(spark, path)
-    wm = _applied_watermark(applied_map, app_id)
-    if batch_id is not None and wm is not None and batch_id <= wm:
-        return
-    nxt = _claim_commit_id(
-        spark, path, rows, BQ_INDEX_SUBDIRS, batch_id=batch_id,
-        app_id=app_id,
-    )
-    (
-        _bq_encode_cells(spark, path, new_vectors)
-        .withColumn("commit", F.lit(nxt).cast("long"))
-        .repartition("centroid_id")
-        .write.partitionBy("commit", "centroid_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(f"{path}/codes")
-    )
-    _append_manifest(
-        spark, path, rows, nxt, batch_id=batch_id,
-        subdirs=BQ_INDEX_SUBDIRS,
-        read_version=ver if ver is not None else 0,
-        app_id=app_id, applied=applied_map,
+    contract as every append here (see _commit)."""
+    return _coarse_commit(
+        ANN_FAMILIES["bq"], spark, path, new_vectors, batch_id, app_id
     )
 
 
@@ -6787,48 +6473,20 @@ def upsert_bq_index(
     app_id: str | None = None,
 ) -> int | None:
     """UPSERT into a stored IVF-BQ index: horizon-scoped tombstone +
-    re-binarized replacement codes in one atomic commit (identical
-    semantics and crash contract to upsert_ivf_index)."""
-    ver, rows, applied_map = _manifest_snapshot(spark, path)
-    wm = _applied_watermark(applied_map, app_id)
-    if batch_id is not None and wm is not None and batch_id <= wm:
-        return None
-    staged = BQ_INDEX_SUBDIRS + [("tombstones", None)]
-    nxt = _claim_commit_id(spark, path, rows, staged, batch_id=batch_id, app_id=app_id)
-    _write_scoped_tombstones(new_vectors, path, "vec_id", nxt)
-    (
-        _bq_encode_cells(spark, path, new_vectors)
-        .withColumn("commit", F.lit(nxt).cast("long"))
-        .repartition("centroid_id")
-        .write.partitionBy("commit", "centroid_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(f"{path}/codes")
-    )
-    return _append_manifest(
-        spark, path, rows, nxt, batch_id=batch_id,
-        subdirs=staged, read_version=ver if ver is not None else 0,
-        app_id=app_id, applied=applied_map,
+    re-binarized replacement codes in one atomic commit (the semantics
+    of upsert_ivf_index, the crash and replay contract of _commit)."""
+    return _coarse_commit(
+        ANN_FAMILIES["bq"], spark, path, new_vectors, batch_id, app_id,
+        upsert=True,
     )
 
 
-class BqIndexHandle:
-    """An OPENED stored IVF-BQ index: thresholds + centroid table +
-    the committed codes scan resolved once at open (manifest snapshot
-    pinned; `as_of` time travel — sound, both model pieces are frozen
-    at build time)."""
+class BqIndexHandle(IvfIndexHandle):
+    """An OPENED stored IVF-BQ index (the shared coarse-routed handle,
+    see IvfIndexHandle): `meta` holds the frozen thresholds (thr, dim),
+    `scan` the committed packed words."""
 
-    def __init__(self, spark, path: str, as_of: int | None = None):
-        self.path = path
-        self.cents = spark.read.parquet(f"{path}/centroids")
-        meta = spark.read.parquet(f"{path}/meta").first()
-        self.thr = list(meta.thr)
-        self.dim = int(meta.dim)
-        self.commits = _snapshot_commits(spark, path, as_of)
-        self.codes = spark.read.parquet(f"{path}/codes").where(
-            F.col("commit").isin(self.commits)
-        )
-        self.tombstones = _tombstones(spark, path, self.commits)
+    kind = "bq"
 
 
 def open_bq_index(
@@ -6853,42 +6511,13 @@ def bq_ann_stored(
     h = index if isinstance(index, BqIndexHandle) else BqIndexHandle(
         spark, index
     )
-    probes = _nearest_centroids(
-        queries.select("query_id", F.col("embedding").alias("qe")),
-        h.cents, "query_id", "qe", nprobe,
-    )
-    cand = h.codes.join(probes, "centroid_id").where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    if allowed is not None:
-        cand = cand.join(
-            allowed.select("vec_id").distinct(), "vec_id", "semi"
-        )
-    cand = _anti_tombstones(cand, h.tombstones)
-    scored = cand.repartition(F.col("query_id"), F.col("vec_id")).select(
-        "query_id", "vec_id",
-        F.round(_bq_score(F.col("qe"), F.col("words"), h.dim), 6).alias(
-            "score"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "vec_id", "score", "rk")
-        .orderBy("query_id", "rk")
-    )
+    return _coarse_probe(h, queries, k, nprobe, allowed)
 
 
 def clone_bq_index(spark, src: str, dst: str, as_of: int | None = None):
     """Deep-clone a stored IVF-BQ index (coarse quantizer + threshold
     meta copied verbatim; the clone re-binarizes nothing)."""
-    clone_index(
-        spark, src, dst, BQ_INDEX_SUBDIRS, aux=("centroids", "meta"),
-        as_of=as_of,
-    )
+    _clone_family("bq", spark, src, dst, as_of)
 
 
 def bq_code_balance(spark, path: str) -> DataFrame:
@@ -6910,11 +6539,11 @@ def bq_code_balance(spark, path: str) -> DataFrame:
     same fan-out the oracle's unnest pays — then ONE (pos)-keyed
     map-side-combined aggregation; dim scalars reach the driver."""
     h = BqIndexHandle(spark, path)
-    live = _anti_tombstones(h.codes, h.tombstones)
+    live = _anti_tombstones(h.scan, h.tombstones)
     pow2 = F.array(*[F.lit(float(1 << b)) for b in range(_BQ_WORD_BITS)])
     ex = live.select(
         "words",
-        F.explode(F.sequence(F.lit(0), F.lit(h.dim - 1))).alias("pos"),
+        F.explode(F.sequence(F.lit(0), F.lit(h.meta.dim - 1))).alias("pos"),
     )
     bit = (
         F.floor(
@@ -7002,19 +6631,11 @@ def reindex_bq(
     the measure->reindex loop for the fifth family. src stays live
     throughout; cutover is the caller swapping paths."""
     h = BqIndexHandle(spark, src_path)
-    live_ids = _anti_tombstones(h.codes, h.tombstones).select("vec_id")
+    live_ids = _anti_tombstones(h.scan, h.tombstones).select("vec_id")
     live = corpus.select("vec_id", "embedding").join(
         live_ids.distinct(), "vec_id", "semi"
     )
     write_bq_index(live, dst_path, n_centroids=n_centroids, iters=iters)
-
-
-def clone_lsh_index(spark, src: str, dst: str, as_of: int | None = None):
-    """Deep-clone a stored sign-LSH table. The hash family is
-    deterministic (seeded hyperplanes — no stored model), so the clone
-    is the pure committed-snapshot fold; completes the clone matrix
-    across every stored family."""
-    clone_index(spark, src, dst, LSH_INDEX_SUBDIRS, as_of=as_of)
 
 
 def clone_minhash_index(spark, src: str, dst: str, as_of: int | None = None):
@@ -7022,3 +6643,55 @@ def clone_minhash_index(spark, src: str, dst: str, as_of: int | None = None):
     bucket inverted index; the hash family is seeded constants — no
     model dirs to copy)."""
     clone_index(spark, src, dst, MINHASH_INDEX_SUBDIRS, as_of=as_of)
+
+
+class IndexFamily(NamedTuple):
+    """One row of the stored-ANN family table (ANN_FAMILIES): the
+    commit-partition layout and writers every row has, plus — for the
+    coarse-routed rows — what the shared build/append/upsert/handle/
+    probe/clone need to know about the payload."""
+
+    subdirs: list  # the *_INDEX_SUBDIRS layout; subdirs[0] holds the payload
+    append: Callable
+    upsert: Callable
+    model: tuple = ()  # frozen-model dirs, read by handles, copied by clone
+    col: str | None = None  # payload column of subdirs[0]
+    encode: Callable | None = None  # (raw vector col, meta row) -> payload
+    score: Callable | None = None  # (query vec col, payload col, meta row)
+    out: str = "cos"  # the probe's score column
+    meta_schema: str | None = None  # the frozen meta row's schema
+
+
+# index_kind -> family: the coarse-routed rows (ivf/sq/bq) drive the
+# shared implementation above; pq shares handle + commit path; every
+# row gives stream_ann_index its writers and compaction layout
+ANN_FAMILIES = {
+    "ivf": IndexFamily(
+        IVF_INDEX_SUBDIRS, append_ivf_index, upsert_ivf_index,
+        ("centroids",), "ce",
+        encode=lambda ce, meta: ce,
+        score=lambda qe, ce, meta: F.round(cosine(qe, ce), 6),
+    ),
+    "sq": IndexFamily(
+        SQ_INDEX_SUBDIRS, append_sq_index, upsert_sq_index,
+        ("centroids", "meta"), "codes",
+        encode=lambda ce, meta: _sq8_codes(ce, meta.lo, meta.hi),
+        score=_sq8_score,
+        meta_schema="lo array<double>, hi array<double>, dim int",
+    ),
+    "bq": IndexFamily(
+        BQ_INDEX_SUBDIRS, append_bq_index, upsert_bq_index,
+        ("centroids", "meta"), "words",
+        encode=lambda ce, meta: _bq_words(ce, meta.thr),
+        score=lambda qe, w, meta: F.round(_bq_score(qe, w, meta.dim), 6),
+        out="score",
+        meta_schema="thr array<double>, dim int",
+    ),
+    "pq": IndexFamily(
+        PQ_INDEX_SUBDIRS, append_pq_index, upsert_pq_index,
+        ("centroids", "codebooks", "meta"), "code",
+    ),
+    "graph": IndexFamily(
+        GRAPH_INDEX_SUBDIRS, append_graph_index, upsert_graph_index
+    ),
+}

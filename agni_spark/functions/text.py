@@ -894,62 +894,45 @@ def _append_postings(
     words.unpersist()
 
 
+def _postings_stage(spark, path: str, new_docs: DataFrame):
+    """The text family's stage for simsearch._commit: posting lists +
+    doc lengths of ONLY the new documents under `commit=nxt`. A
+    positional index stays positional: the layer's existence IS the
+    flag (build-time choice; appending non-positionally to a
+    positional index would silently break phrase queries over the
+    appended docs)."""
+    from agni_spark.sources.layout import _fs_exists
+
+    n_buckets = spark.read.parquet(f"{path}/meta").collect()[0].n_buckets
+    return lambda nxt, _commits: _append_postings(
+        new_docs, path, n_buckets, commit=nxt, mode="append",
+        positions=_fs_exists(spark, f"{path}/positions"),
+    )
+
+
 def append_text_index(
     spark, path: str, new_docs: DataFrame, batch_id: int | None = None,
     app_id: str | None = None, _race_hook=None,
-) -> None:
+) -> int | None:
     """Incremental index maintenance: posting lists + doc lengths of
     ONLY the new documents land in a fresh commit partition; the
     manifest rewrite LAST is the commit point. Nothing existing is
     read or rewritten — append cost is O(new docs), not O(index).
     `_race_hook` is the deterministic concurrency fault-injection
-    seam (see simsearch.append_ivf_index): runs after claim+staging,
-    before the manifest CAS.
+    seam (see simsearch._commit): runs after claim+staging, before
+    the manifest CAS. Returns the commit id.
 
-    `batch_id` (streaming callers — stream_text_index): the same
-    replay contract as simsearch.append_ivf_index — the micro-batch id
-    is recorded in the manifest atomically with the commit, and a
-    replay whose previous attempt already reached the manifest is
-    skipped (foreachBatch ids are monotone), so a crash on either side
-    of the manifest write stays exactly-once."""
-    from agni_spark.functions.simsearch import (
-        TEXT_INDEX_SUBDIRS,
-        _append_manifest,
-        _applied_watermark,
-        _claim_commit_id,
-        _manifest_snapshot,
-    )
+    `batch_id` (streaming callers — stream_text_index): the replay
+    contract of simsearch._commit — the micro-batch id is recorded in
+    the manifest atomically with the commit, and a replay whose
+    previous attempt already reached the manifest is skipped
+    (foreachBatch ids are monotone; returns None), so a crash on
+    either side of the manifest write stays exactly-once."""
+    from agni_spark.functions.simsearch import TEXT_INDEX_SUBDIRS, _commit
 
-    n_buckets = spark.read.parquet(f"{path}/meta").collect()[0].n_buckets
-    ver, rows, applied_map = _manifest_snapshot(spark, path)
-    wm = _applied_watermark(applied_map, app_id)
-    if batch_id is not None and wm is not None and batch_id <= wm:
-        return  # replayed micro-batch already committed (see ivf twin)
-    # the claim is exclusive, so a crashed compact's uncommitted copy
-    # under the id is cleared inside it (shared guard, see simsearch)
-    nxt = _claim_commit_id(
-        spark, path, rows, TEXT_INDEX_SUBDIRS, batch_id=batch_id,
-        app_id=app_id,
-    )
-    # a positional index stays positional: the layer's existence IS the
-    # flag (build-time choice; appending non-positionally to a
-    # positional index would silently break phrase queries over the
-    # appended docs)
-    from agni_spark.sources.layout import _hfs
-
-    fs, P = _hfs(spark, f"{path}/positions")
-    has_pos = fs.exists(P(f"{path}/positions"))
-    _append_postings(
-        new_docs, path, n_buckets, commit=nxt, mode="append",
-        positions=has_pos,
-    )
-    if _race_hook is not None:
-        _race_hook()
-    _append_manifest(
-        spark, path, rows, nxt, batch_id=batch_id,
-        subdirs=TEXT_INDEX_SUBDIRS,
-        read_version=ver if ver is not None else 0,
-        app_id=app_id, applied=applied_map,
+    return _commit(
+        spark, path, TEXT_INDEX_SUBDIRS, _postings_stage(spark, path, new_docs),
+        batch_id=batch_id, app_id=app_id, race_hook=_race_hook,
     )
 
 
@@ -972,41 +955,17 @@ def upsert_text_index(
     dynamic-partition-overwrites. Returns the new commit id.
 
     `batch_id` (streaming callers — stream_text_index(mode='upsert')):
-    the applied-id check runs BEFORE anything is written — a replay
-    whose previous attempt already reached the manifest would
-    otherwise re-write the scoped tombstone under a NEW commit id,
-    hiding the original attempt's replacement postings (the same
-    ordering argument as simsearch.upsert_ivf_index). Returns None
-    when the batch was already applied."""
-    from agni_spark.functions.simsearch import (
-        TEXT_INDEX_SUBDIRS,
-        _append_manifest,
-        _applied_watermark,
-        _claim_commit_id,
-        _manifest_snapshot,
-        _write_scoped_tombstones,
-    )
-    from agni_spark.sources.layout import _hfs
+    the applied-id check runs BEFORE anything is written (see
+    simsearch._commit) — a replay whose previous attempt already
+    reached the manifest would otherwise re-write the scoped tombstone
+    under a NEW commit id, hiding the original attempt's replacement
+    postings. Returns None when the batch was already applied."""
+    from agni_spark.functions.simsearch import TEXT_INDEX_SUBDIRS, _commit
 
-    n_buckets = spark.read.parquet(f"{path}/meta").collect()[0].n_buckets
-    ver, rows, applied_map = _manifest_snapshot(spark, path)
-    wm = _applied_watermark(applied_map, app_id)
-    if batch_id is not None and wm is not None and batch_id <= wm:
-        return None
-    staged = TEXT_INDEX_SUBDIRS + [("tombstones", None)]
-    nxt = _claim_commit_id(
-        spark, path, rows, staged, batch_id=batch_id, app_id=app_id
-    )
-    _write_scoped_tombstones(new_docs, path, "doc_id", nxt)
-    fs, P = _hfs(spark, f"{path}/positions")
-    _append_postings(
-        new_docs, path, n_buckets, commit=nxt, mode="append",
-        positions=fs.exists(P(f"{path}/positions")),
-    )
-    return _append_manifest(
-        spark, path, rows, nxt, batch_id=batch_id,
-        subdirs=staged, read_version=ver if ver is not None else 0,
-        app_id=app_id, applied=applied_map,
+    return _commit(
+        spark, path, TEXT_INDEX_SUBDIRS + [("tombstones", None)],
+        _postings_stage(spark, path, new_docs), batch_id=batch_id,
+        app_id=app_id, scoped=(new_docs, "doc_id"),
     )
 
 

@@ -189,18 +189,21 @@ def refresh_registry(
     schema = T.StructType(
         [*summary.schema, T.StructField("compaction_level", T.IntegerType(), False)]
     )
-    reg = spark.createDataFrame(pdf, schema).coalesce(1)
-    reg.write.mode("overwrite").parquet(os.path.join(path, "registry"))
-    # snapshot history: every commit ALSO lands as an immutable
-    # registry_history/version=N partition (after the live registry —
-    # the live write stays the commit point; history is the audit/
-    # time-travel surface). O(#blocks) rows per version, negligible
-    # next to the data.
-    _append_history(spark, path, reg)
+    _commit_registry(spark, path, pdf, schema)
 
 
-def _append_history(spark: SparkSession, path: str, reg: DataFrame) -> None:
-    """Land `reg` as the next registry_history/version=N partition."""
+def _commit_registry(spark: SparkSession, path: str, rows, schema) -> None:
+    """The one registry commit every writer goes through: `rows` (the
+    collected O(#blocks) registry — pandas or Row list, so nothing
+    re-reads a path this commit deletes) land in `registry_tmp`, swap
+    in as the live registry (the commit point), and then land as the
+    next immutable registry_history/version=N partition, the
+    audit/time-travel surface ResultsCache keys on."""
+    reg = spark.createDataFrame(rows, schema).coalesce(1)
+    live, tmp = os.path.join(path, "registry"), os.path.join(path, "registry_tmp")
+    reg.write.mode("overwrite").parquet(tmp)
+    _fs_delete(spark, live)
+    _fs_rename(spark, tmp, live)
     vs = registry_versions(spark, path)
     nxt = (max(vs) + 1) if vs else 0
     reg.withColumn("version", F.lit(nxt).cast("long")).write.partitionBy(
@@ -391,17 +394,9 @@ def drop_blocks_before(
     for bid in dropped:
         _fs_delete(spark, os.path.join(data_path, f"block_id={bid}"))
     if dropped:
-        reg = read_registry(spark, path).where(
-            F.col("block_id") >= cutoff_block_id
-        )
-        reg.cache().count()  # materialize before overwriting the source
-        reg.repartition(1).write.mode("overwrite").parquet(
-            os.path.join(path, "registry_tmp")
-        )
-        _fs_delete(spark, os.path.join(path, "registry"))
-        _fs_rename(
-            spark, os.path.join(path, "registry_tmp"), os.path.join(path, "registry")
-        )
+        reg = read_registry(spark, path)
+        kept = reg.where(F.col("block_id") >= cutoff_block_id).collect()
+        _commit_registry(spark, path, kept, reg.schema)
     return dropped
 
 
@@ -650,8 +645,8 @@ def rollback_store(spark: SparkSession, path: str, version: int) -> None:
     and is recorded as a NEW history version (audit trail keeps
     moving forward — time travel, not history rewriting)."""
     snap = read_registry(spark, path, version)
-    snap.cache().count()
-    want = [r.block_id for r in snap.select("block_id").collect()]
+    rows = snap.collect()
+    want = [r.block_id for r in rows]
     data_path = os.path.join(path, "data")
     missing = [
         b for b in want
@@ -662,14 +657,7 @@ def rollback_store(spark: SparkSession, path: str, version: int) -> None:
             f"cannot roll back to version {version}: data partitions "
             f"missing for blocks {missing}"
         )
-    snap.repartition(1).write.mode("overwrite").parquet(
-        os.path.join(path, "registry_tmp")
-    )
-    _fs_delete(spark, os.path.join(path, "registry"))
-    _fs_rename(
-        spark, os.path.join(path, "registry_tmp"), os.path.join(path, "registry")
-    )
-    _append_history(spark, path, snap)
+    _commit_registry(spark, path, rows, snap.schema)
 
 
 # ---------------------------------------------------------------------------

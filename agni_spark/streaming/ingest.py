@@ -71,9 +71,10 @@ def stream_ann_index(
 ):
     """CONTINUOUS ANN INDEX MAINTENANCE: a file-source stream of new
     embedding rows appends into an existing stored index per
-    micro-batch (foreachBatch -> append_ivf_index / append_pq_index /
-    append_graph_index, chosen by `index_kind` in {'ivf', 'pq',
-    'graph'}) — each batch's vectors are assigned to the index's
+    micro-batch (foreachBatch -> the append or upsert writer of the
+    simsearch.ANN_FAMILIES row named by `index_kind`, one of 'ivf',
+    'sq', 'bq', 'pq', 'graph'; any other kind raises ValueError) —
+    each batch's vectors are assigned to the index's
     FROZEN quantizer (for PQ, encoded with the frozen codebooks; for
     the graph, NSW-inserted with exact-kNN links to committed nodes,
     upper layers maintained) and land as their own manifest-committed
@@ -82,12 +83,12 @@ def stream_ann_index(
 
     Exactly-once across restarts, covering BOTH crash windows: (a) a
     crash BEFORE the manifest write — the replay recomputes the SAME
-    commit id (max(commits)+1 unchanged) and append_ivf_index's
-    dynamic partition overwrite replaces the crashed attempt's files
-    instead of doubling rows; (b) a crash AFTER the manifest write but
-    BEFORE the streaming checkpoint commit — here max(commits)+1 HAS
-    advanced, so the replay would land the same rows under a new
-    commit; append_ivf_index detects this because the micro-batch id
+    commit id (the claim records the micro-batch id and is adopted)
+    and the writer's dynamic partition overwrite replaces the crashed
+    attempt's files instead of doubling rows; (b) a crash AFTER the
+    manifest write but BEFORE the streaming checkpoint commit — here
+    max(commits)+1 HAS advanced, so the replay would land the same
+    rows under a new commit; simsearch._commit detects this because the micro-batch id
     is recorded IN the manifest (atomically with the commit) and skips
     any batch_id <= the max applied id (foreachBatch ids are
     monotone). Empty batches are skipped (no empty commit
@@ -130,62 +131,27 @@ def stream_ann_index(
     silently skipped until the next batch. Not supported for
     index_kind='graph' (graph compaction rebuilds upper layers and
     stays full-only)."""
-    from agni_spark.functions.simsearch import (
-        append_graph_index,
-        append_ivf_index,
-        append_pq_index,
-        append_bq_index,
-        append_sq_index,
-        upsert_bq_index,
-        upsert_graph_index,
-        upsert_ivf_index,
-        upsert_pq_index,
-        upsert_sq_index,
-    )
+    from agni_spark.functions.simsearch import ANN_FAMILIES, maintain_index
 
     if mode not in ("append", "upsert"):
         raise ValueError(f"unknown mode {mode!r}")
+    if index_kind not in ANN_FAMILIES:
+        raise ValueError(
+            f"unknown index_kind {index_kind!r} "
+            f"(expected one of {sorted(ANN_FAMILIES)})"
+        )
     if auto_compact is not None and index_kind == "graph":
         raise ValueError(
             "auto_compact is not supported for the graph family: graph "
             "compaction rebuilds upper layers and stays full-only "
             "(compact_graph_index)"
         )
-    if mode == "upsert":
-        append = {
-            "ivf": upsert_ivf_index,
-            "pq": upsert_pq_index,
-            "sq": upsert_sq_index,
-            "bq": upsert_bq_index,
-            "graph": upsert_graph_index,
-        }[index_kind]
-    else:
-        append = {
-            "ivf": append_ivf_index,
-            "pq": append_pq_index,
-            "graph": append_graph_index,
-            "sq": append_sq_index,
-            "bq": append_bq_index,
-        }[index_kind]
+    fam = ANN_FAMILIES[index_kind]
+    append = fam.upsert if mode == "upsert" else fam.append
     reader = spark.readStream.schema(EMBEDDINGS_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(src_dir)
-
-    from agni_spark.functions.simsearch import (
-        BQ_INDEX_SUBDIRS,
-        IVF_INDEX_SUBDIRS,
-        PQ_INDEX_SUBDIRS,
-        SQ_INDEX_SUBDIRS,
-        maintain_index,
-    )
-
-    subdirs = {
-        "ivf": IVF_INDEX_SUBDIRS,
-        "pq": PQ_INDEX_SUBDIRS,
-        "sq": SQ_INDEX_SUBDIRS,
-        "bq": BQ_INDEX_SUBDIRS,
-    }.get(index_kind)
 
     def _append(batch_df, batch_id):
         if batch_df.isEmpty():
@@ -197,7 +163,7 @@ def stream_ann_index(
         )
         if auto_compact is not None:
             maintain_index(
-                batch_df.sparkSession, index_path, subdirs,
+                batch_df.sparkSession, index_path, fam.subdirs,
                 max_commits=auto_compact,
             )
 

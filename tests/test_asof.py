@@ -204,26 +204,6 @@ def test_text_asof_scores_historical_corpus(spark):
                                         ["fast", "spark"], k=8)) != before
 
 
-def test_lsh_asof_hides_later_append(spark):
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = e.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    path = tempfile.mkdtemp(prefix="asof_lsh_")
-    simsearch.write_lsh_index(e.where(F.col("vec_id") % 2 == 0), path,
-                              n_planes=3)
-    before = _rows(simsearch.lsh_ann_stored(spark, path, q, k=8, n_planes=3))
-    simsearch.append_lsh_index(
-        spark, path,
-        e.where(F.col("vec_id") % 2 == 1).select("vec_id", "embedding"),
-        n_planes=3,
-    )
-    h0 = simsearch.open_lsh_index(spark, path, as_of=0)
-    assert _rows(
-        simsearch.lsh_ann_stored(spark, h0, q, k=8, n_planes=3)
-    ) == before
-
-
 def test_index_history_lists_manifest_truth(spark, emb):
     path = tempfile.mkdtemp(prefix="hist_")
     simsearch.write_ivf_index(emb, path, n_centroids=4)
@@ -333,9 +313,9 @@ def test_reindex_sq8_retrains_on_dequantized_live_rows(spark, emb, queries):
     simsearch.reindex_sq8(spark, src, dst, n_centroids=4)
 
     h = simsearch.open_sq_index(spark, src)
-    recon = simsearch._anti_tombstones(h.codes, h.tombstones).select(
+    recon = simsearch._anti_tombstones(h.scan, h.tombstones).select(
         "vec_id",
-        simsearch._sq8_dequant(F.col("codes"), h.lo, h.hi).alias("embedding"),
+        simsearch._sq8_dequant(F.col("codes"), h.meta.lo, h.meta.hi).alias("embedding"),
     )
     fresh = tempfile.mkdtemp(prefix="reidx_sq_fresh_")
     simsearch.write_sq_index(recon, fresh, n_centroids=4)

@@ -90,11 +90,18 @@ def test_retention_drops_old_blocks(spark, tmp_path_factory):
         "series_id long, ts_ms long, value double",
     )
     layout.write_blocks(samples, path, block_ms=BLOCK)
+    before = layout.registry_versions(spark, path)
     dropped = layout.drop_blocks_before(spark, path, cutoff_block_id=2)
     assert dropped == [0, 1]
     assert layout.read_samples(spark, path).agg(F.min("ts_ms")).first()[0] == 2000
     reg = layout.read_registry(spark, path)
     assert reg.agg(F.min("block_id")).first()[0] == 2
+    # the retention commit lands its own history version, so a
+    # version-keyed reader (ResultsCache) never sees pre-retention blocks
+    after = layout.registry_versions(spark, path)
+    assert after == before + [max(before) + 1]
+    snap = layout.read_registry(spark, path, version=max(after))
+    assert sorted(snap.collect()) == sorted(reg.collect())
 
 
 def test_delete_samples_rewrites_only_hit_blocks(spark, tmp_path):

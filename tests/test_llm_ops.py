@@ -404,25 +404,6 @@ def test_filtered_ann_pq_family(spark, tmp_path):
     ) == expect
 
 
-def test_stored_lsh_index_prunes_and_matches(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    path = str(tmp_path / "lsh")
-    simsearch.write_lsh_index(emb, path, n_planes=3)
-    out = simsearch.lsh_ann_stored(spark, path, queries, k=5, n_planes=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert any(
-        "FileScan" in l and "dynamicpruning" in l for l in plan.splitlines()
-    )
-    assert out.collect() == simsearch.lsh_ann(
-        emb, queries, k=5, n_planes=3
-    ).collect()
-
-
 def test_pq_codes_and_recall(spark):
     """PQ structure: every vector gets exactly m codes; finer
     subspaces monotonically improve recall (on random vectors — PQ's
@@ -508,16 +489,6 @@ def test_stored_index_append_equals_rebuild(spark, tmp_path):
     )
     rebuilt = simsearch.ivf_ann_stored(spark, path2, queries, k=5, nprobe=2)
     assert appended.collect() == rebuilt.collect()
-
-    # LSH: the hash family is deterministic, so append == rebuild
-    lpath = str(tmp_path / "lsh")
-    simsearch.write_lsh_index(first, lpath, n_planes=3)
-    simsearch.append_lsh_index(spark, lpath, second, n_planes=3)
-    lappended = simsearch.lsh_ann_stored(spark, lpath, queries, k=5, n_planes=3)
-    lpath2 = str(tmp_path / "lsh_rebuilt")
-    simsearch.write_lsh_index(emb, lpath2, n_planes=3)
-    lrebuilt = simsearch.lsh_ann_stored(spark, lpath2, queries, k=5, n_planes=3)
-    assert lappended.collect() == lrebuilt.collect()
 
 
 def test_connected_components_chain_and_star(spark):
@@ -3281,25 +3252,11 @@ def test_manifest_protocol_property(spark, tmp_path_factory, ops):
     assert simsearch._committed(spark, path) == committed
 
 
-def test_clone_lsh_and_minhash_probe_identical(spark, tmp_path):
-    """The clone matrix's last two families: LSH and MinHash clones
-    serve exactly the source snapshot (both models are deterministic
-    hash families, so the clone is the pure data fold)."""
-    from pyspark.sql import functions as F
-
+def test_clone_minhash_probe_identical(spark, tmp_path):
+    """The clone matrix's MinHash family: the clone serves exactly the
+    source snapshot (the model is a deterministic hash family, so the
+    clone is the pure data fold)."""
     from agni_spark.functions import dedup
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    lsrc, ldst = str(tmp_path / "lsrc"), str(tmp_path / "ldst")
-    simsearch.write_lsh_index(emb, lsrc)
-    simsearch.clone_lsh_index(spark, lsrc, ldst)
-    want = [tuple(r) for r in
-            simsearch.lsh_ann_stored(spark, lsrc, q, k=5).collect()]
-    assert want == [tuple(r) for r in
-                    simsearch.lsh_ann_stored(spark, ldst, q, k=5).collect()]
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     msrc, mdst = str(tmp_path / "msrc"), str(tmp_path / "mdst")

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import functools
 import tempfile
 
 import pytest
@@ -475,7 +476,7 @@ def test_sq8_upsert_hides_old_rows_and_survives_compact(spark, emb, queries):
     # each upserted id appears at most once across all commits served
     h = simsearch.open_sq_index(spark, path)
     from pyspark.sql import functions as SF
-    served = simsearch._anti_tombstones(h.codes, h.tombstones)
+    served = simsearch._anti_tombstones(h.scan, h.tombstones)
     dup = (
         served.groupBy("vec_id").count().where(SF.col("count") > 1).count()
     )
@@ -749,7 +750,7 @@ def test_bq_upsert_delete_asof_compact(spark, emb, queries):
     simsearch.upsert_bq_index(spark, path,
                               _neg(emb.where(F.col("vec_id") % 9 == 0)))
     h = simsearch.open_bq_index(spark, path)
-    served = simsearch._anti_tombstones(h.codes, h.tombstones)
+    served = simsearch._anti_tombstones(h.scan, h.tombstones)
     assert served.groupBy("vec_id").count().where(
         F.col("count") > 1
     ).count() == 0
@@ -968,7 +969,7 @@ def test_occ_concurrent_upserts_last_writer_wins(
     assert final == 3  # renumbered above the winner's 2
     assert simsearch._committed(spark, path) == [0, 2, 3]
     h = simsearch.open_ivf_index(spark, path)
-    live = simsearch._anti_tombstones(h.cells, h.tombstones)
+    live = simsearch._anti_tombstones(h.scan, h.tombstones)
     row = live.where("vec_id = 5").collect()
     assert len(row) == 1
     got = [round(float(x), 4) for x in row[0].ce]
@@ -1252,7 +1253,7 @@ def test_occ_concurrent_delete_and_append(spark, emb, monkeypatch):
     monkeypatch.undo()
     assert final == 3 and simsearch._committed(spark, path) == [0, 2, 3]
     h = simsearch.open_ivf_index(spark, path)
-    live = simsearch._anti_tombstones(h.cells, h.tombstones)
+    live = simsearch._anti_tombstones(h.scan, h.tombstones)
     got = sorted(r.vec_id for r in live.collect())
     want = sorted(
         r.vec_id for r in emb.where(F.col("vec_id") % 4 != 0).collect()
@@ -1412,7 +1413,21 @@ def test_vacuum_dry_run_reports_without_deleting(spark, emb):
         assert not os.path.exists(f"{path}/{r}")
 
 
-@pytest.mark.parametrize("kind", ["ivf", "sq", "bq"])
+_SEAM_FAMILIES = {
+    "ivf": (simsearch.write_ivf_index, simsearch.IVF_INDEX_SUBDIRS, "cells"),
+    "sq": (simsearch.write_sq_index, simsearch.SQ_INDEX_SUBDIRS, "codes"),
+    "bq": (simsearch.write_bq_index, simsearch.BQ_INDEX_SUBDIRS, "codes"),
+    "pq": (
+        functools.partial(simsearch.write_pq_index, m=4, ksub=8),
+        simsearch.PQ_INDEX_SUBDIRS, "codes",
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", [
+    "ivf", "sq", "bq", "pq",
+    "ivf-upsert", "sq-upsert", "bq-upsert", "pq-upsert",
+])
 def test_two_apps_same_batch_id_never_cross_adopt_live_claim(
     spark, emb, kind,
 ):
@@ -1424,18 +1439,13 @@ def test_two_apps_same_batch_id_never_cross_adopt_live_claim(
     claim, clearing the first writer's in-flight staged commit.
     Now the claim doc records the app: app-b at the same batch id
     takes a FRESH id, app-a's claim and staging survive, and app-a's
-    own replay still adopts its own claim."""
+    own replay still adopts its own claim. Every family's append and
+    upsert runs through the one commit helper, so each must hold."""
     import os
 
-    writer = {
-        "ivf": (simsearch.write_ivf_index, simsearch.append_ivf_index,
-                simsearch.IVF_INDEX_SUBDIRS, "cells"),
-        "sq": (simsearch.write_sq_index, simsearch.append_sq_index,
-               simsearch.SQ_INDEX_SUBDIRS, "codes"),
-        "bq": (simsearch.write_bq_index, simsearch.append_bq_index,
-               simsearch.BQ_INDEX_SUBDIRS, "codes"),
-    }
-    build, append, subdirs, datadir = writer[kind]
+    family, _, op = kind.partition("-")
+    build, subdirs, datadir = _SEAM_FAMILIES[family]
+    append = getattr(simsearch, f"{op or 'append'}_{family}_index")
     path = tempfile.mkdtemp(prefix=f"occ_xadopt_{kind}_") + "/idx"
     build(emb.where(F.col("vec_id") < 20), path, n_centroids=4)
     a_new = emb.where(
@@ -1469,11 +1479,11 @@ def test_two_apps_same_batch_id_never_cross_adopt_live_claim(
 
 
 def test_appends_forward_app_id_into_claim(spark, emb, monkeypatch):
-    """Pin the round-14 fix at the seam: every per-family append must
-    forward app_id into _claim_commit_id so the claim doc records the
-    application (the behavioral test above stages app-a's claim the
-    way the FIXED code does; this one fails if the forwarding itself
-    is ever reverted)."""
+    """Pin the round-14 fix at the seam: every per-family append and
+    upsert must forward app_id into _claim_commit_id so the claim doc
+    records the application (the behavioral test above stages app-a's
+    claim the way the FIXED code does; this one fails if the
+    forwarding itself is ever reverted)."""
     seen = {}
     real = simsearch._claim_commit_id
 
@@ -1483,17 +1493,17 @@ def test_appends_forward_app_id_into_claim(spark, emb, monkeypatch):
 
     monkeypatch.setattr(simsearch, "_claim_commit_id", rec)
     new = emb.where(F.col("vec_id") >= 30).select("vec_id", "embedding")
-    for kind, build, append in [
-        ("ivf", simsearch.write_ivf_index, simsearch.append_ivf_index),
-        ("sq", simsearch.write_sq_index, simsearch.append_sq_index),
-        ("bq", simsearch.write_bq_index, simsearch.append_bq_index),
-    ]:
-        path = tempfile.mkdtemp(prefix=f"occ_fwd_{kind}_") + "/idx"
-        build(emb.where(F.col("vec_id") < 30), path, n_centroids=4)
-        append(spark, path, new, batch_id=0, app_id=f"app-{kind}")
-        assert seen[path] == f"app-{kind}", (
-            f"append_{kind}_index dropped app_id on the claim"
-        )
+    for family, (build, _, _) in _SEAM_FAMILIES.items():
+        for op in ("append", "upsert"):
+            kind = f"{op}_{family}_index"
+            path = tempfile.mkdtemp(prefix=f"occ_fwd_{kind}_") + "/idx"
+            build(emb.where(F.col("vec_id") < 30), path, n_centroids=4)
+            getattr(simsearch, kind)(
+                spark, path, new, batch_id=0, app_id=f"app-{kind}"
+            )
+            assert seen[path] == f"app-{kind}", (
+                f"{kind} dropped app_id on the claim"
+            )
 
 
 # --- claim leases (round 14) ------------------------------------------------
@@ -2012,6 +2022,16 @@ def test_stream_auto_compact_graph_rejected(spark, tmp_path):
         streaming.stream_ann_index(
             spark, str(tmp_path / "src"), str(tmp_path / "idx"),
             str(tmp_path / "ckpt"), index_kind="graph", auto_compact=3,
+        )
+
+
+def test_stream_unknown_index_kind_rejected(spark, tmp_path):
+    from agni_spark.streaming import ingest as streaming
+
+    with pytest.raises(ValueError, match="index_kind"):
+        streaming.stream_ann_index(
+            spark, str(tmp_path / "src"), str(tmp_path / "idx"),
+            str(tmp_path / "ckpt"), index_kind="lsh",
         )
 
 
