@@ -1825,5 +1825,6 @@ def materialize_rules(
     samples = tagged.select(
         "series_id", F.col("bucket_ms").alias("ts_ms"), "value"
     )
-    series.write.mode("append").parquet(f"{store_path}/series")
-    layout.write_blocks(samples, store_path, block_ms=block_ms, mode="append")
+    layout.write_blocks(
+        samples, store_path, block_ms=block_ms, mode="append", series=series
+    )

@@ -92,23 +92,16 @@ def ingest_exposition(
     block_ms: int = 7_200_000,
 ) -> int:
     """Scrape-file ingest: text file(s) -> parse -> append to the block
-    store with the registry committed LAST (same protocol as
-    handle_write). Returns the sample count landed."""
+    store through `layout.write_blocks` (series dim, data, registry
+    committed LAST — the same path as handle_write). Returns the sample
+    count landed."""
     from agni_spark.sources import layout
 
     lines = spark.read.text(text_path).withColumnRenamed("value", "line")
     samples, series = parse_exposition(lines, default_ts_ms)
-    (
-        samples.withColumn("block_id", layout.block_id_col(block_ms))
-        .repartition("block_id")
-        .sortWithinPartitions("series_id", "ts_ms")
-        .write.partitionBy("block_id")
-        .mode("append")
-        .parquet(f"{store_path}/data")
+    return layout.write_blocks(
+        samples, store_path, block_ms=block_ms, mode="append", series=series
     )
-    series.write.mode("append").parquet(f"{store_path}/series")
-    layout.refresh_registry(spark, store_path, block_ms)
-    return samples.count()
 
 
 def format_exposition(

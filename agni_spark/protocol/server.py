@@ -349,47 +349,42 @@ def decode_write(spark, body: bytes):
     series_id is the deterministic 60-bit hash of the canonical sorted
     label string (the engine-side twin of tsdb's labels hash,
     labels.go:57-68) — writers on any node derive identical ids with no
-    coordination, which is what makes the receive path shardable."""
+    coordination, which is what makes the receive path shardable. Both
+    DataFrames are built from Arrow tables, whatever the session's
+    Arrow setting: no Python rows, no Python worker."""
+    import pyarrow as pa
+
     req = pb.decode_write_request(snappy.decompress(body))
-    sample_rows = []
-    series_rows = []
+    sids, labelsets, points = [], [], []
     for ts in req.timeseries:
         labels = sorted(ts.labels)
         key = ",".join(f"{n}={v}" for n, v in labels)
         sid = int(hashlib.md5(key.encode()).hexdigest()[:15], 16)
-        series_rows.append((sid, dict(labels)))
-        for value, t in ts.samples:
-            sample_rows.append((sid, t, value))
-    samples = spark.createDataFrame(
-        sample_rows, "series_id long, ts_ms long, value double"
+        sids.append(sid)
+        labelsets.append(dict(labels))
+        points += [(sid, t, value) for value, t in ts.samples]
+    samples = pa.table(list(zip(*points)) or [[]] * 3, names=["series_id", "ts_ms", "value"])
+    labelsets = pa.array(labelsets, pa.map_(pa.string(), pa.string()))
+    return (
+        spark.createDataFrame(samples, "series_id long, ts_ms long, value double"),
+        spark.createDataFrame(
+            pa.table([sids, labelsets], names=["series_id", "labels"]),
+            "series_id long, labels map<string,string>",
+        ),
     )
-    series = spark.createDataFrame(
-        series_rows, "series_id long, labels map<string,string>"
-    )
-    return samples, series
 
 
 def handle_write(spark, body: bytes, store_path: str, block_ms: int = 7_200_000):
-    """POST /write: land the request's samples into the time-partitioned
-    block store (append), then refresh the registry (commit-last). The
-    series dim appends too; readers dedupe on series_id — identical
-    label sets always carry identical ids."""
+    """POST /write: append the request's series dim rows, samples and a
+    registry commit of the blocks they landed in, via
+    `layout.write_blocks` (serialized per store). Readers dedupe the
+    series dim on series_id. Returns the sample count."""
     from agni_spark.sources import layout
 
     samples, series = decode_write(spark, body)
-    data_path = f"{store_path}/data"
-    (
-        samples.withColumn("block_id", layout.block_id_col(block_ms))
-        .repartition("block_id")
-        .sortWithinPartitions("series_id", "ts_ms")
-        .write.partitionBy("block_id")
-        .mode("append")
-        .parquet(data_path)
+    return layout.write_blocks(
+        samples, store_path, block_ms=block_ms, mode="append", series=series
     )
-    series.write.mode("append").parquet(f"{store_path}/series")
-    # commit point: registry reflects the appended data (marker-last)
-    layout.refresh_registry(spark, store_path, block_ms)
-    return samples.count()
 
 
 # -- PromQL query API (beyond reference: upstream Prometheus's job) ---------

@@ -9,8 +9,12 @@ Reference mapping (SURVEY §1.4, §3.2-3.3):
   same chunk-level time pruning as ChunkMeta (agni querier.go:510-548)
 - meta.json + S3 marker key commit protocol (shipper.go:252-325,
   marker-last ordering) -> the partition write is made visible by
-  appending its row to the block REGISTRY parquet last; readers list
-  the registry, not the data dir (db.go:72 lists markers, not data)
+  committing its row to the block REGISTRY parquet last; readers list
+  the registry, not the data dir (db.go:72 lists markers, not data).
+  As in the shipper, a commit costs what the write touched: only its
+  blocks are re-summarized into the live registry. Partitions no commit
+  registered (crashed-write debris, blocks a rollback dropped) stay
+  orphans until `vacuum_store`; a later commit never adopts them
 - block discovery loop (db.go:62-122)       -> re-read the registry
 - overlap validation (db.go:206-220)        -> querier.validate_block_sequence
 - level-1 ship filter (shipper.go:22-44)    -> `level` column filter
@@ -26,8 +30,9 @@ as a rewrite."""
 from __future__ import annotations
 
 import os
+import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -102,11 +107,18 @@ def write_blocks(
     mode: str = "overwrite",
     level: int = 1,
     seq: int | None = None,
-) -> None:
-    """Shipper-equivalent sink (S9): write samples time-partitioned,
-    then commit by (re)writing the registry LAST — the marker-key
+    series: DataFrame | None = None,
+) -> int:
+    """Shipper-equivalent sink (S9) and the one append path of every
+    ingest: `series` dim rows first (when given), then the samples
+    time-partitioned, then the registry commit LAST — the marker-key
     protocol. Files are sorted by (series_id, ts_ms): parquet row
-    groups become the 'chunks'.
+    groups become the 'chunks'. Returns the number of samples written.
+    The write job observes the block ids it lands (no extra pass), so
+    an append commits only those blocks; an overwrite rebuilds the
+    registry with every block at `level`. The store lock spans all
+    three writes: concurrent Spark appends into one directory share
+    its `_temporary` staging dir and fail or lose files.
 
     `seq` stamps an `_seq` ingest-sequence column (monotone per
     append) so `querier.merge_on_read` can resolve duplicate
@@ -117,22 +129,43 @@ def write_blocks(
     column silently."""
     if seq is not None and "_seq" not in samples.columns:
         samples = samples.withColumn("_seq", F.lit(int(seq)).cast("long"))
-    data_path = os.path.join(path, "data")
-    (
-        samples.withColumn("block_id", block_id_col(block_ms))
-        .repartition("block_id")
-        .sortWithinPartitions("series_id", "ts_ms")
-        .write.partitionBy("block_id")
-        .option("compression", STORE_COMPRESSION)
-        .mode(mode)
-        .parquet(data_path)
-    )
-    # registry written AFTER data = commit point (marker-key-last,
-    # shipper.go:311-319)
-    refresh_registry(
-        samples.sparkSession, path, block_ms, level,
-        levels={} if mode == "overwrite" else None,
-    )
+    obs = Observation()
+    with _store_lock(path):
+        if series is not None:
+            series.write.mode(mode).option("compression", STORE_COMPRESSION).parquet(
+                f"{path}/series")
+        (
+            samples.withColumn("block_id", block_id_col(block_ms))
+            .observe(obs, F.collect_set("block_id").alias("blocks"), F.count(F.lit(1)).alias("n"))
+            .repartition("block_id")
+            .sortWithinPartitions("series_id", "ts_ms")
+            .write.partitionBy("block_id")
+            .option("compression", STORE_COMPRESSION)
+            .mode(mode)
+            .parquet(os.path.join(path, "data"))
+        )
+        # registry written AFTER data = commit point (marker-key-last,
+        # shipper.go:311-319)
+        refresh_registry(samples.sparkSession, path, block_ms, level,
+                         touched=obs.get["blocks"] if mode == "append" else None)
+    return obs.get["n"]
+
+
+# named on every registry read, so the commit path runs no schema job
+REGISTRY_SCHEMA = (
+    "ulid string, block_id long, mint_ms long, maxt_ms long, num_samples long, "
+    "num_series long, data_mint_ms long, data_maxt_ms long, compaction_level int"
+)
+
+_LOCKS: dict[str, threading.RLock] = {}
+
+
+def _store_lock(path: str) -> threading.RLock:
+    """In-process lock of the store at `path`, held from reading the
+    live registry to swapping in the next, so two writers (HTTP request
+    threads) never commit from one old registry and drop a block.
+    Cross-process writers would need an object-store CAS."""
+    return _LOCKS.setdefault(path.rstrip("/"), threading.RLock())
 
 
 def refresh_registry(
@@ -140,30 +173,47 @@ def refresh_registry(
     path: str,
     block_ms: int = BLOCK_MS,
     level: int = 1,
-    levels: dict[int, int] | None = None,
+    touched: list[int] | None = None,
+    promote: int = 0,
 ) -> None:
-    """Rebuild the block registry from the data partitions — the commit
-    point of every write (batch shipper, streaming sink, remote-write
-    receiver). Readers list the registry, never the data dir (db.go:72
+    """Commit the block registry — the commit point of every write
+    (batch shipper, streaming sink, remote-write receiver, compaction,
+    delete). Readers list the registry, never the data dir (db.go:72
     lists marker keys, not data keys).
 
-    `levels` assigns per-block compaction levels (block_id -> level);
-    blocks absent from the map get `level`. This lets compaction bump
-    levels in the SAME registry commit instead of a second rewrite.
-    Without `levels`, blocks already in the registry keep their
-    registered level (an append must not undo a compaction) and only
-    new blocks get `level`.
-
-    The O(#blocks) summary is computed once, collected, and written as
-    both the live registry and the next history version."""
+    With `touched` (the block ids a write landed or rewrote) only those
+    `data/block_id=N` dirs are summarized and merged with the live
+    registry's other rows (a touched block whose dir is gone leaves the
+    registry): the commit costs O(touched blocks), and a partition no
+    commit registered stays an orphan. A touched block keeps its
+    registered level (an append must not undo a compaction), a new one
+    gets `level`, and `promote` is added on top (compaction bumps its
+    blocks in the same commit). Without `touched` (an overwrite) the
+    registry is rebuilt from the whole data dir, every block at
+    `level` + `promote`."""
     data_path = os.path.join(path, "data")
-    if levels is None:
-        levels = _registered_levels(spark, path)
-    summary = (
-        spark.read.parquet(data_path)
+    with _store_lock(path):
+        live, kept, dirs, reader = [], [], [data_path], spark.read
+        if touched is not None:
+            live = _live_registry(spark, path)
+            touched = set(touched)
+            kept = [r for r in live if r["block_id"] not in touched]
+            dirs = [d for d in (f"{data_path}/block_id={b}" for b in touched)
+                    if _fs_exists(spark, d)]
+            reader = reader.schema("series_id long, ts_ms long").option("basePath", data_path)
+        new = _summarize(reader.parquet(*dirs), block_ms).toArrow().to_pylist() if dirs else []
+        levels = {r["block_id"]: r["compaction_level"] for r in live}
+        for r in new:
+            r["compaction_level"] = levels.get(r["block_id"], level) + promote
+        _commit_registry(spark, path, sorted(kept + new, key=lambda r: r["block_id"]))
+
+
+def _summarize(scan: DataFrame, block_ms: int) -> DataFrame:
+    """Registry rows (all but compaction_level) of the blocks in `scan`."""
+    return (
         # partition-dir inference types block_id as INT; widen before
         # arithmetic (INT * 7_200_000 overflows under ANSI mode)
-        .withColumn("block_id", F.col("block_id").cast("long"))
+        scan.withColumn("block_id", F.col("block_id").cast("long"))
         .groupBy("block_id")
         .agg(
             F.count(F.lit(1)).alias("num_samples"),
@@ -183,32 +233,40 @@ def refresh_registry(
             "data_maxt_ms",
         )
     )
-    # pandas both ways: Arrow transfers, no Python workers
-    pdf = summary.toPandas().sort_values("block_id", ignore_index=True)
-    pdf["compaction_level"] = [levels.get(int(b), level) for b in pdf["block_id"]]
-    schema = T.StructType(
-        [*summary.schema, T.StructField("compaction_level", T.IntegerType(), False)]
-    )
-    _commit_registry(spark, path, pdf, schema)
 
 
-def _commit_registry(spark: SparkSession, path: str, rows, schema) -> None:
+def _live_registry(spark: SparkSession, path: str) -> list[dict]:
+    """The live registry's rows as dicts ([] before the first commit)."""
+    live = os.path.join(path, "registry")
+    if not _fs_exists(spark, live):
+        return []
+    return spark.read.schema(REGISTRY_SCHEMA).parquet(live).toArrow().to_pylist()
+
+
+def _commit_registry(spark: SparkSession, path: str, rows: list[dict]) -> None:
     """The one registry commit every writer goes through: `rows` (the
-    collected O(#blocks) registry — pandas or Row list, so nothing
-    re-reads a path this commit deletes) land in `registry_tmp`, swap
-    in as the live registry (the commit point), and then land as the
-    next immutable registry_history/version=N partition, the
-    audit/time-travel surface ResultsCache keys on."""
-    reg = spark.createDataFrame(rows, schema).coalesce(1)
+    collected O(#blocks) registry, so nothing re-reads a path this
+    commit deletes) land in `registry_tmp` in one Spark write, swap in
+    as the live registry (the commit point), and are then copied as
+    the next immutable registry_history/version=N partition (a file
+    copy, not a second job) — the time-travel surface ResultsCache
+    keys on."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = T.StructType.fromDDL(REGISTRY_SCHEMA)  # Arrow in: no Python worker
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    reg = spark.createDataFrame(table, schema).coalesce(1)
     live, tmp = os.path.join(path, "registry"), os.path.join(path, "registry_tmp")
     reg.write.mode("overwrite").parquet(tmp)
     _fs_delete(spark, live)
     _fs_rename(spark, tmp, live)
     vs = registry_versions(spark, path)
     nxt = (max(vs) + 1) if vs else 0
-    reg.withColumn("version", F.lit(nxt).cast("long")).write.partitionBy(
-        "version"
-    ).mode("append").parquet(os.path.join(path, "registry_history"))
+    fs, P = _hfs(spark, live)
+    hist, sc = P(f"{path}/registry_history/version={nxt}"), spark.sparkContext
+    sc._jvm.org.apache.hadoop.fs.FileUtil.copy(
+        fs, P(live), fs, hist, False, sc._jsc.hadoopConfiguration())
 
 
 def read_samples(spark: SparkSession, path: str) -> DataFrame:
@@ -230,15 +288,6 @@ def read_registry(
         .where(F.col("version") == int(version))
         .drop("version")
     )
-
-
-def _registered_levels(spark: SparkSession, path: str) -> dict[int, int]:
-    """block_id -> compaction level per the live registry ({} before
-    the first commit)."""
-    if not _fs_exists(spark, os.path.join(path, "registry")):
-        return {}
-    reg = read_registry(spark, path).select("block_id", "compaction_level")
-    return {r.block_id: r.compaction_level for r in reg.collect()}
 
 
 def registry_versions(spark: SparkSession, path: str) -> list[int]:
@@ -303,12 +352,14 @@ def compact(
     path: str,
     block_ids: list[int] | None = None,
     files_per_block: int = 1,
+    block_ms: int = BLOCK_MS,
 ) -> None:
     """Compaction (Phase 4; the reference defers to upstream tsdb
     compact.go and never invokes it — SURVEY §2.7): rewrite each
     partition's many small files into `files_per_block` sorted files.
-    Registry is rewritten last in ONE commit with the touched blocks'
-    levels bumped (tsdb Compaction.Level semantics).
+    `block_ids` defaults to every registered block. The registry
+    commit re-summarizes only the compacted blocks and bumps their
+    levels in the same commit (tsdb Compaction.Level semantics).
 
     Both paths repartition FIRST and sort WITHIN the final partitions —
     sorting before a coalesce would concatenate sorted partitions out
@@ -316,36 +367,26 @@ def compact(
     All enumeration is registry-driven; no data-dir listing, so the
     same code runs against an object store."""
     data_path = os.path.join(path, "data")
-    df = spark.read.parquet(data_path)
-    # remember pre-compaction levels so untouched blocks keep theirs
-    old_levels = _registered_levels(spark, path)
-    if block_ids is not None:
-        df = df.where(F.col("block_id").isin(block_ids))
-        compacted = set(block_ids)
-    else:
-        compacted = set(old_levels) or {
-            r.block_id
-            for r in df.select("block_id").distinct().collect()
-        }
-    # (block_id, series-hash salt) partitioning yields exactly
-    # `files_per_block` files per block, each internally sorted by
-    # (series_id, ts_ms) so row-group min/max skipping holds per file;
-    # every block compacts in parallel (no single-task bottleneck).
-    salt = F.pmod(F.xxhash64("series_id"), F.lit(max(1, files_per_block)))
-    sub = (
-        df.repartition(F.col("block_id"), salt)
-        .sortWithinPartitions("series_id", "ts_ms")
-    )
-    sub.write.partitionBy("block_id").mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).option("compression", STORE_COMPRESSION).parquet(data_path)
-    # commit point: registry rebuilt once, levels bumped ONLY for the
-    # blocks this compaction touched
-    levels = {
-        b: old_levels.get(b, 1) + (1 if b in compacted else 0)
-        for b in set(old_levels) | compacted
-    }
-    refresh_registry(spark, path, block_ms=BLOCK_MS, levels=levels)
+    with _store_lock(path):
+        if block_ids is None:
+            block_ids = registry_block_ids(spark, path)
+        df = spark.read.parquet(data_path).where(F.col("block_id").isin(block_ids))
+        # (block_id, series-hash salt) partitioning yields exactly
+        # `files_per_block` files per block, each internally sorted by
+        # (series_id, ts_ms) so row-group min/max skipping holds per
+        # file; every block compacts in parallel (no single-task
+        # bottleneck).
+        salt = F.pmod(F.xxhash64("series_id"), F.lit(max(1, files_per_block)))
+        sub = (
+            df.repartition(F.col("block_id"), salt)
+            .sortWithinPartitions("series_id", "ts_ms")
+        )
+        sub.write.partitionBy("block_id").mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).option("compression", STORE_COMPRESSION).parquet(data_path)
+        # commit point: levels bumped ONLY for the blocks this
+        # compaction touched
+        refresh_registry(spark, path, block_ms, touched=block_ids, promote=1)
 
 
 def plan_compaction(
@@ -390,13 +431,13 @@ def drop_blocks_before(
     s3a://. Registry rewritten last (commit point). Returns dropped
     ids."""
     data_path = os.path.join(path, "data")
-    dropped = [b for b in registry_block_ids(spark, path) if b < cutoff_block_id]
-    for bid in dropped:
-        _fs_delete(spark, os.path.join(data_path, f"block_id={bid}"))
-    if dropped:
-        reg = read_registry(spark, path)
-        kept = reg.where(F.col("block_id") >= cutoff_block_id).collect()
-        _commit_registry(spark, path, kept, reg.schema)
+    with _store_lock(path):
+        live = _live_registry(spark, path)
+        dropped = sorted(r["block_id"] for r in live if r["block_id"] < cutoff_block_id)
+        for bid in dropped:
+            _fs_delete(spark, os.path.join(data_path, f"block_id={bid}"))
+        if dropped:
+            _commit_registry(spark, path, [r for r in live if r["block_id"] >= cutoff_block_id])
     return dropped
 
 
@@ -441,16 +482,17 @@ def delete_samples(
         & (df["ts_ms"] <= t["maxt_ms"])
     )
     kept = df.join(F.broadcast(t), cond, "left_anti")
-    (
-        kept.repartition("block_id")
-        .sortWithinPartitions("series_id", "ts_ms")
-        .write.partitionBy("block_id")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", STORE_COMPRESSION)
-        .parquet(data_path)
-    )
-    refresh_registry(spark, path, block_ms)
+    with _store_lock(path):
+        (
+            kept.repartition("block_id")
+            .sortWithinPartitions("series_id", "ts_ms")
+            .write.partitionBy("block_id")
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .option("compression", STORE_COMPRESSION)
+            .parquet(data_path)
+        )
+        refresh_registry(spark, path, block_ms, touched=hit)
     return sorted(hit)
 
 
@@ -609,14 +651,10 @@ def audit_store(spark: SparkSession, path: str) -> DataFrame:
         F.col("num_samples").alias("reg_samples"),
         F.col("num_series").alias("reg_series"),
     )
-    actual = (
-        read_samples(spark, path)
-        .withColumn("block_id", F.col("block_id").cast("long"))
-        .groupBy("block_id")
-        .agg(
-            F.count(F.lit(1)).alias("act_samples"),
-            F.countDistinct("series_id").alias("act_series"),
-        )
+    actual = _summarize(read_samples(spark, path), BLOCK_MS).select(
+        "block_id",
+        F.col("num_samples").alias("act_samples"),
+        F.col("num_series").alias("act_series"),
     )
     joined = reg.join(actual, "block_id", "full_outer")
     status = (
@@ -644,9 +682,8 @@ def rollback_store(spark: SparkSession, path: str, version: int) -> None:
     lands with the same tmp+rename commit as every registry rewrite,
     and is recorded as a NEW history version (audit trail keeps
     moving forward — time travel, not history rewriting)."""
-    snap = read_registry(spark, path, version)
-    rows = snap.collect()
-    want = [r.block_id for r in rows]
+    rows = read_registry(spark, path, version).toArrow().to_pylist()
+    want = [r["block_id"] for r in rows]
     data_path = os.path.join(path, "data")
     missing = [
         b for b in want
@@ -657,7 +694,8 @@ def rollback_store(spark: SparkSession, path: str, version: int) -> None:
             f"cannot roll back to version {version}: data partitions "
             f"missing for blocks {missing}"
         )
-    _commit_registry(spark, path, rows, snap.schema)
+    with _store_lock(path):
+        _commit_registry(spark, path, rows)
 
 
 # ---------------------------------------------------------------------------

@@ -438,7 +438,7 @@ def stream_ship(
     layout.write_blocks, so a reader listing the registry never sees a
     block whose data hasn't fully landed. Exactly-once across restarts
     comes from the Structured Streaming checkpoint (the file source
-    replays uncommitted batches; the registry rebuild is idempotent).
+    replays uncommitted batches; re-committing their blocks is idempotent).
 
     Contrast with stream_ingest, which lands raw partitioned parquet
     WITHOUT the commit marker: that is the staging tier; this is the
@@ -491,10 +491,9 @@ def stream_ship_exposition(
 
     def _ship(batch_df: DataFrame, batch_id: int) -> None:
         samples, series = parse_exposition(batch_df)
-        series.write.mode("append").parquet(f"{store_path}/series")
         layout.write_blocks(
             samples, store_path, block_ms=block_ms, mode="append",
-            seq=batch_id,
+            seq=batch_id, series=series,
         )
 
     writer = (

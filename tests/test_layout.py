@@ -633,3 +633,152 @@ def test_append_keeps_compacted_levels(spark, tmp_path):
 
     layout.write_blocks(samples, path)
     assert levels() == {0: 1, 1: 1}
+
+
+def test_compact_keeps_block_bounds_of_non_default_store(spark, tmp_path):
+    path = str(tmp_path / "cb_store")
+    samples = spark.createDataFrame(
+        [(s, t, 1.0) for s in range(2) for t in range(0, 3000, 250)],
+        "series_id long, ts_ms long, value double",
+    )
+    layout.write_blocks(samples, path, block_ms=BLOCK)
+    layout.compact(spark, path, block_ids=[1], block_ms=BLOCK)
+    layout.compact(spark, path, block_ms=BLOCK)  # every registered block
+    reg = layout.read_registry(spark, path).collect()
+    assert sorted(r.block_id for r in reg) == [0, 1, 2]
+    assert all(r.mint_ms == r.block_id * BLOCK for r in reg)
+    assert all(r.maxt_ms == (r.block_id + 1) * BLOCK for r in reg)
+    assert {r.block_id: r.compaction_level for r in reg} == {0: 2, 1: 3, 2: 2}
+
+
+def test_append_after_rollback_keeps_orphans_unregistered(spark, tmp_path):
+    """A commit registers only the blocks its own write touched: the
+    partition a rollback dropped stays an orphan (for vacuum_store)
+    instead of being adopted by the next append."""
+    path = str(tmp_path / "orphan_store")
+    s1 = spark.createDataFrame(
+        [(0, t, 1.0) for t in range(0, 2000, 500)],
+        "series_id long, ts_ms long, value double",
+    )
+    layout.write_blocks(s1, path, block_ms=BLOCK)  # v0: blocks 0,1
+    s2 = spark.createDataFrame(
+        [(0, 2500, 2.0)], "series_id long, ts_ms long, value double"
+    )
+    layout.write_blocks(s2, path, block_ms=BLOCK, mode="append")  # v1: 0-2
+    layout.rollback_store(spark, path, version=0)
+    s3 = spark.createDataFrame(
+        [(1, 700, 3.0)], "series_id long, ts_ms long, value double"
+    )
+    layout.write_blocks(s3, path, block_ms=BLOCK, mode="append")
+    assert layout.registry_block_ids(spark, path) == [0, 1]
+    audit = {r.block_id: r.status for r in layout.audit_store(spark, path).collect()}
+    assert audit == {0: "ok", 1: "ok", 2: "uncommitted"}
+    reg = {r.block_id: r.num_samples for r in layout.read_registry(spark, path).collect()}
+    assert reg == {0: 3, 1: 2}
+
+
+def test_incremental_commits_equal_full_rebuild(spark, tmp_path):
+    """Every touched-block commit (append, remote write, exposition
+    scrape, selective compaction, delete) leaves exactly the registry a
+    full rebuild from the data dir computes."""
+    from agni_spark.protocol import remote_pb as pb
+    from agni_spark.protocol import snappy_codec as snappy
+    from agni_spark.protocol.exposition import ingest_exposition
+    from agni_spark.protocol.server import handle_write
+
+    H = 7_200_000
+    path = str(tmp_path / "eq_store")
+
+    def assert_equals_rebuild():
+        cols = ["ulid", "block_id", "mint_ms", "maxt_ms", "num_samples",
+                "num_series", "data_mint_ms", "data_maxt_ms"]
+        full = layout._summarize(layout.read_samples(spark, path), H)
+        reg = layout.read_registry(spark, path).select(*cols)
+        assert sorted(reg.collect()) == sorted(full.select(*cols).collect())
+
+    base = spark.createDataFrame(
+        [(s, b * H + s * 10, float(s)) for s in range(3) for b in range(4)],
+        "series_id long, ts_ms long, value double",
+    )
+    layout.write_blocks(base, path)
+    more = spark.createDataFrame(
+        [(7, H + 5, 1.0), (8, 5 * H + 1, 2.0)],
+        "series_id long, ts_ms long, value double",
+    )
+    assert layout.write_blocks(more, path, mode="append") == 2
+    assert_equals_rebuild()
+    w = pb.WriteRequest([
+        pb.TimeSeries(labels=[("__name__", "up"), ("job", "a")],
+                      samples=[(1.0, 2 * H + 1), (2.0, 6 * H + 1)]),
+    ])
+    assert handle_write(spark, snappy.compress(pb.encode_write_request(w)), path) == 2
+    assert_equals_rebuild()
+    scrape = tmp_path / "scrape.txt"
+    scrape.write_text(f'm{{a="1"}} 1.5 {3 * H + 7}\nm{{a="2"}} 2.5 {7 * H}\n')
+    assert ingest_exposition(spark, str(scrape), path) == 2
+    assert_equals_rebuild()
+    layout.compact(spark, path, block_ids=[1, 6])
+    assert_equals_rebuild()
+    tomb = spark.createDataFrame(
+        [(1, 0, 4 * H)], "series_id long, mint_ms long, maxt_ms long"
+    )
+    assert layout.delete_samples(spark, path, tomb) == [0, 1, 2, 3]
+    assert_equals_rebuild()
+    reg = {r.block_id: (r.num_samples, r.compaction_level) for r in
+           layout.read_registry(spark, path).collect()}
+    assert reg == {0: (2, 1), 1: (3, 2), 2: (3, 1), 3: (3, 1),
+                   5: (1, 1), 6: (1, 2), 7: (1, 1)}
+
+
+def test_concurrent_remote_writes_both_commit(spark, tmp_path):
+    """Concurrent /write requests on one store (more threads than
+    cores, fast thread switching): the store lock serializes them, so
+    no commit drops another's block and every request lands."""
+    import sys
+    import threading
+
+    from agni_spark.protocol import remote_pb as pb
+    from agni_spark.protocol import snappy_codec as snappy
+    from agni_spark.protocol.server import handle_write
+
+    H = 7_200_000
+    path = str(tmp_path / "conc_store")
+    base = spark.createDataFrame(
+        [(1, 10, 1.0)], "series_id long, ts_ms long, value double"
+    )
+    layout.write_blocks(base, path)
+    before = layout.registry_versions(spark, path)
+    blocks = [2, 3, 5, 7, 11, 13]
+
+    def body(block):
+        w = pb.WriteRequest([pb.TimeSeries(
+            labels=[("__name__", "up"), ("b", str(block))],
+            samples=[(float(i), block * H + i) for i in range(50)],
+        )])
+        return snappy.compress(pb.encode_write_request(w))
+
+    errors, out = [], []
+
+    def write(block):
+        try:
+            out.append(handle_write(spark, body(block), path))
+        except Exception as e:  # noqa: BLE001 — surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=write, args=(b,)) for b in blocks]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors and out == [50] * len(blocks)
+    assert layout.registry_block_ids(spark, path) == [0, *blocks]
+    assert layout.registry_versions(spark, path) == before + [
+        max(before) + i for i in range(1, len(blocks) + 1)
+    ]
+    assert layout.read_samples(spark, path).count() == 1 + 50 * len(blocks)

@@ -896,3 +896,34 @@ def test_serving_edge_job_budget(spark, tmp_path):
     assert out["status"] == "success" and len(out["data"]["result"]) == 3
     assert n <= 6
 
+
+def test_remote_write_job_budget(spark, tmp_path):
+    """A remote write into an existing store runs a handful of Spark
+    jobs: Arrow-built batches, one append path and a registry commit
+    that reads only the blocks the write touched."""
+    from agni_spark.protocol.server import handle_write
+    from agni_spark.sources import layout
+
+    store = str(tmp_path / "write_budget_store")
+    samples = spark.createDataFrame(
+        [(sid, b * 7_200_000 + t * 60_000, 1.0)
+         for sid in range(4) for b in range(6) for t in range(30)],
+        "series_id long, ts_ms long, value double",
+    )
+    layout.write_blocks(samples, store)
+    w = pb.WriteRequest([
+        pb.TimeSeries(labels=[("__name__", "up"), ("i", str(i))],
+                      samples=[(float(t), 7_200_000 + t * 1000) for t in range(100)])
+        for i in range(20)
+    ])
+    body = snappy.compress(pb.encode_write_request(w))
+    sc = spark.sparkContext
+    sc.setJobGroup("budget-write", "budget-write")
+    try:
+        n = handle_write(spark, body, store)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("budget-write"))
+    assert n == 2000 and jobs <= 8, jobs
+    assert layout.registry_block_ids(spark, store) == [0, 1, 2, 3, 4, 5]
+
