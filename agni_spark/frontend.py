@@ -123,15 +123,12 @@ class ResultsCache:
         return f"{base}/manifest"
 
     def _committed_days(self, base: str) -> set[int]:
-        try:
-            return {
-                r.day
-                for r in self.spark.read.parquet(
-                    self._manifest_path(base)
-                ).collect()
-            }
-        except Exception:
+        from agni_spark.sources.layout import _fs_exists
+
+        manifest = self._manifest_path(base)
+        if not _fs_exists(self.spark, manifest):
             return set()
+        return {r.day for r in self.spark.read.parquet(manifest).collect()}
 
     def _commit_days(self, base: str, days: set[int]) -> None:
         self.spark.createDataFrame(
@@ -210,6 +207,7 @@ class ResultsCache:
         identical to evaluating the whole range at once. Bounds must be
         split-aligned (see class docstring)."""
         from agni_spark import promql_parser as pql
+        from agni_spark.sources.layout import _fs_exists
 
         if mint_ms % self.split_ms or maxt_ms % self.split_ms:
             raise ValueError(
@@ -257,11 +255,10 @@ class ResultsCache:
             self._commit_days(base, have | set(missing))
 
         served = self._committed_days(base) & wanted
-        try:
-            data = self.spark.read.parquet(f"{base}/data")
-        except Exception:
-            # every wanted day evaluated empty: nothing was ever
-            # written — an empty frame of the compiled schema
+        if not _fs_exists(self.spark, f"{base}/data"):
+            # no day of this expression was ever written: an empty
+            # frame of the compiled schema
             out = pql.query(self.querier, expr, mint_ms=0, maxt_ms=0)
             return out.where(F.lit(False))
+        data = self.spark.read.parquet(f"{base}/data")
         return data.where(F.col("day").isin(sorted(served))).drop("day")

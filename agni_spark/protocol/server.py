@@ -4,28 +4,35 @@ Request path, mirroring agni server.go:64-97 stage by stage:
   POST /read body --snappy--> protobuf ReadRequest        (S12)
   per Query: (start_ms, end_ms, matchers)                  (server.go:100-103)
   matcher translation -> agni_spark.Matcher                (server.go:107-132)
-  Querier.select(..., sort=False) -> ONE Catalyst plan    (stages 4-5 collapse)
-  matrix assembly: groupBy(series) sorted sample arrays    (server.go:134-162)
+  Querier.match_series: driver postings -> series ids and
+    label lists (agni's synced index cache)               (server.go:134-162)
+  ONE pruned scan: Querier.select(sort=False) filtered to
+    those ids, brought home as Arrow                      (stages 4-5 collapse)
+  matrix assembly: numpy sort by (series, ts, value), split per series
   proto ReadResponse --snappy--> HTTP 200                  (S13)
 
-The only collect() in the engine sits here, at the serving edge —
-everything upstream is distributed. The plan carries no global sort:
-samples are time-sorted per series by sort_array, and the collected
-per-series rows are put in series_id order (label-set order) on the
-driver, the reference's output contract (querier.go:314-328). PromQL
-range and instant results are likewise sorted on the driver after
-the collect.
+A remote read is one Spark job once the querier's postings are built:
+the sample fetch. Series come out in series_id order (label-set order)
+with time-sorted samples, the reference's output contract
+(querier.go:314-328). PromQL range and instant results are collected
+and sorted on the driver likewise.
+
+POST errors are typed: a body that cannot be decoded, a matcher that
+cannot be compiled, or an unsatisfiable response-type negotiation is a
+`BadRequest` (HTTP 400); any other failure is an engine fault (500).
 """
 
 from __future__ import annotations
 
 import hashlib
+import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+import numpy as np
 from pyspark.sql import functions as F
 
-from agni_spark.matchers import Matcher
+from agni_spark.matchers import NRE, RE, Matcher
 from agni_spark.protocol import remote_pb as pb
 from agni_spark.protocol import snappy_codec as snappy
 from agni_spark.querier import Querier
@@ -33,43 +40,60 @@ from agni_spark.querier import Querier
 _WIRE_OPS = {0: "=", 1: "!=", 2: "=~", 3: "!~"}  # remote.proto:53-58
 
 
+class BadRequest(ValueError):
+    """The request itself is at fault (HTTP 400)."""
+
+
+def _decoded(decode, body: bytes):
+    """`decode(snappy.decompress(body))`, any failure a BadRequest."""
+    try:
+        return decode(snappy.decompress(body))
+    except Exception as e:  # noqa: BLE001 - malformed bytes fail in many ways
+        raise BadRequest(f"undecodable body: {e}") from e
+
+
 def matchers_from_proto(ms: list[pb.LabelMatcher]) -> list[Matcher]:
-    """Wire matcher -> engine matcher (server.go:107-132)."""
-    return [Matcher(_WIRE_OPS[m.type], m.name, m.value) for m in ms]
+    """Wire matcher -> engine matcher (server.go:107-132); an unknown
+    op or an invalid regex is a BadRequest."""
+    out = []
+    for m in ms:
+        if m.type not in _WIRE_OPS:
+            raise BadRequest(f"unknown matcher type {m.type}")
+        if _WIRE_OPS[m.type] in (RE, NRE):
+            try:
+                re.compile(m.value)
+            except re.error as e:
+                raise BadRequest(f"invalid regex {m.value!r}: {e}") from e
+        out.append(Matcher(_WIRE_OPS[m.type], m.name, m.value))
+    return out
 
 
 def _series_points(querier: Querier, q: pb.Query):
     """(labels, ts_ms list, value list) per series matching one
-    remote-read Query, in series_id order; samples are time-sorted.
+    remote-read Query, in series_id order; samples sorted by time.
 
-    Sample arrays are assembled DISTRIBUTED per series
-    (sort_array(collect_list(...)) — SURVEY §1.4 Matrix mapping); the
-    driver receives two primitive arrays per series, not a Row per
-    sample, and orders the series itself: no range-partition sort."""
-    sel = querier.select(
-        matchers_from_proto(q.matchers),
-        mint_ms=q.start_ms,
-        maxt_ms=q.end_ms,
-        sort=False,
+    Matchers resolve on the driver (`Querier.match_series`); the
+    samples come from ONE scan of `select(sort=False)` — time bounds
+    pushed to parquet, filtered to the matched ids, no shuffle — as
+    Arrow. numpy orders them by (series_id, ts_ms, value), the order
+    sort_array(struct(ts, value)) gave per series, and splits them."""
+    ids, labels = querier.match_series(matchers_from_proto(q.matchers))
+    if not len(ids):
+        return
+    pts = (
+        querier.select(mint_ms=q.start_ms, maxt_ms=q.end_ms, sort=False)
+        # one SQL IN list: Column.isin makes one Py4J call per id
+        .where(F.expr(f"series_id IN ({','.join(map(str, ids.tolist()))})"))
+        .select("series_id", "ts_ms", "value")
+        .toArrow()  # serving edge: results only
     )
-    pts = F.sort_array(F.collect_list(F.struct("ts_ms", "value")))
-    per_series = (
-        sel.groupBy("series_id")
-        .agg(pts.alias("pts"))
-        # `__` names are reserved in Prometheus: no label column clashes
-        .select("series_id", F.col("pts.ts_ms").alias("__ts"),
-                F.col("pts.value").alias("__vs"))
-        .join(querier.series, "series_id")
-    )
-    label_cols = [c for c in querier.series.columns if c != "series_id"]
-    rows = per_series.collect()  # serving edge: results only
-    for row in sorted(rows, key=lambda r: r.series_id):
-        labels = sorted(
-            ("__name__" if c == "metric" else c, row[c])
-            for c in label_cols
-            if row[c] is not None
-        )
-        yield labels, row["__ts"], row["__vs"]
+    sid, ts, vs = (pts[c].to_numpy() for c in ("series_id", "ts_ms", "value"))
+    order = np.lexsort((vs, ts, sid))
+    sid, ts, vs = sid[order], ts[order], vs[order]
+    starts = np.flatnonzero(np.diff(sid, prepend=sid[:1] - 1))
+    ends = np.append(starts[1:], len(sid))
+    for i, a, b in zip(np.searchsorted(ids, sid[starts]).tolist(), starts, ends):
+        yield labels[i], ts[a:b].tolist(), vs[a:b].tolist()
 
 
 def evaluate_query(querier: Querier, q: pb.Query) -> list[pb.TimeSeries]:
@@ -181,7 +205,7 @@ def handle_read_negotiated(
     accepts it (first supported entry wins, codec.go semantics);
     otherwise the sampled-Matrix path — byte-identical to before for
     pre-negotiation clients."""
-    req = pb.decode_read_request(snappy.decompress(body))
+    req = _decoded(pb.decode_read_request, body)
     # codec.go NegotiateResponseType: scan the client's preference
     # list IN ORDER and serve the first type we support; an empty list
     # means the legacy default [SAMPLES]. A client sending
@@ -201,7 +225,7 @@ def handle_read_negotiated(
         # protocol error (codec.go NegotiateResponseType returns an
         # error) — serving SAMPLES anyway would hand the client a body
         # it never agreed to parse. Handler maps this to HTTP 400.
-        raise ValueError(
+        raise BadRequest(
             f"server does not support any of accepted_response_types="
             f"{accepted}"
         )
@@ -250,9 +274,11 @@ class RemoteReadServer:
                     self.send_error(404, "write endpoint not enabled")
                     return
                 try:
-                    body = self.rfile.read(
-                        int(self.headers.get("Content-Length", "0"))
-                    )
+                    try:
+                        n = int(self.headers.get("Content-Length", "0"))
+                    except ValueError as e:
+                        raise BadRequest("bad Content-Length") from e
+                    body = self.rfile.read(n)
                     if self.path == "/write":
                         n = handle_write(outer.spark, body, outer.write_store)
                         payload = str(n).encode()
@@ -261,8 +287,11 @@ class RemoteReadServer:
                         payload, ctype = handle_read_negotiated(
                             outer.querier, body
                         )
-                except Exception as e:  # decode/eval error -> 400
+                except BadRequest as e:
                     self.send_error(400, str(e)[:200])
+                    return
+                except Exception as e:  # noqa: BLE001 - engine fault
+                    self.send_error(500, str(e)[:200])
                     return
                 self.send_response(200)
                 self.send_header("Content-Type", ctype)
@@ -351,10 +380,11 @@ def decode_write(spark, body: bytes):
     labels.go:57-68) — writers on any node derive identical ids with no
     coordination, which is what makes the receive path shardable. Both
     DataFrames are built from Arrow tables, whatever the session's
-    Arrow setting: no Python rows, no Python worker."""
+    Arrow setting: no Python rows, no Python worker. A body that does
+    not decode raises BadRequest."""
     import pyarrow as pa
 
-    req = pb.decode_write_request(snappy.decompress(body))
+    req = _decoded(pb.decode_write_request, body)
     sids, labelsets, points = [], [], []
     for ts in req.timeseries:
         labels = sorted(ts.labels)
@@ -516,7 +546,6 @@ def handle_metadata(querier: Querier, path: str, params: dict) -> bytes:
     """GET /api/v1/labels | /api/v1/label/<name>/values |
     /api/v1/series?match[]=... — JSON bodies in Prometheus's shape."""
     import json
-    import re as _re
 
     matchers = _parse_selector_matchers(params.get("match[]", []))
     if path == "/api/v1/status/tsdb":
@@ -547,7 +576,7 @@ def handle_metadata(querier: Querier, path: str, params: dict) -> bytes:
                     d["__name__" if c == "metric" else c] = r[c]
             data.append(d)
     else:
-        m = _re.fullmatch(r"/api/v1/label/([^/]+)/values", path)
+        m = re.fullmatch(r"/api/v1/label/([^/]+)/values", path)
         if not m:
             raise ValueError(f"unknown metadata path {path!r}")
         data = [r.value for r in querier.label_values(m.group(1), matchers).collect()]

@@ -11,6 +11,11 @@ plan:
          matched in ONE pass over the postings         (P2-P6, A1, A2)
       |> ORDER BY series_id, ts_ms unless sort=False   (M1, M2, A3)
 
+The serving edge (remote read) resolves matchers on the driver instead,
+like agni's synced index cache: `match_series` keeps the postings of a
+Querier in driver memory, built once on first use, and only the sample
+fetch runs in Spark.
+
 Scale notes (100 TB posture):
 - `series_labels` is the dimension side (series count << sample count);
   matcher evaluation never touches the fact table.
@@ -22,16 +27,107 @@ Scale notes (100 TB posture):
   (partition pruning + row-group min/max skipping replace the
   reference's block pruning querier.go:25-46 and chunk pruning
   querier.go:510-548).
+- Driver postings are capped at MAX_DRIVER_SERIES series; a larger
+  dimension resolves remote-read matchers with `select_series`.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Iterable
+from itertools import groupby
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from agni_spark.matchers import Matcher
+
+# The most series whose postings a Querier keeps in driver memory.
+MAX_DRIVER_SERIES = 1_000_000
+
+
+def _label_rows(series: DataFrame) -> DataFrame:
+    """(series_id, name, value): one row per label column of the wide
+    `series` dim, `metric` named `__name__`. A NULL value is an absent
+    label; a dim without label columns keeps one NULL row per series,
+    so every series id appears."""
+    pairs = [
+        F.struct(
+            F.lit("__name__" if c == "metric" else c).alias("name"),
+            F.col(c).cast("string").alias("value"),
+        )
+        for c in series.columns
+        if c != "series_id"
+    ] or [F.struct(F.lit(None).cast("string").alias("name"),
+                   F.lit(None).cast("string").alias("value"))]
+    return series.select("series_id", F.inline(F.array(*pairs)))
+
+
+def _by_series(rows: pa.Table) -> tuple[np.ndarray, pa.Table]:
+    """Sorted distinct series ids of `_label_rows` output, and its
+    present labels sorted by (series_id, name, value)."""
+    ids = np.unique(rows["series_id"].to_numpy())
+    rows = rows.filter(pc.is_valid(rows["value"])).sort_by(
+        [("series_id", "ascending"), ("name", "ascending"), ("value", "ascending")]
+    )
+    return ids, rows
+
+
+def _label_lists(rows: pa.Table, ids: np.ndarray) -> list[list[tuple[str, str]]]:
+    """Each series' sorted (name, value) label list, for sorted `ids`,
+    from `_by_series` rows."""
+    sid = rows["series_id"].to_numpy()
+    lo = np.searchsorted(sid, ids, "left")
+    counts = np.searchsorted(sid, ids, "right") - lo
+    ends = np.cumsum(counts)
+    sub = rows.take(np.repeat(lo + counts - ends, counts) + np.arange(counts.sum()))
+    pairs = list(zip(sub["name"].to_pylist(), sub["value"].to_pylist()))
+    return [pairs[e - n:e] for e, n in zip(ends.tolist(), counts.tolist())]
+
+
+class _Postings:
+    """Driver-resident inverted index of one Querier's series dims:
+    label name -> distinct values -> series ids (from `series_labels`),
+    plus every series' output label rows (from `series`)."""
+
+    def __init__(self, labels: pa.Table, out: pa.Table) -> None:
+        self.ids, self.rows = _by_series(out)
+        labels = labels.filter(pc.is_valid(labels["value"]))
+        # one value per (series, name): the pivot's max in select_series
+        labels = labels.group_by(["series_id", "name"]).aggregate([("value", "max")])
+        g = (
+            labels.group_by(["name", "value_max"])
+            .aggregate([("series_id", "list")])
+            .sort_by([("name", "ascending"), ("value_max", "ascending")])
+        )
+        lists = g["series_id_list"].combine_chunks()
+        counts = lists.value_lengths().to_numpy()
+        flat = lists.flatten().to_numpy()
+        values = g["value_max"].to_pylist()
+        offs = np.concatenate([[0], np.cumsum(counts)])
+        self.index: dict[str, tuple[list[str], np.ndarray, np.ndarray]] = {}
+        i = 0
+        for name, run in groupby(g["name"].to_pylist()):
+            j = i + len(list(run))
+            self.index[name] = (values[i:j], counts[i:j], flat[offs[i]:offs[j]])
+            i = j
+
+    def match(self, matchers: list[Matcher]) -> np.ndarray:
+        """Sorted ids of the series every matcher accepts; an absent
+        label passes iff the matcher accepts "" (select_series' rule)."""
+        ids = self.ids
+        empty = np.empty(0, np.int64)
+        for m in matchers:
+            values, counts, sids = self.index.get(m.name, ([], empty, empty))
+            ok = np.fromiter(map(m.matches_str, values), bool, len(values))
+            if m.matches_empty():
+                ids = np.setdiff1d(ids, sids[np.repeat(~ok, counts)])
+            else:
+                ids = np.intersect1d(ids, sids[np.repeat(ok, counts)])
+        return ids
 
 
 class Querier:
@@ -46,6 +142,12 @@ class Querier:
       series(series_id long, ...label columns or map)
       series_labels(series_id long, name string, value string)
       blocks(ulid string, mint_ms long, maxt_ms long, ...)
+
+    `match_series` caches the series dims' postings on the driver, once
+    per Querier. That is valid because a Querier's dims are fixed when
+    it is opened: `querier_from_store` lists the store's files at open,
+    and a new store version is read through a new Querier (as
+    `frontend.ResultsCache` keys its entries).
     """
 
     def __init__(
@@ -59,6 +161,59 @@ class Querier:
         self.series = series
         self.series_labels = series_labels
         self.blocks = blocks
+        # built on the first match_series; False above MAX_DRIVER_SERIES.
+        # The lock serializes the build across HTTP request threads.
+        self._postings: _Postings | bool | None = None
+        self._postings_lock = threading.Lock()
+
+    def _driver_postings(self) -> _Postings | None:
+        """The driver postings, built on first use from ONE Arrow
+        collect of `series_labels` and the series dim's label rows
+        (reading `series` once, so a deduplicated dim shuffles once).
+        The collect stops at 2 rows per label column per allowed series;
+        reaching that limit, or more than MAX_DRIVER_SERIES series,
+        leaves this Querier on the Spark path for good."""
+        with self._postings_lock:
+            if self._postings is None:
+                out = _label_rows(self.series)
+                limit = MAX_DRIVER_SERIES * 2 * (len(self.series.columns) - 1 or 1)
+                both = (
+                    self.series_labels.select(
+                        "series_id",
+                        F.col("name").cast("string"),
+                        F.col("value").cast("string"),
+                        F.lit(True).alias("_postings"),
+                    )
+                    .unionByName(out.withColumn("_postings", F.lit(False)))
+                    .limit(limit)
+                    .toArrow()
+                )
+                self._postings = False
+                if both.num_rows < limit:
+                    post = both["_postings"]
+                    p = _Postings(both.filter(post), both.filter(pc.invert(post)))
+                    if len(p.ids) <= MAX_DRIVER_SERIES:
+                        self._postings = p
+        return self._postings or None
+
+    # -- matcher -> series, resolved on the driver (the serving edge) ------
+    def match_series(
+        self, matchers: Iterable[Matcher]
+    ) -> tuple[np.ndarray, list[list[tuple[str, str]]]]:
+        """Series matching `matchers`: sorted distinct ids, and each
+        one's label list as sorted (name, value) pairs (`metric` as
+        `__name__`, NULLs dropped). Same selection as `select_series`
+        restricted to the series dim; resolved from the driver postings,
+        or above MAX_DRIVER_SERIES by `select_series` semi-joined to
+        `series` and collected as Arrow."""
+        ms = [m.simplify() for m in matchers]
+        p = self._driver_postings()
+        if p is None:
+            sel = self.series.join(self.select_series(ms), "series_id", "left_semi")
+            ids, rows = _by_series(_label_rows(sel).toArrow())
+        else:
+            ids, rows = p.match(ms), p.rows
+        return ids, _label_lists(rows, ids)
 
     # -- matcher -> series (the postings tier) -----------------------------
     def select_series(
@@ -124,12 +279,9 @@ class Querier:
 
         `sort=False` skips the global range-partition sort for
         consumers whose next step is a hash-partitioned window or
-        aggregation on series_id anyway (the PromQL compute tier, the
-        serving edge's per-series assembly) — at scale the output sort
-        is a full extra shuffle the window immediately redoes. The
-        serving edge restores the (series_id, ts_ms) order itself:
-        sort_array per series, then a driver-side sort of the collected
-        per-series rows.
+        aggregation on series_id anyway (the PromQL compute tier), or
+        that sort on the driver (the serving edge's remote read) — at
+        scale the output sort is a full extra shuffle.
         """
         matchers = list(matchers)
         df = self.samples

@@ -456,44 +456,52 @@ def delete_samples(
     Scale posture: only blocks whose time range intersects a tombstone
     interval are rewritten (dynamic partition overwrite); untouched
     blocks are never read or written. The tombstone set is tiny ->
-    collected once for pruning, broadcast for the anti-join. Returns
-    the rewritten block_ids."""
+    collected once for pruning, broadcast for the anti-join. The write
+    observes which hit blocks keep rows; the dynamic overwrite leaves
+    the others' old files in place, so their partitions are deleted
+    before the commit drops them from the registry. Returns the
+    rewritten block_ids."""
     t = tombstones.select("series_id", "mint_ms", "maxt_ms").cache()
-    bounds = t.agg(F.min("mint_ms"), F.max("maxt_ms")).first()
-    if bounds[0] is None:
-        return []
-    intervals = t.collect()
-    data_path = os.path.join(path, "data")
-    all_blocks = registry_block_ids(spark, path)
-    hit = [
-        b
-        for b in all_blocks
-        if any(
-            b * block_ms <= iv.maxt_ms and iv.mint_ms < (b + 1) * block_ms
-            for iv in intervals
+    try:
+        intervals = t.collect()
+        all_blocks = registry_block_ids(spark, path) if intervals else []
+        hit = [
+            b
+            for b in all_blocks
+            if any(
+                b * block_ms <= iv.maxt_ms and iv.mint_ms < (b + 1) * block_ms
+                for iv in intervals
+            )
+        ]
+        if not hit:
+            return []
+        data_path = os.path.join(path, "data")
+        df = spark.read.parquet(data_path).where(F.col("block_id").isin(hit))
+        cond = (
+            (df["series_id"] == t["series_id"])
+            & (df["ts_ms"] >= t["mint_ms"])
+            & (df["ts_ms"] <= t["maxt_ms"])
         )
-    ]
-    if not hit:
-        return []
-    df = spark.read.parquet(data_path).where(F.col("block_id").isin(hit))
-    cond = (
-        (df["series_id"] == t["series_id"])
-        & (df["ts_ms"] >= t["mint_ms"])
-        & (df["ts_ms"] <= t["maxt_ms"])
-    )
-    kept = df.join(F.broadcast(t), cond, "left_anti")
-    with _store_lock(path):
-        (
-            kept.repartition("block_id")
-            .sortWithinPartitions("series_id", "ts_ms")
-            .write.partitionBy("block_id")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", STORE_COMPRESSION)
-            .parquet(data_path)
-        )
-        refresh_registry(spark, path, block_ms, touched=hit)
-    return sorted(hit)
+        obs = Observation()
+        kept = df.join(F.broadcast(t), cond, "left_anti")
+        with _store_lock(path):
+            (
+                kept.repartition("block_id")
+                .sortWithinPartitions("series_id", "ts_ms")
+                # after the shuffle: still reported when no row survives
+                .observe(obs, F.collect_set("block_id").alias("blocks"))
+                .write.partitionBy("block_id")
+                .mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .option("compression", STORE_COMPRESSION)
+                .parquet(data_path)
+            )
+            for b in set(hit) - set(obs.get["blocks"]):
+                _fs_delete(spark, os.path.join(data_path, f"block_id={b}"))
+            refresh_registry(spark, path, block_ms, touched=hit)
+        return sorted(hit)
+    finally:
+        t.unpersist()
 
 
 def write_bucketed(

@@ -74,6 +74,31 @@ def test_split_equals_whole_for_lag_functions_when_dense(spark, tmp_path):
     assert _rows(got) == _rows(whole) and got.count() > 0
 
 
+def test_cold_miss_reads_no_missing_path(spark, tmp_path, monkeypatch):
+    """A cold cache tests for its manifest and data dir before reading
+    them: no read of a missing path fails (and is swallowed) on the
+    way, and a real read error would propagate."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    real, missing = DataFrameReader.parquet, []
+
+    def parquet(self, *paths, **kw):
+        missing.extend(p for p in paths if not os.path.exists(p))
+        if missing:
+            raise FileNotFoundError(missing)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    q = _dense_querier(spark)
+    fc = ResultsCache(q, str(tmp_path / "cold"))
+    t0 = 19732 * DAY_MS
+    got = fc.query_range("sum by (job) (sum_over_time(event_error[1d]))", t0, t0 + 2 * DAY_MS)
+    assert (fc.hits, fc.misses) == (0, 2) and got.count() == 4
+    assert missing == []
+
+
 def test_uncommitted_partial_not_served(querier, tmp_path):
     fc = ResultsCache(querier, str(tmp_path / "cache3"))
     expr = "sum by (job) (sum_over_time(event_error[1d]))"

@@ -141,6 +141,20 @@ def test_delete_samples_rewrites_only_hit_blocks(spark, tmp_path):
     assert layout.delete_samples(spark, path, t2) == [0]  # block hit, no rows
 
 
+def test_delete_samples_empties_fully_deleted_block(spark, tmp_path):
+    """A hit block whose every sample is tombstoned loses its files and
+    its registry row (the dynamic overwrite alone would leave both)."""
+    path = str(tmp_path / "store")
+    layout.write_blocks(spark.createDataFrame(
+        [(1, 10, 1.0), (1, 20, 2.0), (2, 7_200_010, 3.0)],
+        "series_id long, ts_ms long, value double"), path)
+    t = spark.createDataFrame([(1, 0, 100)], "series_id long, mint_ms long, maxt_ms long")
+    assert layout.delete_samples(spark, path, t) == [0]
+    assert layout.read_samples(spark, path).count() == 1
+    assert layout.registry_block_ids(spark, path) == [1]
+    assert not os.path.exists(os.path.join(path, "data", "block_id=0"))
+
+
 def test_compact_bumps_levels_selectively(spark, tmp_path):
     from agni_spark.sources import layout
 

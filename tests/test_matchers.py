@@ -87,22 +87,89 @@ def test_single_matcher(querier, m):
     assert got == naive([m])
 
 
+CONJUNCTIONS = [
+    [eq("job", "api"), eq("env", "prod")],
+    [eq("job", "api"), eq("pod", "")],
+    [neq("pod", ""), re_match("job", "(api|web).*")],
+    [re_match("pod", "(pod-1)?"), neq("env", "dev")],
+    [eq("pod", ""), neq("job", "api")],
+    [eq("job", "web"), neq("zone", "eu")],
+]
+
+
 @pytest.mark.parametrize(
     "ms",
-    [
-        [eq("job", "api"), eq("env", "prod")],
-        [eq("job", "api"), eq("pod", "")],
-        [neq("pod", ""), re_match("job", "(api|web).*")],
-        [re_match("pod", "(pod-1)?"), neq("env", "dev")],
-        [eq("pod", ""), neq("job", "api")],
-        [eq("job", "web"), neq("zone", "eu")],
-    ],
+    CONJUNCTIONS,
     ids=["eq+eq", "eq+absent", "present+re", "emptyre+neq", "all-empty",
          "unknown-label"],
 )
 def test_conjunction(querier, ms):
     got = {r.series_id for r in querier.select_series(ms).collect()}
     assert got == naive(ms)
+
+
+def test_remote_read_driver_postings_match_spark_path(spark, tmp_path, monkeypatch):
+    """Remote reads resolved from the driver postings and from
+    `select_series` (series cap patched to 0) return byte-identical
+    sampled and streamed payloads, holding the naive evaluator's series
+    with every sample, duplicates from two appends and a NaN included,
+    sorted by (ts, value)."""
+    import math
+
+    from agni_spark import querier as qmod
+    from agni_spark.protocol import remote_pb as pb
+    from agni_spark.protocol import snappy_codec as snappy
+    from agni_spark.protocol.server import handle_read_negotiated
+    from agni_spark.querier import querier_from_store
+    from agni_spark.sources import layout
+
+    store = str(tmp_path / "store")
+    first = [(sid, t * 1000, float("nan") if (sid, t) == (2, 3) else float(t * sid))
+             for sid, _ in SERIES for t in range(6)]
+    again = [(sid, t * 1000, -1.0) for sid, _ in SERIES for t in (1, 4)]
+    schema = "series_id long, ts_ms long, value double"
+    layout.write_blocks(spark.createDataFrame(first, schema), store)
+    layout.write_blocks(spark.createDataFrame(again, schema), store, mode="append")
+    spark.createDataFrame(SERIES, "series_id long, labels map<string,string>").write.parquet(
+        f"{store}/series")
+    points = {
+        sid: sorted(((t, v) for s, t, v in first + again if s == sid),
+                    key=lambda p: (p[0], math.isnan(p[1]), p[1]))
+        for sid, _ in SERIES
+    }
+    by_labels = {tuple(sorted(labels.items())): sid for sid, labels in SERIES}
+
+    def wire(m):
+        if m.op == "=^":
+            return pb.LabelMatcher(2, m.name, f"{m.value}.*")
+        if m.op == "in":
+            return pb.LabelMatcher(2, m.name, "|".join(m.value))
+        return pb.LabelMatcher(["=", "!=", "=~", "!~"].index(m.op), m.name, m.value)
+
+    sets = [[m] for m in MATCHERS] + CONJUNCTIONS + [
+        [eq("zone", "eu")], [eq("zone", "")], [re_match("zone", ".*")],
+        [neq("zone", "eu"), re_match("pod", "pod-1.*")],
+    ]
+
+    def payloads(q):
+        out = []
+        for ms in sets:
+            for types in ([], [pb.RESPONSE_STREAMED_XOR_CHUNKS]):
+                req = pb.ReadRequest([pb.Query(0, 10_000, [wire(m) for m in ms])],
+                                     accepted_response_types=types)
+                out.append(handle_read_negotiated(q, snappy.compress(pb.encode_read_request(req)))[0])
+        return out
+
+    driver = payloads(querier_from_store(spark, store))
+    monkeypatch.setattr(qmod, "MAX_DRIVER_SERIES", 0)
+    spark_path = querier_from_store(spark, store)
+    assert payloads(spark_path) == driver
+    assert spark_path._postings is False
+    for ms, body in zip(sets, driver[::2]):
+        [result] = pb.decode_read_response(snappy.decompress(body)).results
+        got = {by_labels[tuple(ts.labels)]: [(t, repr(v)) for v, t in ts.samples]
+               for ts in result}
+        assert got == {sid: [(t, repr(v)) for t, v in points[sid]] for sid in naive(ms)}, ms
 
 
 # -- pure-Python property tests (fast; no Spark) ---------------------------

@@ -184,6 +184,97 @@ def test_http_bad_body_is_400(served_querier):
         srv.stop()
 
 
+def test_http_read_errors_are_typed(served_querier, monkeypatch):
+    """POST /read answers 400 for what the client got wrong (an invalid
+    regex matcher) and 500 for an engine fault."""
+    from urllib.error import HTTPError
+
+    from agni_spark.protocol import server
+    from agni_spark.protocol.server import RemoteReadServer
+
+    def post(ms):
+        body = snappy.compress(pb.encode_read_request(
+            pb.ReadRequest([pb.Query(0, 1000, ms)])))
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{srv.port}/read", data=body, method="POST")
+        with pytest.raises(HTTPError) as ei:
+            urllib.request.urlopen(req, timeout=60)
+        return ei.value.code
+
+    def fault(querier, q):
+        raise RuntimeError("injected engine fault")
+        yield
+
+    srv = RemoteReadServer(served_querier)
+    srv.start()
+    try:
+        assert post([pb.LabelMatcher(2, "job", "(unclosed")]) == 400
+        monkeypatch.setattr(server, "_series_points", fault)
+        assert post([pb.LabelMatcher(0, "env", "prod")]) == 500
+    finally:
+        srv.stop()
+
+
+def test_http_write_bad_body_is_400(spark, tmp_path):
+    from urllib.error import HTTPError
+
+    from agni_spark.protocol.server import RemoteReadServer
+
+    srv = RemoteReadServer(None, write_store=str(tmp_path / "s"), spark=spark)
+    srv.start()
+    try:
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{srv.port}/write", data=b"\xff\xff", method="POST")
+        with pytest.raises(HTTPError) as ei:
+            urllib.request.urlopen(req, timeout=60)
+        assert ei.value.code == 400
+    finally:
+        srv.stop()
+
+
+def test_driver_postings_built_once_under_concurrent_reads(spark, served_querier, monkeypatch):
+    """Two threads' first reads on one querier build its driver
+    postings once, and both get the right Matrix."""
+    import threading
+
+    from agni_spark import querier as qmod
+    from agni_spark.protocol.server import handle_read_negotiated
+    from agni_spark.querier import Querier
+
+    built = []
+
+    class Counting(qmod._Postings):
+        def __init__(self, *a):
+            built.append(1)
+            super().__init__(*a)
+
+    monkeypatch.setattr(qmod, "_Postings", Counting)
+    q = Querier(served_querier.samples, served_querier.series,
+                served_querier.series_labels)
+    body = snappy.compress(pb.encode_read_request(
+        pb.ReadRequest([pb.Query(0, 1000, [pb.LabelMatcher(0, "env", "prod")])])))
+    out, errors = [None, None], []
+
+    def read(i):
+        try:
+            out[i] = handle_read_negotiated(q, body)[0]
+        except Exception as e:  # noqa: BLE001
+            errors.append(e)
+
+    threads = [threading.Thread(target=read, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not errors and len(built) == 1
+    for payload in out:
+        [result] = pb.decode_read_response(snappy.decompress(payload)).results
+        assert [(ts.labels, ts.samples) for ts in result] == [
+            ([("__name__", "up"), ("env", "prod"), ("job", "api")], [(1.0, 100), (2.0, 200)]),
+            ([("__name__", "up"), ("env", "prod"), ("job", "web")], [(5.0, 150)]),
+        ]
+
+
 def test_write_request_golden_bytes():
     """Hand-derived wire bytes for prompb.WriteRequest (remote.proto
     field numbers: WriteRequest.timeseries=1; TimeSeries.labels=1,
@@ -839,9 +930,10 @@ def test_http_streamed_read_end_to_end(served_querier):
 
 
 def test_serving_edge_job_budget(spark, tmp_path):
-    """A sampled read, a streamed read and a `sum by (rate)` range query
-    each run in a handful of Spark jobs: matchers resolve in one pass
-    over the postings and the edge sorts its collected rows itself."""
+    """A remote read is ONE Spark job (the pruned sample scan) once the
+    querier's driver postings exist; the first read also builds them
+    from one collect of the series dims (at most 3 jobs in all). A
+    `sum by (rate)` range query runs in a handful of jobs."""
     import json
 
     from agni_spark.protocol.server import (
@@ -884,9 +976,12 @@ def test_serving_edge_job_budget(spark, tmp_path):
 
     (body, _), n = jobs("budget-sampled", lambda: read([]))
     [result] = pb.decode_read_response(snappy.decompress(body)).results
-    assert len(result) == 2 and n <= 6
+    assert len(result) == 2 and n <= 3
     (body, _), n = jobs("budget-streamed", lambda: read([pb.RESPONSE_STREAMED_XOR_CHUNKS]))
-    assert len(read_chunked_frames(body)) == 2 and n <= 6
+    assert len(read_chunked_frames(body)) == 2 and n == 1
+    (body, _), n = jobs("budget-sampled-warm", lambda: read([]))
+    [result] = pb.decode_read_response(snappy.decompress(body)).results
+    assert len(result) == 2 and n == 1
     params = {
         "query": ["sum by (job) (rate(http_requests_total[5m]))"],
         "start": ["0"], "end": ["7199"], "step": ["300"],
