@@ -2183,12 +2183,6 @@ def clone_sq_index(spark, src: str, dst: str, as_of: int | None = None):
     _clone_family("sq", spark, src, dst, as_of)
 
 
-def clone_pq_index(spark, src: str, dst: str, as_of: int | None = None):
-    """Deep-clone a stored IVF-PQ index (codes + optional raw vectors
-    + the frozen centroids/codebooks/meta model dirs)."""
-    _clone_family("pq", spark, src, dst, as_of)
-
-
 def clone_graph_index(spark, src: str, dst: str, as_of: int | None = None):
     """Deep-clone a stored graph/HNSW index. The graph family's meta is
     VERSIONED (one row per writer commit), so the clone resolves the

@@ -876,8 +876,7 @@ def _resolve_labels(df: DataFrame, querier: Querier) -> DataFrame:
     never matches across metrics)."""
     if "series_id" not in df.columns:
         return df
-    lbls = _label_cols(querier)
-    dim = F.broadcast(querier.series.select("series_id", *lbls))
+    dim = querier.series_dim(*_label_cols(querier))
     return df.join(dim, "series_id").drop("series_id")
 
 
@@ -898,8 +897,7 @@ def _agg_over(inner: DataFrame, expr: Agg, querier: Querier) -> DataFrame:
         by = [c for c in label_cols if c not in set(expr.labels)]
     else:
         by = []
-    dim = F.broadcast(querier.series.select("series_id", *by))
-    joined = inner.join(dim, "series_id")
+    joined = inner.join(querier.series_dim(*by), "series_id")
     time_col = "bucket_ms" if "bucket_ms" in inner.columns else None
     keys = by + ([time_col] if time_col else [])
     # population variance from explicit moments (E[x^2]-E[x]^2): the
@@ -939,6 +937,12 @@ def _ratio_shape(expr):
 def _compile_inner(
     expr, querier: Querier, mint_ms, maxt_ms, cache: dict
 ) -> DataFrame:
+    """Compile one node. Selector leaves are ONE pruned scan over the
+    querier's driver postings (`Querier.select_matching`: time bounds
+    pushed to parquet, filtered to the matched ids); label joins read
+    the Arrow-built driver dim (`Querier.series_dim`). Above the
+    querier's series cap both fall back to `select(matchers)` /
+    `select_series` and the `series` dim."""
     if isinstance(expr, HistQuant):
         # virtual _bucket metric (see HistQuant docstring): select the
         # BASE metric's raw samples through the normal selector path
@@ -965,7 +969,7 @@ def _compile_inner(
         else:
             by = label_cols
         buckets = promql.histogram_buckets(
-            samples, querier.series, by, f.arg.range_ms
+            samples, querier.series_dim(*by), by, f.arg.range_ms
         )
         return promql.histogram_quantile(
             buckets, expr.q, by
@@ -1002,12 +1006,7 @@ def _compile_inner(
                 at_ms = bound
             eval_ms = at_ms - expr.offset_ms
             span = expr.range_ms or _LOOKBACK_MS
-            df = querier.select(
-                matchers,
-                mint_ms=eval_ms - span + 1,
-                maxt_ms=eval_ms,
-                sort=False,
-            )
+            df = querier.select_matching(matchers, eval_ms - span + 1, eval_ms)
             if expr.offset_ms:
                 df = df.withColumn(
                     "ts_ms", F.col("ts_ms") + F.lit(expr.offset_ms)
@@ -1032,10 +1031,10 @@ def _compile_inner(
         # evaluation time — bounds shift back, timestamps shift forward
         lo = mint_ms - expr.offset_ms if mint_ms is not None else None
         hi = maxt_ms - expr.offset_ms if maxt_ms is not None else None
-        # sort=False: every downstream op (window, groupBy) hash-
-        # partitions on series_id — the sorted-output contract would be
-        # a wasted extra range shuffle here
-        df = querier.select(matchers, mint_ms=lo, maxt_ms=hi, sort=False)
+        # one pruned scan, unsorted: every downstream op (window,
+        # groupBy) hash-partitions on series_id — the sorted-output
+        # contract would be a wasted extra range shuffle here
+        df = querier.select_matching(matchers, lo, hi)
         if expr.offset_ms:
             df = df.withColumn("ts_ms", F.col("ts_ms") + F.lit(expr.offset_ms))
         return df
@@ -1052,7 +1051,7 @@ def _compile_inner(
             if expr.arg.metric is not None:
                 matchers.append(Matcher("=", "__name__", expr.arg.metric))
             sel = _compile(expr.arg, querier, mint_ms, maxt_ms, cache)
-            sel_series = querier.select_series(matchers)
+            sel_series = querier.series_ids(matchers)
             return promql.absent_over_time(
                 sel, sel_series, expr.arg.range_ms, mint_ms, maxt_ms
             ).select(
@@ -1142,8 +1141,7 @@ def _compile_inner(
             else:
                 by = []
             if by and "series_id" in inner.columns:
-                dim = F.broadcast(querier.series.select("series_id", *by))
-                inner = inner.join(dim, "series_id")
+                inner = inner.join(querier.series_dim(*by), "series_id")
             tc = _timecol(inner)
             keys = by + ([tc] if tc else [])
             # canonical value text: trailing-zero-free 6dp decimal, the
@@ -1203,10 +1201,9 @@ def _compile_inner(
                     by = [l for l in expr.labels if l in label_cols]
                 else:
                     by = [c for c in label_cols if c not in set(expr.labels)]
-                dim = F.broadcast(querier.series.select("series_id", *by))
                 w = Window.partitionBy(*by).orderBy(*order)
                 return (
-                    per_series.join(dim, "series_id")
+                    per_series.join(querier.series_dim(*by), "series_id")
                     .withColumn("rk", F.row_number().over(w))
                     .where(F.col("rk") <= (expr.k or 1))
                     .select(
@@ -1431,8 +1428,7 @@ def _merged_scan_sides(expr: BinOp, querier, mint_ms, maxt_ms, cache):
     base = _compile(Func(f_l.name, merged), querier, mint_ms, maxt_ms, cache)
     sides = []
     for metric, agg in ((sl.metric, agg_l), (sr.metric, agg_r)):
-        ids = querier.select_series([Matcher("=", "__name__", metric)])
-        side = base.join(ids, "series_id", "left_semi")
+        side = querier.select_matching([Matcher("=", "__name__", metric)], df=base)
         sides.append(_agg_over(side, agg, querier) if agg else side)
     return sides[0], sides[1]
 
@@ -1488,8 +1484,7 @@ def _merged_pivot_binop(
         sl.offset_ms,
     )
     base = _compile(Func(f_l.name, merged), querier, mint_ms, maxt_ms, cache)
-    dim = F.broadcast(querier.series.select("series_id", mcol, *by))
-    joined = base.join(dim, "series_id")
+    joined = base.join(querier.series_dim(mcol, *by), "series_id")
     aggs = {
         "sum": lambda c: F.round(F.sum(c), promql.ROUND_SUM),
         "avg": lambda c: F.round(F.avg(c), promql.ROUND_AVG),

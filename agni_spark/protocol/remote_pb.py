@@ -23,6 +23,8 @@ from __future__ import annotations
 import struct
 from dataclasses import dataclass, field
 
+import numpy as np
+
 MATCHER_OPS = {0: "=", 1: "!=", 2: "=~", 3: "!~"}
 MATCHER_TYPES = {v: k for k, v in MATCHER_OPS.items()}
 
@@ -113,9 +115,6 @@ def _ld(fno: int, payload: bytes) -> bytes:
 
 def _varint_field(fno: int, v: int) -> bytes:
     return _key(fno, 0) + _uv(v)
-
-
-_pack_double = struct.Struct("<d").pack
 
 
 # -- primitive readers ------------------------------------------------------
@@ -308,19 +307,41 @@ class WriteRequest:
     timeseries: list[TimeSeries] = field(default_factory=list)
 
 
+def _encode_samples(samples: list[tuple[float, int]]) -> bytes:
+    """Every Sample (TimeSeries field 2) in one numpy pass, each
+    `0x12 len 0x09 <double> 0x10 <varint ms>`: both fields always
+    emitted (proto3 elision is legal; explicit fields decode
+    everywhere), the body <= 20 bytes so its length prefix is one byte,
+    and a negative timestamp a 10-byte two's-complement varint."""
+    if not samples:
+        return b""
+    values, ts = zip(*samples)
+    u = np.array(ts, np.int64).view(np.uint64)
+    nb = np.ones(len(u), np.int64)  # varint bytes
+    for k in range(1, 10):
+        nb += u >= np.uint64(1 << (7 * k))
+    off = np.cumsum(12 + nb) - (12 + nb)
+    out = np.empty(int(off[-1] + 12 + nb[-1]), np.uint8)
+    out[off] = 0x12
+    out[off + 1] = 10 + nb
+    out[off + 2] = 0x09
+    out[(off + 3)[:, None] + np.arange(8)] = (
+        np.array(values, "<f8").view(np.uint8).reshape(-1, 8)
+    )
+    out[off + 11] = 0x10
+    for k in range(10):
+        on = nb > k
+        b = (u[on] >> np.uint64(7 * k)) & np.uint64(0x7F)
+        out[off[on] + 12 + k] = b | (nb[on] > k + 1) * np.uint64(0x80)  # continuation bit
+    return out.tobytes()
+
+
 def _encode_timeseries(ts: TimeSeries) -> bytes:
-    parts = [
+    labels = b"".join(
         _ld(1, _ld(1, name.encode()) + _ld(2, value.encode()))
         for name, value in ts.labels
-    ]
-    for value, t in ts.samples:
-        # Sample (field 2) = {1: double, key 0x09; 2: varint ms, key 0x10},
-        # inline: the per-sample hot loop. Both fields always emitted
-        # (proto3 elision is legal; explicit fields decode everywhere). The
-        # body is <= 20 bytes, so its length prefix is one byte.
-        body = b"\x09" + _pack_double(value) + b"\x10" + _uv(t)
-        parts.append(b"\x12" + bytes((len(body),)) + body)
-    return b"".join(parts)
+    )
+    return labels + _encode_samples(ts.samples)
 
 
 def _decode_timeseries(buf: bytes) -> TimeSeries:

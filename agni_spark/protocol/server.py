@@ -17,9 +17,11 @@ with time-sorted samples, the reference's output contract
 (querier.go:314-328). PromQL range and instant results are collected
 and sorted on the driver likewise.
 
-POST errors are typed: a body that cannot be decoded, a matcher that
+Errors are typed. POST: a body that cannot be decoded, a matcher that
 cannot be compiled, or an unsatisfiable response-type negotiation is a
-`BadRequest` (HTTP 400); any other failure is an engine fault (500).
+`BadRequest` (HTTP 400). GET: a missing or non-numeric parameter, or a
+selector that does not parse (a ValueError), is bad input (400; an
+unknown metadata path 404). Any other failure is an engine fault (500).
 """
 
 from __future__ import annotations
@@ -73,17 +75,15 @@ def _series_points(querier: Querier, q: pb.Query):
     remote-read Query, in series_id order; samples sorted by time.
 
     Matchers resolve on the driver (`Querier.match_series`); the
-    samples come from ONE scan of `select(sort=False)` — time bounds
-    pushed to parquet, filtered to the matched ids, no shuffle — as
-    Arrow. numpy orders them by (series_id, ts_ms, value), the order
+    samples come from ONE pruned scan (`Querier.select_ids`: time
+    bounds pushed to parquet, filtered to the matched ids, no shuffle)
+    as Arrow. numpy orders them by (series_id, ts_ms, value), the order
     sort_array(struct(ts, value)) gave per series, and splits them."""
     ids, labels = querier.match_series(matchers_from_proto(q.matchers))
     if not len(ids):
         return
     pts = (
-        querier.select(mint_ms=q.start_ms, maxt_ms=q.end_ms, sort=False)
-        # one SQL IN list: Column.isin makes one Py4J call per id
-        .where(F.expr(f"series_id IN ({','.join(map(str, ids.tolist()))})"))
+        querier.select_ids(ids, q.start_ms, q.end_ms)
         .select("series_id", "ts_ms", "value")
         .toArrow()  # serving edge: results only
     )
@@ -334,12 +334,12 @@ class RemoteReadServer:
                     else:
                         self.send_error(404)
                         return
-                except ValueError as e:
+                except ValueError as e:  # bad input, BadRequest included
                     self.send_error(404 if "unknown" in str(e) else 400,
                                     str(e)[:200])
                     return
-                except Exception as e:  # noqa: BLE001
-                    self.send_error(400, str(e)[:200])
+                except Exception as e:  # noqa: BLE001 - engine fault
+                    self.send_error(500, str(e)[:200])
                     return
                 self.send_response(200)
                 self.send_header("Content-Type", ctype)
@@ -429,6 +429,23 @@ def _asc(v) -> tuple:
     return (1, v)
 
 
+def _group_by_series(pts, dim, groups: dict[tuple, list]) -> None:
+    """Add each (series_id, t, value) row of Arrow table `pts` to
+    `groups` under its series' label tuple from the driver dim `dim`
+    (sorted by series_id); rows of ids not in `dim` are dropped, as
+    the inner join with the dim drops them."""
+    sid = pts.column(0).to_numpy()
+    ids = dim["series_id"].to_numpy()
+    pos = np.minimum(np.searchsorted(ids, sid), len(ids) - 1)
+    keep = ids[pos] == sid if len(ids) else np.zeros(len(sid), bool)
+    pts, pos = pts.filter(keep), pos[keep]
+    rows = np.unique(pos)
+    cols = [dim[c].take(rows).to_pylist() for c in dim.column_names[1:]]
+    keys = {i: tuple(c[j] for c in cols) for j, i in enumerate(rows.tolist())}
+    for i, t, v in zip(pos.tolist(), pts.column(1).to_pylist(), pts.column(2).to_pylist()):
+        groups.setdefault(keys[i], []).append((t, v))
+
+
 def eval_promql(
     querier: Querier,
     expr_text: str,
@@ -438,8 +455,13 @@ def eval_promql(
 ) -> dict:
     """Evaluate a PromQL expression and shape the result like
     Prometheus's /api/v1/query_range response (resultType matrix).
-    The collect() is at the serving edge; evaluation is one Catalyst
-    plan via promql_parser.
+    Evaluation is one Catalyst plan via promql_parser, its selector
+    leaves and label joins served from the querier's driver postings
+    and dim. The fetch is at the serving edge: series-keyed rows come
+    home as Arrow `(series_id, t, value)` and take their labels from
+    the driver dim (ids missing from it are dropped, as the dim join
+    drops them); other rows, or a querier without a driver dim, are
+    collected with their label columns.
 
     When `step` divides the range window and the expression is a bare
     over_time function, evaluation is SLIDING (window > step), matching
@@ -479,17 +501,23 @@ def eval_promql(
         "bucket_ms" if "bucket_ms" in cols else None
     )
     label_cols = [c for c in cols if c not in (tcol, "value", "rk")]
-    if label_cols == ["series_id"]:
-        # resolve series ids to label sets
-        df = df.join(querier.series, "series_id")
-        label_cols = [c for c in querier.series.columns if c != "series_id"]
+    tc = F.col(tcol) if tcol else F.lit(end_ms or 0)
     # ORDER BY labels, time on the driver, with sort-key work per label
     # set, not per point: group the points, sort the sets, then each
     # set's points by time
-    n, tc = len(label_cols), F.col(tcol) if tcol else F.lit(end_ms or 0)
     groups: dict[tuple, list] = {}
-    for r in df.select(*label_cols, tc, "value").collect():
-        groups.setdefault(tuple(r[:n]), []).append(tuple(r[n:]))
+    dim = querier.driver_dim() if label_cols == ["series_id"] else None
+    if dim is not None:
+        # series ids resolve to label sets in driver memory
+        label_cols = dim.column_names[1:]
+        _group_by_series(df.select("series_id", tc, "value").toArrow(), dim, groups)
+    else:
+        if label_cols == ["series_id"]:
+            df = df.join(querier.series, "series_id")
+            label_cols = [c for c in querier.series.columns if c != "series_id"]
+        n = len(label_cols)
+        for r in df.select(*label_cols, tc, "value").collect():
+            groups.setdefault(tuple(r[:n]), []).append(tuple(r[n:]))
     result: list[dict] = []
     for key in sorted(groups, key=lambda k: tuple(map(_asc, k))):
         points = sorted(groups[key], key=lambda p: _asc(p[0]))
@@ -503,19 +531,33 @@ def eval_promql(
     }
 
 
+def _param(params: dict, name: str) -> str:
+    """The first value of a required query parameter; BadRequest when
+    it is missing."""
+    if name not in params:
+        raise BadRequest(f"missing parameter {name!r}")
+    return params[name][0]
+
+
+def _ms_param(params: dict, name: str, required: bool = False) -> int | None:
+    """A seconds parameter as integer ms (None when absent and not
+    `required`); BadRequest when it is not a number."""
+    if name not in params and not required:
+        return None
+    text = _param(params, name)
+    try:
+        return int(float(text) * 1000)
+    except (ValueError, OverflowError) as e:
+        raise BadRequest(f"parameter {name!r} is not a number: {text!r}") from e
+
+
 def handle_query_range(querier: Querier, params: dict) -> bytes:
     """GET /api/v1/query_range?query=...&start=...&end=... (seconds,
     like Prometheus). Returns the JSON body."""
     import json
 
-    expr = params["query"][0]
-    start_ms = (
-        int(float(params["start"][0]) * 1000) if "start" in params else None
-    )
-    end_ms = int(float(params["end"][0]) * 1000) if "end" in params else None
-    step_ms = (
-        int(float(params["step"][0]) * 1000) if "step" in params else None
-    )
+    expr = _param(params, "query")
+    start_ms, end_ms, step_ms = (_ms_param(params, k) for k in ("start", "end", "step"))
     try:
         body = eval_promql(querier, expr, start_ms, end_ms, step_ms)
     except ValueError as e:
@@ -603,11 +645,11 @@ def eval_instant(
         ms = list(sel.matchers)
         if sel.metric is not None:
             ms.append(Matcher("=", "__name__", sel.metric))
-        return pf.instant(querier.select(ms), time_ms, lookback_ms)
+        return pf.instant(querier.select_matching(ms), time_ms, lookback_ms)
 
     label_cols = [c for c in querier.series.columns if c != "series_id"]
     if isinstance(expr, pql.Selector):
-        df = instant_of(expr).join(querier.series, "series_id")
+        df = instant_of(expr).join(querier.series_dim(*label_cols), "series_id")
         keys = label_cols
         val = "value"
     elif isinstance(expr, pql.Agg) and isinstance(expr.arg, pql.Selector):
@@ -618,7 +660,6 @@ def eval_instant(
             keys = [c for c in label_cols if c not in set(expr.labels)]
         else:
             keys = []
-        dim = F.broadcast(querier.series.select("series_id", *keys))
         aggs = {
             "sum": F.round(F.sum("value"), 4),
             "avg": F.round(F.avg("value"), 6),
@@ -626,7 +667,7 @@ def eval_instant(
             "max": F.max("value"),
             "count": F.count(F.lit(1)).cast("double"),
         }
-        df = inner.join(dim, "series_id").groupBy(*keys).agg(
+        df = inner.join(querier.series_dim(*keys), "series_id").groupBy(*keys).agg(
             aggs[expr.op].alias("value")
         )
         val = "value"
@@ -654,8 +695,8 @@ def handle_query(querier: Querier, params: dict) -> bytes:
     """GET /api/v1/query?query=...&time=... (seconds)."""
     import json
 
-    expr = params["query"][0]
-    time_ms = int(float(params["time"][0]) * 1000)
+    expr = _param(params, "query")
+    time_ms = _ms_param(params, "time", required=True)
     try:
         body = eval_instant(querier, expr, time_ms)
     except ValueError as e:

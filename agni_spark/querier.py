@@ -11,10 +11,12 @@ plan:
          matched in ONE pass over the postings         (P2-P6, A1, A2)
       |> ORDER BY series_id, ts_ms unless sort=False   (M1, M2, A3)
 
-The serving edge (remote read) resolves matchers on the driver instead,
-like agni's synced index cache: `match_series` keeps the postings of a
-Querier in driver memory, built once on first use, and only the sample
-fetch runs in Spark.
+The serving paths (remote read, PromQL range and instant queries)
+resolve matchers on the driver instead, like agni's synced index cache:
+each Querier keeps its postings and its wide series dim in driver
+memory, built once on first use; a selector is then ONE pruned scan
+filtered to the matched ids (`select_ids`), and label joins read an
+Arrow-built copy of the dim (`series_dim`) instead of the dim's parquet.
 
 Scale notes (100 TB posture):
 - `series_labels` is the dimension side (series count << sample count);
@@ -28,7 +30,9 @@ Scale notes (100 TB posture):
   reference's block pruning querier.go:25-46 and chunk pruning
   querier.go:510-548).
 - Driver postings are capped at MAX_DRIVER_SERIES series; a larger
-  dimension resolves remote-read matchers with `select_series`.
+  dimension resolves matchers with `select_series` and joins `series`.
+- A scan filters at most MAX_IN_IDS ids with an SQL IN literal; more
+  semi-join a broadcast id table, so no driver literal grows unbounded.
 """
 
 from __future__ import annotations
@@ -47,6 +51,9 @@ from agni_spark.matchers import Matcher
 
 # The most series whose postings a Querier keeps in driver memory.
 MAX_DRIVER_SERIES = 1_000_000
+# The most series ids a scan filters with one SQL IN literal; more
+# semi-join a broadcast Arrow-built id table instead.
+MAX_IN_IDS = 2_000
 
 
 def _label_rows(series: DataFrame) -> DataFrame:
@@ -88,13 +95,32 @@ def _label_lists(rows: pa.Table, ids: np.ndarray) -> list[list[tuple[str, str]]]
     return [pairs[e - n:e] for e, n in zip(ends.tolist(), counts.tolist())]
 
 
+def _wide_dim(out: pa.Table, ids: np.ndarray, cols: list[str]) -> pa.Table | None:
+    """The wide series dim with label columns `cols`, rebuilt from its
+    `_label_rows` output `out` (sorted distinct `ids`); None when a
+    series id repeats or two columns share a label name."""
+    names = ["__name__" if c == "metric" else c for c in cols]
+    n = len(cols) or 1
+    if out.num_rows != len(ids) * n or len(set(names)) < len(names):
+        return None
+    vals = out.sort_by([("series_id", "ascending"), ("name", "ascending")])["value"]
+    rank = {name: j for j, name in enumerate(sorted(names))}
+    return pa.table(
+        [pa.array(ids, pa.int64())]
+        + [vals.take(np.arange(rank[name], len(vals), n)) for name in names],
+        names=["series_id", *cols],
+    )
+
+
 class _Postings:
     """Driver-resident inverted index of one Querier's series dims:
     label name -> distinct values -> series ids (from `series_labels`),
-    plus every series' output label rows (from `series`)."""
+    plus every series' output label rows (from `series`) and, when its
+    label columns `cols` are given, the wide dim itself (`dim`)."""
 
-    def __init__(self, labels: pa.Table, out: pa.Table) -> None:
+    def __init__(self, labels: pa.Table, out: pa.Table, cols: list[str] | None = None) -> None:
         self.ids, self.rows = _by_series(out)
+        self.dim = None if cols is None else _wide_dim(out, self.ids, cols)
         labels = labels.filter(pc.is_valid(labels["value"]))
         # one value per (series, name): the pivot's max in select_series
         labels = labels.group_by(["series_id", "name"]).aggregate([("value", "max")])
@@ -143,11 +169,12 @@ class Querier:
       series_labels(series_id long, name string, value string)
       blocks(ulid string, mint_ms long, maxt_ms long, ...)
 
-    `match_series` caches the series dims' postings on the driver, once
-    per Querier. That is valid because a Querier's dims are fixed when
-    it is opened: `querier_from_store` lists the store's files at open,
-    and a new store version is read through a new Querier (as
-    `frontend.ResultsCache` keys its entries).
+    The serving paths resolve matchers from postings cached on the
+    driver, once per Querier, together with a copy of the wide series
+    dim (`_driver_postings`). That is valid because a Querier's dims
+    are fixed when it is opened: `querier_from_store` lists the store's
+    files at open, and a new store version is read through a new
+    Querier (as `frontend.ResultsCache` keys its entries).
     """
 
     def __init__(
@@ -161,18 +188,24 @@ class Querier:
         self.series = series
         self.series_labels = series_labels
         self.blocks = blocks
-        # built on the first match_series; False above MAX_DRIVER_SERIES.
-        # The lock serializes the build across HTTP request threads.
+        # built on first use; False above MAX_DRIVER_SERIES. The lock
+        # serializes the build across HTTP request threads.
         self._postings: _Postings | bool | None = None
         self._postings_lock = threading.Lock()
+        # the driver dim as a DataFrame (None: join `series` itself)
+        self._dim: DataFrame | None = None
 
     def _driver_postings(self) -> _Postings | None:
         """The driver postings, built on first use from ONE Arrow
         collect of `series_labels` and the series dim's label rows
         (reading `series` once, so a deduplicated dim shuffles once).
-        The collect stops at 2 rows per label column per allowed series;
-        reaching that limit, or more than MAX_DRIVER_SERIES series,
-        leaves this Querier on the Spark path for good."""
+        The same rows rebuild the wide dim when its label columns are
+        strings and its ids distinct; it becomes `_dim` through
+        `createDataFrame(pa.Table)`, a local relation no later query
+        reads from parquet. The collect stops at 2 rows per label
+        column per allowed series; reaching that limit, or more than
+        MAX_DRIVER_SERIES series, leaves this Querier on the Spark path
+        for good."""
         with self._postings_lock:
             if self._postings is None:
                 out = _label_rows(self.series)
@@ -191,12 +224,28 @@ class Querier:
                 self._postings = False
                 if both.num_rows < limit:
                     post = both["_postings"]
-                    p = _Postings(both.filter(post), both.filter(pc.invert(post)))
+                    types = dict(self.series.dtypes)
+                    cols = [c for c in self.series.columns if c != "series_id"]
+                    strings = types["series_id"] == "bigint" and all(
+                        types[c] == "string" for c in cols
+                    )
+                    p = _Postings(
+                        both.filter(post),
+                        both.filter(pc.invert(post)),
+                        cols if strings else None,
+                    )
                     if len(p.ids) <= MAX_DRIVER_SERIES:
                         self._postings = p
+                        if p.dim is not None:
+                            self._dim = self.samples.sparkSession.createDataFrame(p.dim)
         return self._postings or None
 
-    # -- matcher -> series, resolved on the driver (the serving edge) ------
+    def _id_frame(self, ids: np.ndarray) -> DataFrame:
+        """(series_id) of `ids`, as a local relation built from Arrow."""
+        ids = pa.table({"series_id": pa.array(ids, pa.int64())})
+        return self.samples.sparkSession.createDataFrame(ids)
+
+    # -- matcher -> series, resolved on the driver (the serving paths) ----
     def match_series(
         self, matchers: Iterable[Matcher]
     ) -> tuple[np.ndarray, list[list[tuple[str, str]]]]:
@@ -214,6 +263,66 @@ class Querier:
         else:
             ids, rows = p.match(ms), p.rows
         return ids, _label_lists(rows, ids)
+
+    def select_ids(
+        self,
+        ids: np.ndarray,
+        mint_ms: int | None = None,
+        maxt_ms: int | None = None,
+        df: DataFrame | None = None,
+    ) -> DataFrame:
+        """The pruned scan: `df` — by default `select(mint_ms, maxt_ms,
+        sort=False)`, time bounds pushed to parquet — restricted to the
+        sorted series `ids`. Up to MAX_IN_IDS ids filter as one SQL IN
+        list (`Column.isin` makes one Py4J call per id); more semi-join
+        a broadcast Arrow-built id table."""
+        if df is None:
+            df = self.select(mint_ms=mint_ms, maxt_ms=maxt_ms, sort=False)
+        if not len(ids):
+            return df.where(F.lit(False))
+        if len(ids) > MAX_IN_IDS:
+            return df.join(F.broadcast(self._id_frame(ids)), "series_id", "left_semi")
+        return df.where(F.expr(f"series_id IN ({','.join(map(str, ids.tolist()))})"))
+
+    def select_matching(
+        self,
+        matchers: Iterable[Matcher],
+        mint_ms: int | None = None,
+        maxt_ms: int | None = None,
+        df: DataFrame | None = None,
+    ) -> DataFrame:
+        """A selector leaf: `select_ids` of the series matching
+        `matchers`, resolved from the driver postings. Above
+        MAX_DRIVER_SERIES it is `select(matchers, sort=False)`, or `df`
+        semi-joined to `select_series`."""
+        ms = [m.simplify() for m in matchers]
+        p = self._driver_postings()
+        if p is not None:
+            return self.select_ids(p.match(ms), mint_ms, maxt_ms, df)
+        if df is None:
+            return self.select(ms, mint_ms, maxt_ms, sort=False)
+        return df.join(self.select_series(ms), "series_id", "left_semi")
+
+    def series_ids(self, matchers: Iterable[Matcher]) -> DataFrame:
+        """(series_id) of the series matching `matchers`: an Arrow-built
+        local relation from the driver postings, or `select_series`
+        above MAX_DRIVER_SERIES."""
+        ms = [m.simplify() for m in matchers]
+        p = self._driver_postings()
+        return self.select_series(ms) if p is None else self._id_frame(p.match(ms))
+
+    def series_dim(self, *cols: str) -> DataFrame:
+        """(series_id, *cols) of the wide series dim, broadcast: the
+        driver copy when there is one, else `series` itself."""
+        self._driver_postings()
+        dim = self.series if self._dim is None else self._dim
+        return F.broadcast(dim.select("series_id", *cols))
+
+    def driver_dim(self) -> pa.Table | None:
+        """The wide series dim in driver memory, sorted by series_id;
+        None when the Querier joins `series` instead."""
+        p = self._driver_postings()
+        return None if p is None else p.dim
 
     # -- matcher -> series (the postings tier) -----------------------------
     def select_series(

@@ -932,8 +932,10 @@ def test_http_streamed_read_end_to_end(served_querier):
 def test_serving_edge_job_budget(spark, tmp_path):
     """A remote read is ONE Spark job (the pruned sample scan) once the
     querier's driver postings exist; the first read also builds them
-    from one collect of the series dims (at most 3 jobs in all). A
-    `sum by (rate)` range query runs in a handful of jobs."""
+    from one collect of the series dims (at most 3 jobs in all). Range
+    queries then read the same postings and the driver dim: `rate` is
+    the scan + window (2 jobs), `sum by (rate)` adds the aggregation and
+    the dim's broadcast (4)."""
     import json
 
     from agni_spark.protocol.server import (
@@ -989,7 +991,10 @@ def test_serving_edge_job_budget(spark, tmp_path):
     body, n = jobs("budget-range", lambda: handle_query_range(q, params))
     out = json.loads(body)
     assert out["status"] == "success" and len(out["data"]["result"]) == 3
-    assert n <= 6
+    assert n <= 4
+    params["query"] = ["rate(http_requests_total[5m])"]
+    body, n = jobs("budget-rate", lambda: handle_query_range(q, params))
+    assert len(json.loads(body)["data"]["result"]) == 4 and n <= 2
 
 
 def test_remote_write_job_budget(spark, tmp_path):
@@ -1022,3 +1027,178 @@ def test_remote_write_job_budget(spark, tmp_path):
     assert n == 2000 and jobs <= 8, jobs
     assert layout.registry_block_ids(spark, store) == [0, 1, 2, 3, 4, 5]
 
+
+# -- driver-resident range queries -------------------------------------------
+def _range_store(spark, path: str) -> None:
+    """A 2 h, 60 s-scrape store shaped like the serving benchmark's:
+    request counters (one series with a `pod` label, one with a 20 m
+    gap), latency observations, CPU counters by env/mode, and memory
+    gauges with a NaN sample."""
+    from agni_spark.sources import layout
+
+    inst = {"i1": ("api", "prod"), "i2": ("api", "staging"),
+            "i3": ("web", "prod"), "i4": ("web", "staging")}
+    series = []
+    for i, (job, _) in inst.items():
+        extra = {"pod": "p1"} if i == "i1" else {}
+        series.append({"__name__": "http_requests_total", "job": job, "instance": i, **extra})
+        series.append({"__name__": "http_request_duration_ms", "job": job, "instance": i})
+        series.append({"__name__": "process_resident_memory_bytes", "job": job, "instance": i})
+    for i, (_, env) in inst.items():
+        for mode in ("user", "idle"):
+            series.append({"__name__": "node_cpu_seconds_total", "env": env,
+                           "mode": mode, "instance": i})
+    rows = []
+    for sid, labels in enumerate(series, start=1):
+        name = labels["__name__"]
+        for k in range(120):
+            if name == "http_requests_total" and labels["instance"] == "i2" and 30 <= k < 50:
+                continue
+            if name == "http_request_duration_ms":
+                v = float((k * 37 + sid * 11) % 500)
+            elif name == "process_resident_memory_bytes":
+                v = float("nan") if (sid, k) == (3, 10) else 1e6 + sid * 1000 + k
+            else:
+                v = float(k * sid)
+            rows.append((sid, k * 60_000, v))
+    layout.write_blocks(
+        spark.createDataFrame(rows, "series_id long, ts_ms long, value double"), path)
+    spark.createDataFrame(
+        list(enumerate(series, start=1)), "series_id long, labels map<string,string>"
+    ).write.parquet(f"{path}/series")
+
+
+RANGE_QUERIES = [
+    ('rate(http_requests_total{job="api"}[5m])', 300),
+    ("sum by (job) (rate(http_requests_total[5m]))", 300),
+    ("histogram_quantile(0.9, sum by (job, le) (rate(http_request_duration_ms_bucket[5m])))", 300),
+    ('topk(2, rate(node_cpu_seconds_total{env="prod"}[5m]))', 300),
+    ('avg_over_time(process_resident_memory_bytes{job="api"}[10m])', 300),
+    ('sum by (env) (rate(node_cpu_seconds_total{mode="user"}[1h]))', 3600),
+    ('rate(http_requests_total{job="web"}[5m] offset 10m)', 300),
+    ('sum_over_time(http_requests_total{job="api"}[10m] @ 3600)', 300),
+    ('absent_over_time(http_requests_total{job="api"}[10m])', 600),
+    ("sum by (job) (rate(http_requests_total[5m])) / count by (job) (rate(process_resident_memory_bytes[5m]))", 300),
+    ('sum by (job) (rate(http_requests_total[5m])) / sum by (job) (rate(http_request_duration_ms[5m]))', 300),
+    ('rate(node_cpu_seconds_total{mode!="idle"}[5m])', 300),
+    ('http_requests_total{pod=""}', 600),
+    ("process_resident_memory_bytes", 600),
+    ('max by (instance) (max_over_time(http_requests_total{instance=~"i[12]"}[10m]))', 600),
+]
+
+
+def test_range_queries_driver_postings_match_spark_path(spark, tmp_path, monkeypatch):
+    """Range and instant queries compiled against the driver postings
+    and dim (selector leaves as one pruned scan, labels from driver
+    memory), with more ids than the IN-literal bound (broadcast id
+    semi-join), and on the Spark path (series cap patched to 0) return
+    byte-identical bodies, as do remote reads."""
+    import json
+
+    from agni_spark import querier as qmod
+    from agni_spark.protocol.server import (
+        handle_query, handle_query_range, handle_read_negotiated,
+    )
+    from agni_spark.querier import Querier, querier_from_store
+
+    store = str(tmp_path / "range_store")
+    _range_store(spark, store)
+    instants = ['http_requests_total{job="api"}', "sum by (mode) (node_cpu_seconds_total)"]
+    reads = [[pb.LabelMatcher(0, "__name__", "http_requests_total")],
+             [pb.LabelMatcher(1, "mode", "idle"), pb.LabelMatcher(0, "env", "prod")]]
+
+    def bodies(q):
+        out = [handle_query_range(q, {"query": [e], "start": ["0"], "end": ["7199.999"],
+                                      "step": [str(step)]})
+               for e, step in RANGE_QUERIES]
+        out += [handle_query(q, {"query": [e], "time": ["3000"]}) for e in instants]
+        for ms in reads:
+            req = pb.ReadRequest([pb.Query(0, 7_200_000, ms)])
+            out.append(handle_read_negotiated(q, snappy.compress(pb.encode_read_request(req)))[0])
+        return out
+
+    def open_q():
+        # label columns out of name order: the driver dim must keep them
+        q = querier_from_store(spark, store)
+        return Querier(q.samples, q.series.select(*reversed(q.series.columns)), q.series_labels)
+
+    driver_q = open_q()
+    driver = bodies(driver_q)
+    assert isinstance(driver_q._postings, qmod._Postings) and driver_q._dim is not None
+    for (e, _), body in zip(RANGE_QUERIES + [(e, 0) for e in instants], driver):
+        doc = json.loads(body)
+        assert doc["status"] == "success" and doc["data"]["result"], e
+    monkeypatch.setattr(qmod, "MAX_IN_IDS", 1)
+    assert bodies(open_q()) == driver
+    monkeypatch.setattr(qmod, "MAX_DRIVER_SERIES", 0)
+    spark_q = open_q()
+    assert bodies(spark_q) == driver
+    assert spark_q._postings is False
+
+
+def test_get_errors_are_typed(served_querier, monkeypatch):
+    """GET answers 400 for bad input (a missing `query`, a non-numeric
+    `start`, a selector that does not parse) and 500 for an engine
+    fault."""
+    import urllib.error
+    import urllib.parse
+
+    from agni_spark.protocol import server as srv_mod
+
+    srv = srv_mod.RemoteReadServer(served_querier)
+    srv.start()
+
+    def status(path, **params):
+        url = f"http://127.0.0.1:{srv.port}{path}?{urllib.parse.urlencode(params)}"
+        try:
+            with urllib.request.urlopen(url, timeout=120) as resp:
+                return resp.status
+        except urllib.error.HTTPError as e:
+            return e.code
+
+    try:
+        assert status("/api/v1/query_range", start="0", end="1") == 400
+        assert status("/api/v1/query_range", query="up", start="abc", end="1") == 400
+        assert status("/api/v1/query", query="up") == 400
+        assert status("/api/v1/series", **{"match[]": '{job="api"'}) == 400
+        assert status("/api/v1/query_range", query="up", start="0", end="1") == 200
+
+        def fault(*a, **k):
+            raise RuntimeError("injected engine fault")
+
+        monkeypatch.setattr(srv_mod, "eval_promql", fault)
+        assert status("/api/v1/query_range", query="up", start="0", end="1") == 500
+    finally:
+        srv.stop()
+
+
+def _encode_samples_per_sample(samples) -> bytes:
+    """The per-sample Sample encoder `_encode_samples` replaced."""
+    out = b""
+    for value, t in samples:
+        body = b"\x09" + struct.pack("<d", value) + b"\x10" + pb._uv(t)
+        out += b"\x12" + bytes((len(body),)) + body
+    return out
+
+
+_timestamps = st.one_of(
+    st.sampled_from([0, 1, -1, 127, 128, 2**63 - 1, -(2**63), 2**56, 2**49 - 1]),
+    st.integers(min_value=-(2**63), max_value=2**63 - 1),
+)
+
+
+def _as_double(b: bytes) -> float:
+    return struct.unpack("<d", b)[0]
+
+
+_doubles = st.one_of(
+    st.sampled_from([0.0, -0.0, float("nan"), float("inf"), float("-inf")]),
+    st.floats(allow_nan=True, allow_infinity=True),
+    st.binary(min_size=8, max_size=8).map(_as_double),  # NaN payloads too
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.tuples(_doubles, _timestamps), max_size=40))
+def test_sample_encoder_matches_per_sample_encoder(samples):
+    assert pb._encode_samples(samples) == _encode_samples_per_sample(samples)
