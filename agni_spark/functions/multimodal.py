@@ -116,17 +116,6 @@ def frame_sample(media: DataFrame, every_n_bytes: int = 4096) -> DataFrame:
     )
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize — requires a codec; NOT implemented in this
-    container. Raises at plan time so callers fail fast rather than at
-    executor time."""
-    raise NotImplementedError(
-        "resize requires an image codec (PIL/opencv) not present in this "
-        "environment; extract_meta/frame_sample demonstrate the "
-        "mapInPandas plumbing this would use"
-    )
-
-
 def audio_windows(
     media: DataFrame, sample_rate_hz: int = 16_000, window_samples: int = 4096
 ) -> DataFrame:

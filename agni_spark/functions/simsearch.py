@@ -3104,13 +3104,14 @@ def pagerank(
     out = ranks.select(
         "node", F.round("r", 6).alias("rank")
     ).orderBy(F.col("rank").desc(), "node")
-    if iters > 0:
-        # the checkpointed final ranks no longer reference the pinned
-        # iteration-invariant tables — release them here instead of
-        # leaking three corpus-scale pins to the caller's session
-        ed.unpersist()
-        nodes.unpersist()
-        edges.unpersist()
+    # release the pinned iteration-invariant tables on every path
+    # instead of leaking corpus-scale pins to the caller's session: the
+    # checkpointed final ranks no longer reference them, and with
+    # iters=0 the uniform start just recomputes its node list from the
+    # caller's edges (n is already a literal)
+    ed.unpersist()
+    nodes.unpersist()
+    edges.unpersist()
     return out
 
 
@@ -3882,11 +3883,12 @@ def graph_entry_medoids(
     )
 
 
-# Driver-state ceiling for _beam_walk: the frontier/visited dicts are
-# bounded by queries * (1 + hops*beam*degree) entries; above this the
-# walk SHARDS the query batch (walks are per-query independent, so
-# sharding is result-identical) instead of growing the driver heap.
-# ~5M entries ≈ a few hundred MB of dict — safe on any driver.
+# Driver-state ceiling for _graph_walk: the scored/frontier dicts are
+# bounded by queries * (1 + (U*hops_upper + hops*beam)*degree) entries
+# (times the prefetch factor); above this the walk SHARDS the query
+# batch (walks are per-query independent, so sharding is result-
+# identical) instead of growing the driver heap. ~5M entries ≈ a few
+# hundred MB of dict — safe on any driver.
 _BEAM_MAX_STATE = 5_000_000
 
 
@@ -3905,226 +3907,188 @@ def _walk_result_df(spark, out: list) -> DataFrame:
     return spark.createDataFrame(pdf, schema)
 
 
-def _beam_walk(
+def _graph_expander(
+    nodes: DataFrame, layer_edges: list, q: DataFrame,
+    n_buckets: int | None = None,
+):
+    """The one plan builder behind every graph-walk action, in-memory
+    and stored: `nodes` is the (node, ce) vector scan, `layer_edges[l]`
+    the (node, dst) edges of layer l, `q` the (query_id, qe) batch.
+    `n_buckets` is the routing step: a stored index joins every scan on
+    (bucket, node) — the key starts with the partition column, so each
+    scan prunes to the frontier's bucket dirs — and None (the in-memory
+    graph) joins on node alone.
+
+    Returns expand(fr, layer, depth, with_scores) -> (query_id, src,
+    node, cos, lvl): lvl-d rows (d = 1..depth) are the layer's
+    neighbours of the lvl-(d-1) nodes, TAGGED with the parent they
+    hang off (`src`), so one action prefetches `depth` beam rounds and
+    the driver applies each round's exact parent restriction off the
+    tags. `with_scores` adds the frontier's own scores (lvl 0, src
+    NULL); depth 0 is the plain scoring of `fr`. Every candidate set
+    is parameter-bounded (<= q*beam*deg^depth rows), so it broadcasts
+    into the corpus-sized scans, and ONE nodes pass scores all levels.
+    NO mid-plan distinct: each is a shuffle stage on a tiny set
+    (measured ~0.2s of pure stage latency per hop at the serving edge,
+    ~1/3 of the probe); duplicate candidates rescore to the same 6dp
+    value and the driver dict drops them, while the state guard
+    budgets the full degree product."""
+
+    def _route(scan: DataFrame, df: DataFrame) -> DataFrame:
+        if n_buckets is None:
+            return scan.join(F.broadcast(df), "node")
+        bucket = F.pmod(F.hash("node"), F.lit(n_buckets)).cast("int")
+        return scan.join(
+            F.broadcast(df.withColumn("bucket", bucket)), ["bucket", "node"]
+        )
+
+    def expand(fr: DataFrame, layer: int, depth: int, with_scores: bool):
+        levels = []
+        if with_scores:
+            levels.append(fr.select(
+                "query_id", F.lit(None).cast("long").alias("src"),
+                "node", F.lit(0).alias("lvl"),
+            ))
+        parents = fr
+        for lvl in range(1, depth + 1):
+            hop = _route(layer_edges[layer], parents).select(
+                "query_id", F.col("node").alias("src"),
+                F.col("dst").alias("node"),
+            )
+            levels.append(hop.withColumn("lvl", F.lit(lvl)))
+            parents = hop.select("query_id", "node")
+        cand = levels[0]
+        for lv in levels[1:]:
+            cand = cand.unionByName(lv)
+        return (
+            _route(nodes, cand)
+            .join(F.broadcast(q), "query_id")
+            .select(
+                "query_id", "src", "node",
+                F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cos"),
+                "lvl",
+            )
+        )
+
+    return expand
+
+
+def _graph_walk(
     spark,
     qids: list,
     entry_nodes: list,
-    score_fn,
-    expand_fn,
+    expand,
     k: int,
     beam: int,
     hops: int,
+    hops_upper: int = 0,
+    n_upper: int = 0,
     max_degree: int = 8,
-    first_fn=None,
-    expand2_fn=None,
-    expand3_fn=None,
 ) -> DataFrame:
-    """Driver-COORDINATED beam search shared by graph_ann and
-    graph_ann_stored: the frontier/visited state is parameter-bounded
-    (<= queries * (1 + hops*beam*max_degree) rows — the exact bound
-    that already justified broadcasting it), so it lives on the driver
-    and each hop is ONE Spark job (expand frontier along edges + score
-    candidates, both JVM-side and corpus-pruned). The DataFrame-loop
-    alternative pays a broadcast-exchange + checkpoint job tower per
-    hop — measured 8-10s per probe at sf0.01 vs ~1s here — and at
-    1000 executors that per-hop scheduling overhead only grows. The
-    walk itself is identical: score entry points, then per hop score
-    the unseen neighbors of the frontier and keep the beam best new
-    nodes per query; ties (cos DESC, node ASC) and 6dp rounding make
-    it deterministic, so the unrolled-hop DuckDB oracle stays FULL.
+    """Driver-COORDINATED layered graph walk shared by graph_ann and
+    graph_ann_stored — HNSW search (Malkov & Yashunin), of which NSW
+    beam search is the case with no upper layer (n_upper = 0). The
+    frontier/visited state is parameter-bounded, so it lives on the
+    driver and each action is ONE Spark job (expand the frontier along
+    edges + score the candidates, both JVM-side and corpus-pruned,
+    built by _graph_expander). The DataFrame-loop alternative pays a
+    broadcast-exchange + checkpoint job tower per hop — measured 8-10s
+    per probe at sf0.01 vs ~1s here.
 
-    State-size contract (ENFORCED): the bound above is computed up
-    front from `max_degree` (the graph's knn fan-out, read from the
-    build params / index meta); if the full batch would exceed
-    _BEAM_MAX_STATE dict entries (a batch-recall job over ~1M queries,
-    say), the batch is SHARDED into query chunks that each fit — the
-    per-query walks never interact, so sharded output is identical
-    (test-pinned) and the driver heap stays bounded at serving-batch
-    size regardless of how many queries the caller throws in.
+    The walk: score the entries; greedily descend the upper layers,
+    top first — per layer, `hops_upper` beam=1 rounds from the best
+    node scored so far; then `hops` layer-0 beam rounds. A round scores
+    the unseen neighbours of the frontier and keeps the `beam` best
+    new nodes per query. Layer 0 starts from the best `beam` nodes of
+    the descent, or — with no upper layer — from EVERY entry (the two
+    differ once n_entries > beam). Answer: top-k of everything scored,
+    self-matches excluded. Fixed round counts, 6dp scores and (cos
+    DESC, node ASC) ties make it deterministic, so the unrolled-hop
+    DuckDB mirrors stay FULL oracles.
 
-    `first_fn` (optional) FUSES the entry-scoring job with hop 1: one
-    plan computing score(entries) UNION expand(entries) — collected
-    rows whose node is an entry are the initial scores, the rest are
-    hop-1 candidates (a neighbor that IS an entry scores to the same
-    6dp value, so classification by membership loses nothing).
+    Action fusion: the first action also scores the entries (lvl 0),
+    expanding from all of them — the driver then picks the layer's
+    starting frontier and restricts round 1 to its children — and
+    every action prefetches up to 3 rounds of one layer (src-tagged
+    levels, see _graph_expander): a round admits the prefetched rows
+    whose parent won the previous round's beam, exactly the
+    sequential walk's candidate sets, so selection is byte-identical
+    at every depth (test-pinned) and the serving-default hops=3 flat
+    probe is ONE action end to end.
 
-    `expand2_fn` (optional) goes one further — SPECULATIVE DEPTH-2
-    expansion: one plan returning (query_id, src, node, cos, lvl)
-    where lvl=1 rows are the frontier's neighbors and lvl=2 rows are
-    the neighbors' neighbors, tagged with the lvl-1 node (`src`) they
-    hang off. The driver then runs TWO beam rounds off one job: hop h
-    selects its frontier from the lvl-1 news, and hop h+1's candidate
-    set — neighbors(frontier_h) — is exactly the lvl-2 rows whose
-    (query_id, src) is in frontier_h, already scored. Selection logic
-    is byte-identical to the sequential walk (same unseen-filter, same
-    tie-breaks; prefetching extra rows changes nothing — they are
-    dropped unless their src won the beam), so results and the FULL
-    unrolled-hop oracle are unchanged (test-pinned). Action count
-    drops from 1+hops to ~ceil(hops/2): each action is scheduling-
-    constant cost, and at the serving edge that constant IS the SLO.
-    State bound grows by one degree factor (lvl-2 rows): the chunk
-    guard uses q*(1 + hops*beam*deg*(1+deg)).
+    State-size contract (ENFORCED): the per-query bound 1 + (n_upper*
+    hops_upper*deg + hops*beam*deg)*spec is computed up front from
+    `max_degree` (the graph's knn fan-out, read from the build params /
+    index meta), spec = 1 + deg + ... + deg^(depth-1) the prefetch
+    factor. TIERED SPECULATION: the deepest prefetch depth whose budget
+    serves the whole batch in one chunk wins — on an appended/
+    compacted graph with a large hub degree the depth-3 budget would
+    otherwise shard the batch into near-single-query chunks, 8x the
+    actions for prefetch rows a shallower walk never materializes. If
+    even the sequential tier (spec 1) cannot fit one chunk, the batch
+    is SHARDED on it: the per-query walks never interact, so sharded
+    output is identical (test-pinned) and the driver heap stays
+    bounded at _BEAM_MAX_STATE whatever the batch size."""
+    deg = max(1, max_degree)
 
-    `expand3_fn` (round 9) extends the same trick to DEPTH 3: lvl-2
-    rows are tagged with their lvl-1 parent and lvl-3 rows with their
-    lvl-2 parent, so the driver runs THREE result-identical beam
-    rounds off one job — the serving-default hops=3 probe becomes a
-    SINGLE action (entry scores fused in). Guard grows another degree
-    factor: q*(1 + hops*beam*deg*(1+deg+deg^2))."""
+    def _per_q(spec: int) -> int:
+        return 1 + (n_upper * hops_upper * deg + hops * beam * deg) * spec
+
+    for depth in (3, 2, 1):
+        spec = sum(deg ** i for i in range(depth))
+        if len(qids) * _per_q(spec) <= _BEAM_MAX_STATE:
+            break
+    chunk = max(1, _BEAM_MAX_STATE // _per_q(spec))
+    # (layer, rounds, beam width), top layer first
+    schedule = [(lv, hops_upper, 1) for lv in range(n_upper, 0, -1)]
+    schedule.append((0, hops, beam))
 
     def fr_df(pairs):
-        return spark.createDataFrame(pairs, "query_id long, node long")
+        return spark.createDataFrame(list(pairs), "query_id long, node long")
 
-    entry_set = {int(n) for n in entry_nodes}
-
-    def _next_frontier(new: dict) -> list:
+    def _top(cand: dict, n: int) -> set:
         by_q: dict = {}
-        for (qd, node), cos in new.items():
+        for (qd, node), cos in cand.items():
             by_q.setdefault(qd, []).append((cos, node))
-        return [
+        return {
             (qd, node)
             for qd, lst in by_q.items()
-            for cos, node in sorted(lst, key=lambda t: (-t[0], t[1]))[:beam]
-        ]
-
-    def _two_rounds(scored: dict, rows1: list, rows2: list) -> list:
-        """Run two sequential beam rounds off prefetched rows: rows1 =
-        (key, cos) hop-h candidates, rows2 = (key, src, cos) hop-h+1
-        candidates tagged with their lvl-1 parent. Returns the next
-        frontier; mutates `scored` exactly as two expand rounds
-        would."""
-        new1: dict = {}
-        for key, cos in rows1:
-            if key not in scored and key not in new1:
-                new1[key] = cos
-        scored.update(new1)
-        fr1 = _next_frontier(new1)
-        fset = set(fr1)
-        new2: dict = {}
-        for key, src, cos in rows2:
-            if (
-                (key[0], src) in fset
-                and key not in scored
-                and key not in new2
-            ):
-                new2[key] = cos
-        scored.update(new2)
-        return _next_frontier(new2)
-
-    def _three_rounds(
-        scored: dict, rows1: list, rows2: list, rows3: list
-    ) -> list:
-        """_two_rounds plus one more restricted round: rows3 =
-        (key, src, cos) hop-h+2 candidates tagged with the lvl-2
-        parent they hang off; admitted iff that parent won round B's
-        beam. Selection identical to three sequential expand rounds
-        (prefetched rows not admitted are dropped)."""
-        new1: dict = {}
-        for key, cos in rows1:
-            if key not in scored and key not in new1:
-                new1[key] = cos
-        scored.update(new1)
-        fr1 = set(_next_frontier(new1))
-        new2: dict = {}
-        for key, src, cos in rows2:
-            if (key[0], src) in fr1 and key not in scored and key not in new2:
-                new2[key] = cos
-        scored.update(new2)
-        fr2 = set(_next_frontier(new2))
-        new3: dict = {}
-        for key, src, cos in rows3:
-            if (key[0], src) in fr2 and key not in scored and key not in new3:
-                new3[key] = cos
-        scored.update(new3)
-        return _next_frontier(new3)
+            for cos, node in sorted(lst, key=lambda t: (-t[0], t[1]))[:n]
+        }
 
     def _walk_chunk(chunk_qids: list) -> list:
         scored: dict = {}
-        frontier = [
-            (int(qd), int(n)) for qd in chunk_qids for n in entry_nodes
-        ]
-        remaining = hops
-        if expand3_fn is not None and hops >= 3 and frontier:
-            # fused action: entry scores + hops 1-3 — the serving-
-            # default hops=3 probe is ONE Spark action end to end
-            rows1, rows2, rows3 = [], [], []
-            for r in expand3_fn(fr_df(frontier), with_scores=True).collect():
-                key = (r.query_id, r.node)
-                if r.lvl == 0 or (r.lvl == 1 and r.node in entry_set):
-                    scored[key] = r.cos
-                elif r.lvl == 1:
-                    rows1.append((key, r.cos))
-                elif r.lvl == 2:
-                    rows2.append((key, r.src, r.cos))
-                else:
-                    rows3.append((key, r.src, r.cos))
-            frontier = _three_rounds(scored, rows1, rows2, rows3)
-            remaining = hops - 3
-        elif expand2_fn is not None and hops >= 2 and frontier:
-            # fused action 1: entry scores + hop 1 + speculative hop 2
-            rows0, rows1, rows2 = [], [], []
-            for r in expand2_fn(fr_df(frontier), with_scores=True).collect():
-                key = (r.query_id, r.node)
-                if r.lvl == 0 or (r.lvl == 1 and r.node in entry_set):
-                    scored[key] = r.cos
-                elif r.lvl == 1:
-                    rows1.append((key, r.cos))
-                else:
-                    rows2.append((key, r.src, r.cos))
-            frontier = _two_rounds(scored, rows1, rows2)
-            remaining = hops - 2
-        elif first_fn is not None and hops > 0 and frontier:
-            new: dict = {}
-            for r in first_fn(fr_df(frontier)).collect():
-                key = (r.query_id, r.node)
-                if r.node in entry_set:
-                    scored[key] = r.cos
-                elif key not in new:
-                    new[key] = r.cos
-            scored.update(new)
-            frontier = _next_frontier(new)
-            remaining = hops - 1
-        else:
-            for r in score_fn(fr_df(frontier)).collect():
+        start = [(int(qd), int(n)) for qd in chunk_qids for n in entry_nodes]
+        fresh = True  # entry scores ride on the first action
+        for layer, rounds, width in schedule:
+            frontier = set(start) if fresh else _top(scored, width)
+            while rounds > 0 and frontier:
+                d = min(rounds, depth)
+                levels: list = [[] for _ in range(d + 1)]
+                for r in expand(fr_df(frontier), layer, d, fresh).collect():
+                    levels[r.lvl].append(r)
+                for r in levels[0]:
+                    scored[(r.query_id, r.node)] = r.cos
+                if fresh and n_upper:
+                    frontier = _top(scored, width)
+                fresh = False
+                for rows in levels[1:]:
+                    new: dict = {}
+                    for r in rows:
+                        key = (r.query_id, r.node)
+                        if (
+                            (r.query_id, r.src) in frontier
+                            and key not in scored
+                            and key not in new
+                        ):
+                            new[key] = r.cos
+                    scored.update(new)
+                    frontier = _top(new, width)
+                rounds -= d
+        if fresh:  # no round at all: the entry scores are the answer
+            for r in expand(fr_df(start), 0, 0, True).collect():
                 scored[(r.query_id, r.node)] = r.cos
-        while remaining > 0 and frontier:
-            if expand3_fn is not None and remaining >= 3:
-                rows1, rows2, rows3 = [], [], []
-                for r in expand3_fn(
-                    fr_df(frontier), with_scores=False
-                ).collect():
-                    key = (r.query_id, r.node)
-                    if r.lvl == 1:
-                        rows1.append((key, r.cos))
-                    elif r.lvl == 2:
-                        rows2.append((key, r.src, r.cos))
-                    else:
-                        rows3.append((key, r.src, r.cos))
-                frontier = _three_rounds(scored, rows1, rows2, rows3)
-                remaining -= 3
-                continue
-            if expand2_fn is not None and remaining >= 2:
-                rows1, rows2 = [], []
-                for r in expand2_fn(
-                    fr_df(frontier), with_scores=False
-                ).collect():
-                    key = (r.query_id, r.node)
-                    if r.lvl == 1:
-                        rows1.append((key, r.cos))
-                    else:
-                        rows2.append((key, r.src, r.cos))
-                frontier = _two_rounds(scored, rows1, rows2)
-                remaining -= 2
-                continue
-            new = {}
-            for r in expand_fn(fr_df(frontier)).collect():
-                key = (r.query_id, r.node)
-                if key not in scored and key not in new:
-                    new[key] = r.cos
-            scored.update(new)
-            frontier = _next_frontier(new)
-            remaining -= 1
-        by_q = {}
+        by_q: dict = {}
         for (qd, node), cos in scored.items():
             if node != qd:
                 by_q.setdefault(qd, []).append((cos, node))
@@ -4136,43 +4100,65 @@ def _beam_walk(
             )
         ]
 
-    deg = max(1, max_degree)
-    # TIERED SPECULATION (round-15, guide §2.6/§7 — scheduling fixed
-    # cost IS the serving SLO): the speculative depth-2/3 prefetch
-    # multiplies the state budget by deg (or deg^2), and on an
-    # appended/compacted graph whose measured hub degree is large the
-    # old guard SHARDED the batch into near-single-query chunks —
-    # 8x the Spark actions to protect against prefetch rows that a
-    # shallower walk never materializes. Instead of sharding, STEP
-    # DOWN the prefetch depth until the whole batch fits in one chunk:
-    # every depth is result-identical (the depth-2/3 selection is
-    # byte-equal to the sequential rounds — long test-pinned), so the
-    # only thing that changes is actions-per-chunk vs chunks. The
-    # deepest tier that fits serves the batch in ceil(hops/depth)
-    # actions; if even the sequential tier (budget 1 + hops*beam*deg,
-    # no prefetch factor) cannot fit one chunk, it is the tier with
-    # the cheapest per-chunk action count, so shard on it.
-    def _per_q(spec: int) -> int:
-        return 1 + hops * beam * deg * spec
-    tiers = []
-    if expand3_fn is not None:
-        tiers.append((1 + deg + deg * deg, expand2_fn, expand3_fn))
-    if expand2_fn is not None:
-        tiers.append((1 + deg, expand2_fn, None))
-    tiers.append((1, None, None))
-    for spec, e2, e3 in tiers:
-        if len(qids) * _per_q(spec) <= _BEAM_MAX_STATE:
-            expand2_fn, expand3_fn = e2, e3
-            break
-    else:
-        expand2_fn, expand3_fn = None, None
-        spec = 1
-    per_q = _per_q(spec)
-    chunk = max(1, _BEAM_MAX_STATE // per_q)
     out = []
     for i in range(0, len(qids), chunk):
         out.extend(_walk_chunk(qids[i:i + chunk]))
     return _walk_result_df(spark, out).orderBy("query_id", "rk")
+
+
+def _graph_probe(
+    spark,
+    nodes: DataFrame,
+    layer_edges: list,
+    entry_nodes: list,
+    queries: DataFrame,
+    k: int,
+    beam: int,
+    hops: int,
+    hops_upper: int,
+    max_degree: int,
+    allowed: DataFrame | None = None,
+    tombstones: DataFrame | None = None,
+    n_buckets: int | None = None,
+) -> DataFrame:
+    """The one probe body of graph_ann and graph_ann_stored: the
+    layered walk over `layer_edges` (see _graph_expander for the scans
+    and routing), then the allowed/tombstone post-filter. A filtered or
+    deleted probe ranks the walk's FULL visited set (bounded by the
+    same state-guard contract) and restricts it before the final top-k
+    — the walk itself never changes: it may route THROUGH disallowed or
+    tombstoned nodes for navigability, it just can't return them. Each
+    restriction set is streamed once against the BROADCAST of the
+    walk's bounded result, never shuffled."""
+    q = queries.select("query_id", F.col("embedding").alias("qe"))
+    qids = [r.query_id for r in queries.select("query_id").collect()]
+    post = allowed is not None or tombstones is not None
+    res = _graph_walk(
+        spark, qids, entry_nodes,
+        _graph_expander(nodes, layer_edges, q, n_buckets),
+        1 << 30 if post else k, beam, hops, hops_upper,
+        n_upper=len(layer_edges) - 1, max_degree=max_degree,
+    )
+    if not post:
+        return res
+    flt = _anti_tombstones_bounded(
+        res.select("query_id", "vec_id", "cos"), tombstones
+    )
+    if allowed is not None:
+        flt = allowed.select("vec_id").distinct().join(
+            F.broadcast(flt), "vec_id"
+        )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("vec_id").asc()
+    )
+    return (
+        flt.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
+        .select(
+            "query_id", "vec_id", "cos", F.col("rk").cast("int").alias("rk")
+        )
+        .orderBy("query_id", "rk")
+    )
 
 
 def graph_ann(
@@ -4206,9 +4192,11 @@ def graph_ann(
     corpus-sized tables in flight are the edge and node scans, and the
     bounded frontier BROADCASTS into them, so no corpus-sized shuffle
     ever happens; per hop the per-query work is <= beam*knn candidate
-    rows, independent of corpus size. The walk itself is driver-
-    coordinated (see _beam_walk): one Spark job per hop, state bounded
-    by the same contract that lets the frontier broadcast.
+    rows, independent of corpus size. The walk and the probe tail are
+    graph_ann_stored's (see _graph_probe), run over the persisted
+    edge build and routed on `node` alone: one Spark job per up to
+    three hops, state bounded by the same contract that lets the
+    frontier broadcast.
 
     `allowed` (optional, round 11 — API symmetry with the stored
     families, which all take it): a one-column (vec_id) allow-set with
@@ -4229,9 +4217,6 @@ def graph_ann(
         .select(F.col("query_id").alias("node"), F.col("vec_id").alias("dst"))
         .persist()  # hops re-join the same edge table
     )
-    q = queries.select(
-        "query_id", F.col("embedding").alias("qe")
-    )
     nodes = corpus.select(
         F.col("vec_id").alias("node"), F.col("embedding").alias("ce")
     )
@@ -4245,138 +4230,12 @@ def graph_ann(
             corpus, n_entries, centroids=cents if n_entries == 8 else None
         )
     )
-
-    def _score(fr: DataFrame) -> DataFrame:
-        # corpus-sized nodes scan on the left, bounded frontier
-        # broadcast on the right — never a shuffle of the corpus
-        return (
-            nodes.join(F.broadcast(fr), "node")
-            .join(F.broadcast(q), "query_id")
-            .select(
-                "query_id", "node",
-                F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cos"),
-            )
-        )
-
-    def _expand(fr: DataFrame) -> DataFrame:
-        # expand + score in ONE plan: the candidate set (frontier
-        # joined along edges, deduped) is bounded, so it broadcasts
-        # into the nodes scan; already-visited candidates are filtered
-        # driver-side (scoring them again is the same 6dp value)
-        cand = (
-            edges.join(F.broadcast(fr), "node")
-            .select("query_id", F.col("dst").alias("node"))
-        )
-        # no distinct: dedup happens in the driver's visited dict, and
-        # dropping it removes a shuffle stage from every hop's job
-        return _score(cand)
-
-    def _expand2(fr: DataFrame, with_scores: bool) -> DataFrame:
-        # depth-2 speculative expansion (see graph_ann_stored._expand2
-        # — same shape without the bucket routing column; no mid-plan
-        # distinct for the same stage-latency reason)
-        c1 = (
-            edges.join(F.broadcast(fr), "node")
-            .select("query_id", F.col("dst").alias("node"))
-        )
-        c2 = (
-            edges.join(F.broadcast(c1), "node")
-            .select(
-                "query_id", F.col("node").alias("src"),
-                F.col("dst").alias("node"),
-            )
-        )
-        s1 = _score(c1).select(
-            "query_id", F.lit(None).cast("long").alias("src"), "node",
-            "cos", F.lit(1).alias("lvl"),
-        )
-        s2 = (
-            nodes.join(F.broadcast(c2), "node")
-            .join(F.broadcast(q), "query_id")
-            .select(
-                "query_id", "src", "node",
-                F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cos"),
-                F.lit(2).alias("lvl"),
-            )
-        )
-        out = s1.unionByName(s2)
-        if with_scores:
-            s0 = _score(fr).select(
-                "query_id", F.lit(None).cast("long").alias("src"), "node",
-                "cos", F.lit(0).alias("lvl"),
-            )
-            out = s0.unionByName(out)
-        return out
-
-    def _expand3(fr: DataFrame, with_scores: bool) -> DataFrame:
-        # depth-3 speculative expansion (see graph_ann_stored's
-        # _mk_expand3 — same shape without the bucket routing column;
-        # no mid-plan distincts, ONE scoring join for all levels)
-        def _hop(src_df: DataFrame) -> DataFrame:
-            return (
-                edges.join(F.broadcast(src_df), "node")
-                .select(
-                    "query_id", F.col("node").alias("src"),
-                    F.col("dst").alias("node"),
-                )
-            )
-
-        c1 = _hop(fr)
-        c2 = _hop(c1.select("query_id", "node"))
-        c3 = _hop(c2.select("query_id", "node"))
-        cand = c1.select(
-            "query_id", "src", "node", F.lit(1).alias("lvl")
-        ).unionByName(
-            c2.select("query_id", "src", "node", F.lit(2).alias("lvl"))
-        ).unionByName(
-            c3.select("query_id", "src", "node", F.lit(3).alias("lvl"))
-        )
-        if with_scores:
-            cand = fr.select(
-                "query_id", F.lit(None).cast("long").alias("src"),
-                "node", F.lit(0).alias("lvl"),
-            ).unionByName(cand)
-        return (
-            nodes.join(F.broadcast(cand), "node")
-            .join(F.broadcast(q), "query_id")
-            .select(
-                "query_id", "src", "node",
-                F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cos"),
-                "lvl",
-            )
-        )
-
-    qids = [r.query_id for r in queries.select("query_id").collect()]
-    entry_nodes = [r.node for r in entry.collect()]
-    # filtered probe: rank the walk's FULL visited set, then restrict
-    # to allowed before the final top-k (same as graph_ann_stored)
-    k_eff = k if allowed is None else 1 << 30
-    out = _beam_walk(
-        spark, qids, entry_nodes, _score, _expand, k_eff, beam, hops,
-        max_degree=knn,
-        first_fn=lambda fr: _score(fr).unionByName(_expand(fr)),
-        expand2_fn=_expand2,
-        expand3_fn=_expand3,
+    out = _graph_probe(
+        spark, nodes, [edges], [r.node for r in entry.collect()], queries,
+        k, beam, hops, 0, knn, allowed=allowed,
     )
     edges.unpersist()
-    if allowed is None:
-        return out
-    # allow-set scanned once, streamed against the broadcast of the
-    # walk's bounded result (never a shuffle of the allow-set)
-    flt = allowed.select("vec_id").distinct().join(
-        F.broadcast(out.select("query_id", "vec_id", "cos")), "vec_id"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        flt.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select(
-            "query_id", "vec_id", "cos", F.col("rk").cast("int").alias("rk")
-        )
-        .orderBy("query_id", "rk")
-    )
+    return out
 
 
 def hnsw_level(layer_mult: int, layers: int, col: str = "vec_id"):
@@ -5126,255 +4985,6 @@ def pagerank_stored(
     )
 
 
-def _hnsw_walk(
-    spark,
-    qids: list,
-    entry_nodes: list,
-    score_fn,
-    upper_expands: list,
-    expand_fn,
-    k: int,
-    beam: int,
-    hops: int,
-    hops_upper: int,
-    max_degree: int = 8,
-    upper_expand2s: list | None = None,
-    expand2_fn=None,
-    expand3_fn=None,
-) -> DataFrame:
-    """Layered (HNSW-style) driver-coordinated walk: greedy descent
-    through the upper layers — per layer, `hops_upper` beam=1 rounds
-    over that layer's edges — then the standard layer-0 beam search
-    seeded with the best `beam` nodes found so far (per query). The
-    descent's long-range links cut the remaining layer-0 path to
-    O(log n), which is what keeps recall flat as the corpus grows
-    without raising `hops`. Same determinism contract as _beam_walk
-    (6dp, (cos DESC, node ASC) ties, fixed round counts), so the
-    unrolled SQL mirror is a FULL oracle. State bound: q * (1 +
-    (layers-1)*hops_upper*deg + hops*beam*deg) (one more deg factor
-    with speculation) — chunked above _BEAM_MAX_STATE like _beam_walk.
-
-    Action fusion (`upper_expand2s`/`expand2_fn`, same speculative
-    depth-2 trick as _beam_walk): lvl-1 rows are tagged with their
-    frontier parent (`src`), so ONE action can score the entries AND
-    prefetch two upper rounds — the driver picks the best entry, then
-    applies the exact parent restriction per round; unselected
-    prefetched rows are dropped. Selection is byte-identical to the
-    sequential descent (test- and oracle-pinned); the probe runs
-    ~1 + (layers-1)*ceil(hops_upper/2) + ceil(hops/2) actions."""
-
-    def fr_df(pairs):
-        return spark.createDataFrame(pairs, "query_id long, node long")
-
-    def _best(scored: dict, chunk_qids: list, n: int) -> list:
-        by_q: dict = {}
-        for (qd, node), cos in scored.items():
-            by_q.setdefault(qd, []).append((cos, node))
-        return [
-            (qd, node)
-            for qd in chunk_qids
-            for cos, node in sorted(
-                by_q.get(qd, []), key=lambda t: (-t[0], t[1])
-            )[:n]
-        ]
-
-    def _two_restricted(scored, rows1, rows2, frontier, chunk_qids, n):
-        """Two sequential rounds off prefetched src-tagged rows: round
-        A admits lvl-1 rows whose parent is in `frontier`, round B
-        admits lvl-2 rows whose parent won round A's beam — exactly
-        the sequential walk's candidate sets, just prefetched."""
-        fset = set(frontier)
-        newa: dict = {}
-        for key, src, cos in rows1:
-            if (key[0], src) in fset and key not in scored and key not in newa:
-                newa[key] = cos
-        scored.update(newa)
-        fra = _best(newa, chunk_qids, n)
-        aset = set(fra)
-        newb: dict = {}
-        for key, src, cos in rows2:
-            if (key[0], src) in aset and key not in scored and key not in newb:
-                newb[key] = cos
-        scored.update(newb)
-        return _best(newb, chunk_qids, n)
-
-    def _three_restricted(
-        scored, rows1, rows2, rows3, frontier, chunk_qids, n
-    ):
-        """_two_restricted plus one more round: lvl-3 rows admitted
-        iff their lvl-2 parent won round B's beam — three sequential
-        rounds off one prefetched action, selection byte-identical."""
-        fset = set(frontier)
-        newa: dict = {}
-        for key, src, cos in rows1:
-            if (key[0], src) in fset and key not in scored and key not in newa:
-                newa[key] = cos
-        scored.update(newa)
-        aset = set(_best(newa, chunk_qids, n))
-        newb: dict = {}
-        for key, src, cos in rows2:
-            if (key[0], src) in aset and key not in scored and key not in newb:
-                newb[key] = cos
-        scored.update(newb)
-        bset = set(_best(newb, chunk_qids, n))
-        newc: dict = {}
-        for key, src, cos in rows3:
-            if (key[0], src) in bset and key not in scored and key not in newc:
-                newc[key] = cos
-        scored.update(newc)
-        return _best(newc, chunk_qids, n)
-
-    def _walk_chunk(chunk_qids: list) -> list:
-        scored: dict = {}
-        entries = [
-            (int(qd), int(n)) for qd in chunk_qids for n in entry_nodes
-        ]
-        fused_first = bool(upper_expand2s) and hops_upper >= 2 and entries
-        if fused_first:
-            # ONE action: entry scores + two prefetched rounds of the
-            # TOP layer, expanded from every entry (the driver then
-            # restricts to the best entry's chain — sequential
-            # semantics, prefetched superset)
-            rows1, rows2 = [], []
-            for r in upper_expand2s[0](
-                fr_df(entries), with_scores=True
-            ).collect():
-                key = (r.query_id, r.node)
-                if r.lvl == 0:
-                    scored[key] = r.cos
-                elif r.lvl == 1:
-                    rows1.append((key, r.src, r.cos))
-                else:
-                    rows2.append((key, r.src, r.cos))
-            frontier = _best(scored, chunk_qids, 1)
-            frontier = _two_restricted(
-                scored, rows1, rows2, frontier, chunk_qids, 1
-            )
-            done_first = 2
-        else:
-            for r in score_fn(fr_df(entries)).collect():
-                scored[(r.query_id, r.node)] = r.cos
-            frontier = []
-            done_first = 0
-        for li, expand_u in enumerate(upper_expands):  # top layer first
-            remaining = hops_upper - (done_first if li == 0 else 0)
-            if li > 0 or not fused_first:
-                frontier = _best(scored, chunk_qids, 1)
-            while remaining > 0 and frontier:
-                ex2 = upper_expand2s[li] if upper_expand2s else None
-                if ex2 is not None and remaining >= 2:
-                    rows1, rows2 = [], []
-                    for r in ex2(fr_df(frontier), with_scores=False).collect():
-                        key = (r.query_id, r.node)
-                        if r.lvl == 1:
-                            rows1.append((key, r.src, r.cos))
-                        else:
-                            rows2.append((key, r.src, r.cos))
-                    frontier = _two_restricted(
-                        scored, rows1, rows2, frontier, chunk_qids, 1
-                    )
-                    remaining -= 2
-                    continue
-                new: dict = {}
-                for r in expand_u(fr_df(frontier)).collect():
-                    key = (r.query_id, r.node)
-                    if key not in scored and key not in new:
-                        new[key] = r.cos
-                scored.update(new)
-                frontier = _best(new, chunk_qids, 1)
-                remaining -= 1
-        # layer 0: seed with the best `beam` nodes of the whole descent
-        frontier = _best(scored, chunk_qids, beam)
-        remaining = hops
-        while remaining > 0 and frontier:
-            if expand3_fn is not None and remaining >= 3:
-                rows1, rows2, rows3 = [], [], []
-                for r in expand3_fn(
-                    fr_df(frontier), with_scores=False
-                ).collect():
-                    key = (r.query_id, r.node)
-                    if r.lvl == 1:
-                        rows1.append((key, r.src, r.cos))
-                    elif r.lvl == 2:
-                        rows2.append((key, r.src, r.cos))
-                    else:
-                        rows3.append((key, r.src, r.cos))
-                frontier = _three_restricted(
-                    scored, rows1, rows2, rows3, frontier, chunk_qids, beam
-                )
-                remaining -= 3
-                continue
-            if expand2_fn is not None and remaining >= 2:
-                rows1, rows2 = [], []
-                for r in expand2_fn(
-                    fr_df(frontier), with_scores=False
-                ).collect():
-                    key = (r.query_id, r.node)
-                    if r.lvl == 1:
-                        rows1.append((key, r.src, r.cos))
-                    else:
-                        rows2.append((key, r.src, r.cos))
-                frontier = _two_restricted(
-                    scored, rows1, rows2, frontier, chunk_qids, beam
-                )
-                remaining -= 2
-                continue
-            new = {}
-            for r in expand_fn(fr_df(frontier)).collect():
-                key = (r.query_id, r.node)
-                if key not in scored and key not in new:
-                    new[key] = r.cos
-            scored.update(new)
-            frontier = _best(new, chunk_qids, beam)
-            remaining -= 1
-        by_q: dict = {}
-        for (qd, node), cos in scored.items():
-            if node != qd:
-                by_q.setdefault(qd, []).append((cos, node))
-        return [
-            (qd, node, float(cos), rk)
-            for qd in sorted(by_q)
-            for rk, (cos, node) in enumerate(
-                sorted(by_q[qd], key=lambda t: (-t[0], t[1]))[:k], 1
-            )
-        ]
-
-    deg = max(1, max_degree)
-    # TIERED SPECULATION (round-15) — same rationale as _beam_walk's
-    # guard: on a hub-heavy appended/compacted graph the depth-2/3
-    # prefetch budget (spec = 1+deg+deg^2) forced near-single-query
-    # chunks, multiplying the probe's Spark actions ~8x. Every
-    # prefetch depth selects byte-identically (test-pinned), so step
-    # down to the deepest tier whose budget serves the WHOLE batch in
-    # one chunk before falling back to sharding on the sequential
-    # tier's (smallest) budget.
-    def _per_q(spec: int) -> int:
-        return 1 + (
-            len(upper_expands) * hops_upper * deg + hops * beam * deg
-        ) * spec
-    tiers = []
-    if expand3_fn is not None:
-        tiers.append(
-            (1 + deg + deg * deg, upper_expand2s, expand2_fn, expand3_fn)
-        )
-    if upper_expand2s or expand2_fn:
-        tiers.append((1 + deg, upper_expand2s, expand2_fn, None))
-    tiers.append((1, None, None, None))
-    for spec, u2, e2, e3 in tiers:
-        if len(qids) * _per_q(spec) <= _BEAM_MAX_STATE:
-            upper_expand2s, expand2_fn, expand3_fn = u2, e2, e3
-            break
-    else:
-        upper_expand2s, expand2_fn, expand3_fn = None, None, None
-        spec = 1
-    per_q = _per_q(spec)
-    chunk = max(1, _BEAM_MAX_STATE // per_q)
-    out = []
-    for i in range(0, len(qids), chunk):
-        out.extend(_walk_chunk(qids[i:i + chunk]))
-    return _walk_result_df(spark, out).orderBy("query_id", "rk")
-
-
 def graph_ann_stored(
     spark,
     index,
@@ -5393,12 +5003,11 @@ def graph_ann_stored(
     graph. Only manifest-committed `commit=` partitions are served.
 
     `index` is a path or an open GraphIndexHandle (serving callers
-    open once, probe many). The walk uses the depth-2 speculative
-    expansion (_beam_walk expand2_fn): ~ceil(hops/2) actions instead
-    of 1+hops, identical results. An index built with layers > 1
-    probes through the HNSW descent instead (_hnsw_walk):
-    `hops_upper` beam=1 rounds per upper layer, then the layer-0 beam
-    search seeded with the descent's best nodes.
+    open once, probe many). The walk (_graph_walk) prefetches up to
+    three hops per action: ~ceil(hops/3) actions instead of 1+hops,
+    identical results. An index built with layers > 1 adds the HNSW
+    descent: `hops_upper` beam=1 rounds per upper layer, then the
+    layer-0 beam search seeded with the descent's best nodes.
 
     `allowed` (optional) makes this a FILTERED vector search on the
     graph family (round 10; the IVF/PQ twins got it in round 9): a
@@ -5423,168 +5032,10 @@ def graph_ann_stored(
     h = index if isinstance(index, GraphIndexHandle) else GraphIndexHandle(
         spark, index
     )
-    edges_all, nodes = h.edges, h.nodes
-    edges = _layer0(edges_all)  # NULL-safe: legacy rows are layer 0
-    q = queries.select("query_id", F.col("embedding").alias("qe"))
-    bucket_of = F.pmod(F.hash("node"), F.lit(h.n_buckets)).cast("int")
-
-    def _score(fr: DataFrame) -> DataFrame:
-        # store scan on the left, bounded frontier broadcast on the
-        # right: the (bucket, node) join key starts with the partition
-        # column, so the scan prunes to the frontier's bucket dirs
-        return (
-            nodes.join(
-                F.broadcast(fr.withColumn("bucket", bucket_of)),
-                ["bucket", "node"],
-            )
-            .join(F.broadcast(q), "query_id")
-            .select(
-                "query_id", "node",
-                F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cos"),
-            )
-        )
-
-    def _expand(fr: DataFrame) -> DataFrame:
-        # expand + score in ONE pruned pass (same shape as graph_ann;
-        # both the edge and node scans read only the candidate buckets)
-        cand = (
-            edges.join(
-                F.broadcast(fr.withColumn("bucket", bucket_of)),
-                ["bucket", "node"],
-            )
-            .select("query_id", F.col("dst").alias("node"))
-        )
-        # no distinct: dedup happens in the driver's visited dict, and
-        # dropping it removes a shuffle stage from every hop's job
-        return _score(cand)
-
-    def _mk_expand2(edge_df: DataFrame):
-        # depth-2 speculative expansion in ONE action: lvl-1 = the
-        # frontier's neighbors TAGGED with the frontier node they hang
-        # off (`src`), lvl-2 = the lvl-1 nodes' neighbors tagged the
-        # same way — the driver applies the exact per-round adjacency
-        # restriction off the tags. All intermediates are parameter-
-        # bounded -> broadcast; every scan is bucket-pruned.
-        # `with_scores` adds the frontier's own scores (lvl 0) for the
-        # fused entry action.
-        def _ex2(fr: DataFrame, with_scores: bool) -> DataFrame:
-            c1 = (
-                edge_df.join(
-                    F.broadcast(fr.withColumn("bucket", bucket_of)),
-                    ["bucket", "node"],
-                )
-                .select(
-                    "query_id", F.col("node").alias("src"),
-                    F.col("dst").alias("node"),
-                )
-                # no distinct: a shuffle stage per hop costs more than
-                # rescoring duplicates (driver dict drops them; the
-                # state guard budgets the full degree product)
-            )
-            c1n = c1.select("query_id", "node")
-            c2 = (
-                edge_df.join(
-                    F.broadcast(c1n.withColumn("bucket", bucket_of)),
-                    ["bucket", "node"],
-                )
-                .select(
-                    "query_id", F.col("node").alias("src"),
-                    F.col("dst").alias("node"),
-                )
-            )
-
-            # ONE scoring join for every level: the bounded candidate
-            # union (lvl 0/1/2, src-tagged) broadcasts into a single
-            # bucket-pruned nodes scan — one nodes pass and one
-            # frontier of broadcast exchanges instead of one per level
-            cand = c1.select(
-                "query_id", "src", "node", F.lit(1).alias("lvl")
-            ).unionByName(
-                c2.select("query_id", "src", "node", F.lit(2).alias("lvl"))
-            )
-            if with_scores:
-                cand = fr.select(
-                    "query_id", F.lit(None).cast("long").alias("src"),
-                    "node", F.lit(0).alias("lvl"),
-                ).unionByName(cand)
-            return (
-                nodes.join(
-                    F.broadcast(cand.withColumn("bucket", bucket_of)),
-                    ["bucket", "node"],
-                )
-                .join(F.broadcast(q), "query_id")
-                .select(
-                    "query_id", "src", "node",
-                    F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cos"),
-                    "lvl",
-                )
-            )
-
-        return _ex2
-
-    def _mk_expand3(edge_df: DataFrame):
-        # depth-3 speculative expansion in ONE action (round 9): lvl-1
-        # = the frontier's neighbors, lvl-2 = their neighbors tagged
-        # with the lvl-1 node they hang off, lvl-3 = one further,
-        # tagged with the lvl-2 parent — the driver restricts each
-        # round to the previous round's beam winners, so selection is
-        # byte-identical to three sequential expands. Candidate sets
-        # stay parameter-bounded (<= q*beam*deg^3 rows) -> broadcast;
-        # every scan is bucket-pruned; ONE nodes pass scores all
-        # levels.
-        def _ex3(fr: DataFrame, with_scores: bool) -> DataFrame:
-            # NO mid-plan distinct: each distinct is a shuffle stage
-            # on a tiny set (measured ~0.2s of pure stage latency per
-            # hop at the serving edge, ~1/3 of the probe); duplicate
-            # candidates rescore to the same 6dp value and the driver
-            # dict drops them, while the state guard already budgets
-            # the full deg^3 product
-            def _hop(src_df: DataFrame) -> DataFrame:
-                return (
-                    edge_df.join(
-                        F.broadcast(src_df.withColumn("bucket", bucket_of)),
-                        ["bucket", "node"],
-                    )
-                    .select(
-                        "query_id", F.col("node").alias("src"),
-                        F.col("dst").alias("node"),
-                    )
-                )
-
-            c1 = _hop(fr)
-            c2 = _hop(c1.select("query_id", "node"))
-            c3 = _hop(c2.select("query_id", "node"))
-            cand = c1.select(
-                "query_id", "src", "node", F.lit(1).alias("lvl")
-            ).unionByName(
-                c2.select("query_id", "src", "node", F.lit(2).alias("lvl"))
-            ).unionByName(
-                c3.select("query_id", "src", "node", F.lit(3).alias("lvl"))
-            )
-            if with_scores:
-                cand = fr.select(
-                    "query_id", F.lit(None).cast("long").alias("src"),
-                    "node", F.lit(0).alias("lvl"),
-                ).unionByName(cand)
-            return (
-                nodes.join(
-                    F.broadcast(cand.withColumn("bucket", bucket_of)),
-                    ["bucket", "node"],
-                )
-                .join(F.broadcast(q), "query_id")
-                .select(
-                    "query_id", "src", "node",
-                    F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cos"),
-                    "lvl",
-                )
-            )
-
-        return _ex3
-
-    _expand2 = _mk_expand2(edges)
-    _expand3 = _mk_expand3(edges)
-
-    qids = [r.query_id for r in queries.select("query_id").collect()]
+    layer_edges = [_layer0(h.edges)] + [  # NULL-safe: legacy rows are layer 0
+        h.edges.where(F.col("layer") == lv).drop("layer")
+        for lv in range(1, h.layers)
+    ]
     # state-guard degree bound: the PERSISTED per-layer max out-degree
     # from the index meta (round 11 — maintained at write/append/
     # compact time, so opening costs no edge-wide aggregation; legacy
@@ -5592,72 +5043,10 @@ def graph_ann_stored(
     # heuristic under-counted reverse-edge hubs, whose in-degree is
     # unbounded under appends, so the _BEAM_MAX_STATE promise could be
     # silently exceeded on adversarial appended indexes.
-    eff_deg = h.max_out_degree
-    # filtered/deleted probe: rank the walk's FULL visited set
-    # (bounded by the same state-guard contract), then restrict to
-    # allowed / drop tombstoned ids before the final top-k — the walk
-    # itself never changes (it may route THROUGH tombstoned nodes for
-    # navigability; it just can't return them)
-    k_eff = k if (allowed is None and h.tombstones is None) else 1 << 30
-    if h.layers > 1:
-        def _upper_expand(lvl: int):
-            uedges = edges_all.where(F.col("layer") == lvl).drop("layer")
-
-            def _ex(fr: DataFrame) -> DataFrame:
-                cand = (
-                    uedges.join(
-                        F.broadcast(fr.withColumn("bucket", bucket_of)),
-                        ["bucket", "node"],
-                    )
-                    .select("query_id", F.col("dst").alias("node"))
-                )
-                return _score(cand)
-
-            return _ex
-
-        upper_lvls = list(range(h.layers - 1, 0, -1))
-        res = _hnsw_walk(
-            spark, qids, h.entries, _score,
-            [_upper_expand(lvl) for lvl in upper_lvls],
-            _expand, k_eff, beam, hops, hops_upper, max_degree=eff_deg,
-            upper_expand2s=[
-                _mk_expand2(edges_all.where(F.col("layer") == lvl)
-                            .drop("layer"))
-                for lvl in upper_lvls
-            ],
-            expand2_fn=_expand2,
-            expand3_fn=_expand3,
-        )
-    else:
-        res = _beam_walk(
-            spark, qids, h.entries, _score, _expand, k_eff, beam, hops,
-            max_degree=eff_deg,
-            first_fn=lambda fr: _score(fr).unionByName(_expand(fr)),
-            expand2_fn=_expand2,
-            expand3_fn=_expand3,
-        )
-    if allowed is None and h.tombstones is None:
-        return res
-    # one streaming pass per restriction set against the BROADCAST of
-    # the walk's bounded result (never a shuffle of the allow-set or
-    # the tombstone set), then the final rank over the survivors only
-    flt = _anti_tombstones_bounded(
-        res.select("query_id", "vec_id", "cos"), h.tombstones
-    )
-    if allowed is not None:
-        flt = allowed.select("vec_id").distinct().join(
-            F.broadcast(flt), "vec_id"
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    return (
-        flt.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select(
-            "query_id", "vec_id", "cos", F.col("rk").cast("int").alias("rk")
-        )
-        .orderBy("query_id", "rk")
+    return _graph_probe(
+        spark, h.nodes, layer_edges, h.entries, queries, k, beam, hops,
+        hops_upper, h.max_out_degree, allowed=allowed,
+        tombstones=h.tombstones, n_buckets=h.n_buckets,
     )
 
 
@@ -6630,13 +6019,6 @@ def reindex_bq(
         live_ids.distinct(), "vec_id", "semi"
     )
     write_bq_index(live, dst_path, n_centroids=n_centroids, iters=iters)
-
-
-def clone_minhash_index(spark, src: str, dst: str, as_of: int | None = None):
-    """Deep-clone a stored MinHash signature index (sigs + banded
-    bucket inverted index; the hash family is seeded constants — no
-    model dirs to copy)."""
-    clone_index(spark, src, dst, MINHASH_INDEX_SUBDIRS, as_of=as_of)
 
 
 class IndexFamily(NamedTuple):

@@ -1653,10 +1653,12 @@ def _compile_binop(
         if expr.op == "or":
             if set(l.columns) != set(r.columns):
                 raise ValueError("or-operands must have identical schemas")
-            extra = r.join(l.select(*keys).distinct(), keys, "left_anti")
+            extra = _match_join(
+                r, l.select(*keys).distinct(), keys, "left_anti"
+            )
             return l.unionByName(extra)
         how = "left_semi" if expr.op == "and" else "left_anti"
-        return l.join(r.select(*keys).distinct(), keys, how)
+        return _match_join(l, r.select(*keys).distinct(), keys, how)
     # group_left / group_right: many-to-one matching — the MANY side's
     # extra label columns carry through; the "one" side reduces to
     # key+value and is the natural broadcast side (unique per key,
@@ -1671,10 +1673,10 @@ def _compile_binop(
             )
         carry = [c for c in r.columns if c not in keys and c != "value"]
         picked = _pick_carry(expr.carry_labels, l, r, keys, carry)
-        lhs = F.broadcast(
-            l.withColumnRenamed("value", "_l").select(*keys, *picked, "_l")
+        lhs = l.withColumnRenamed("value", "_l").select(*keys, *picked, "_l")
+        joined = _match_join(
+            r.withColumnRenamed("value", "_r"), lhs, keys, broadcast=True
         )
-        joined = r.withColumnRenamed("value", "_r").join(lhs, keys)
         carry += picked
     else:
         carry = (
@@ -1688,9 +1690,10 @@ def _compile_binop(
             else []
         )
         rhs = r.withColumnRenamed("value", "_r").select(*keys, *picked, "_r")
-        if expr.group_left:
-            rhs = F.broadcast(rhs)
-        joined = l.withColumnRenamed("value", "_l").join(rhs, keys)
+        joined = _match_join(
+            l.withColumnRenamed("value", "_l"), rhs, keys,
+            broadcast=expr.group_left,
+        )
         carry += picked
     if expr.op in _CMP_FNS:
         cmp = _CMP_FNS[expr.op](F.col("_l"), F.col("_r"))
@@ -1712,6 +1715,31 @@ def _compile_binop(
             _ARITH_FNS[expr.op](F.col("_l"), F.col("_r")), promql.ROUND_AVG
         ).alias("value"),
     )
+
+
+def _match_join(
+    left: DataFrame, right: DataFrame, keys: list, how: str = "inner",
+    broadcast: bool = False,
+) -> DataFrame:
+    """Vector matching join on label keys, NULL-safe: a label column
+    that BOTH operands leave NULL (a wide series dim has one column per
+    label name of any metric) matches, as an absent label does in
+    Prometheus — a plain `join(right, keys)` drops those pairs, since
+    NULL = NULL is not true. Output columns are the plain join's: the
+    keys, then left's other columns, then (inner) right's."""
+    tmp = {k: f"_mk_{i}" for i, k in enumerate(keys)}
+    rk = right.select(
+        *[F.col(c).alias(tmp.get(c, c)) for c in right.columns]
+    )
+    if broadcast:
+        rk = F.broadcast(rk)
+    cond = [F.col(k).eqNullSafe(F.col(t)) for k, t in tmp.items()]
+    joined = left.join(rk, cond, how)
+    if how in ("left_semi", "left_anti"):
+        return joined
+    rest = [c for c in left.columns if c not in tmp]
+    rest += [c for c in right.columns if c not in tmp]
+    return joined.select(*keys, *rest)
 
 
 def _pick_carry(requested, one, many, keys, existing) -> list[str]:

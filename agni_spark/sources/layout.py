@@ -504,50 +504,6 @@ def delete_samples(
         t.unpersist()
 
 
-def write_bucketed(
-    samples: DataFrame,
-    series: DataFrame,
-    table_prefix: str,
-    n_buckets: int = 32,
-) -> None:
-    """Bucketed variant of the store (co-located joins): both tables
-    hash-bucketed on series_id, so samples JOIN series plans with ZERO
-    shuffle on either side (asserted in test_plans). This is the 100 TB
-    answer to repeated series-dim joins (PromQL aggregate_by, serving
-    matrix assembly): pay the bucketing once at write, never shuffle
-    the fact table again.
-
-    Uses saveAsTable (bucket metadata lives in the session catalog —
-    Spark cannot express bucketing through path-only writes). Stale
-    warehouse directories from prior sessions are removed first: the
-    catalog is session-scoped but its file locations persist, and
-    saveAsTable refuses to reuse an orphaned location."""
-    from urllib.parse import urlparse
-
-    spark = samples.sparkSession
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for suffix in ("samples", "series"):
-        name = f"{table_prefix}_{suffix}"
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        loc = os.path.join(warehouse, name.lower())
-        if _fs_exists(spark, loc):
-            _fs_delete(spark, loc)
-    (
-        samples.write.bucketBy(n_buckets, "series_id")
-        .sortBy("series_id", "ts_ms")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(f"{table_prefix}_samples")
-    )
-    (
-        series.write.bucketBy(n_buckets, "series_id")
-        .sortBy("series_id")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(f"{table_prefix}_series")
-    )
-
-
 def repair_overlaps(spark: SparkSession, path: str, block_ms: int = BLOCK_MS) -> int:
     """Overlap REPAIR — the remedy the reference lacks: agni rejects a
     block set with overlapping time ranges outright (db.go:206-220,

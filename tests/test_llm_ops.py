@@ -111,11 +111,6 @@ def test_multimodal_frame_sample_offsets(spark):
     assert [(r.offset, r.n_bytes) for r in rows] == [(0, 4), (4, 4), (8, 2)]
 
 
-def test_resize_stub_raises(spark):
-    with pytest.raises(NotImplementedError):
-        multimodal.resize_stub(None, 32, 32)
-
-
 def test_text_quality_monotonic(spark):
     df = spark.createDataFrame(
         [
@@ -734,6 +729,53 @@ def test_pagerank_star_graph(spark):
     assert [r.node for r in out][0] == 0
 
 
+def test_pagerank_releases_its_pins(spark):
+    """pagerank unpersists its edge, node and edge-degree pins on every
+    path: iters=0 adds no pinned RDD to the session, iters=3 only the
+    final checkpoint backing the returned frame. Ranks match a Python
+    restatement of the discretized recurrence, and the returned frame
+    still computes after the release."""
+    import gc
+    import math
+    import time
+
+    pairs = [(1, 0), (2, 0), (3, 0), (4, 0), (0, 1), (0, 2), (5, 1)]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    nodes = sorted({n for p in pairs for n in p})
+    outdeg = {n: sum(1 for s, _ in pairs if s == n) for n in nodes}
+
+    def expected(iters, d=0.85):
+        r = {n: 1.0 / len(nodes) for n in nodes}
+        for _ in range(iters):
+            inflow = {n: 0.0 for n in nodes}
+            for s, t in pairs:
+                inflow[t] += r[s] / outdeg[s]
+            r = {
+                n: math.floor(((1 - d) / len(nodes) + d * inflow[n]) * 1e9 + 0.5) / 1e9
+                for n in nodes
+            }
+        return {n: round(v, 6) for n, v in r.items()}
+
+    jsc = spark.sparkContext._jsc
+
+    def pins():
+        # unreachable checkpoints go to the context cleaner after a JVM
+        # GC; a table left in the cache manager never does
+        for _ in range(10):
+            gc.collect()
+            spark.sparkContext._jvm.System.gc()
+            time.sleep(0.2)
+        return jsc.getPersistentRDDs().size()
+
+    for iters, budget in ((0, 0), (3, 1)):
+        before = pins()
+        out = simsearch.pagerank(edges, iters=iters)
+        got = {r.node: r["rank"] for r in out.collect()}
+        assert pins() - before <= budget, iters
+        assert got == expected(iters), iters
+        assert {r.node: r["rank"] for r in out.collect()} == got
+
+
 def test_chunk_windows_cover_and_roundtrip(spark):
     rows = [(0, "a" * 300), (1, "b" * 120), (2, "c" * 50), (3, "")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -1234,6 +1276,43 @@ def test_graph_ann_stored_equals_in_memory(spark, tmp_path):
         ).collect()
     )
     assert mem8 == stored8 and len(mem8) == 15
+
+
+def test_graph_walk_starts_from_every_entry(spark, tmp_path):
+    """With no upper layer the layer-0 beam starts from EVERY entry,
+    not from the best `beam` of them (HNSW's rule after a descent): the
+    two walks differ once n_entries > beam. Both graph paths with
+    n_entries=8, beam=4 match the DuckDB unrolled-hop oracle, whose
+    frontier f0 is the whole entry set."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entry
+
+    sf = "/root/testdata/sf0.001"
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+    q = emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'"
+    )
+    want = [
+        tuple(r) for r in con.sql(
+            entry._sql_graph_ann(beam=4, n_entries=8)
+        ).fetchall()
+    ]
+    mem = simsearch.graph_ann(
+        emb, q, k=10, knn=5, beam=4, hops=3, n_entries=8
+    )
+    path = str(tmp_path / "gidx8")
+    simsearch.write_graph_index(emb, path, knn=5, n_entries=8)
+    assert len(simsearch.open_graph_index(spark, path).entries) > 4
+    stored = simsearch.graph_ann_stored(spark, path, q, k=10, beam=4, hops=3)
+    assert len(want) == 50
+    assert [tuple(r) for r in mem.collect()] == want
+    assert [tuple(r) for r in stored.collect()] == want
 
 
 def test_index_compaction_and_vacuum(spark, tmp_path):
@@ -3261,7 +3340,7 @@ def test_clone_minhash_probe_identical(spark, tmp_path):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     msrc, mdst = str(tmp_path / "msrc"), str(tmp_path / "mdst")
     dedup.write_minhash_index(docs.limit(60), msrc)
-    simsearch.clone_minhash_index(spark, msrc, mdst)
+    simsearch.clone_index(spark, msrc, mdst, simsearch.MINHASH_INDEX_SUBDIRS)
     for sub in ("sigs", "buckets"):
         a = sorted(
             tuple(sorted(r.asDict().items())) for r in

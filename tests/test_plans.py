@@ -96,39 +96,6 @@ def test_promql_aggregate_by_broadcasts_dim(spark, querier):
     assert "SortMergeJoin" not in plan
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    samples = spark.createDataFrame(
-        [(i % 50, i * 1000, float(i)) for i in range(2000)],
-        "series_id long, ts_ms long, value double",
-    )
-    series = spark.createDataFrame(
-        [(i, f"job{i % 3}") for i in range(50)], "series_id long, job string"
-    )
-    layout.write_bucketed(samples, series, "bkt", n_buckets=8)
-    s = spark.table("bkt_samples")
-    d = spark.table("bkt_series")
-    joined = s.join(d, "series_id").groupBy("job").count()
-    # with broadcast on, Catalyst (correctly) broadcasts the tiny dim;
-    # disable it to expose the co-located bucket-join path that matters
-    # when BOTH sides are fact-scale
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plan = _formatted(joined)
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        # exactly ONE exchange in the whole plan: the post-join groupBy.
-        # Neither join input shuffles — bucket layout satisfies the
-        # join's distribution requirement.
-        import re
-
-        exchanges = re.findall(r"^\(\d+\) ((?:Broadcast)?Exchange)", plan, re.M)
-        assert exchanges == ["Exchange"], exchanges
-        assert plan.count("Bucketed: true") == 2
-        assert joined.count() == 3
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_literal_regex_rewrite_avoids_rlike(querier):
     from agni_spark.matchers import re_match
 

@@ -1136,6 +1136,47 @@ def test_range_queries_driver_postings_match_spark_path(spark, tmp_path, monkeyp
     assert spark_q._postings is False
 
 
+def test_vector_matching_null_label_columns(spark, tmp_path):
+    """One-to-one, group_left, `and`, `unless` and `or` match pairs
+    whose label columns are NULL on both sides: on a store's wide
+    series dim (a column per label name of any metric) web's request
+    and memory series both leave `pod`, `env` and `mode` NULL. Both
+    rates are per-series slopes, sid/60 and 1/60 (same scrape times),
+    so the ratio is the request series' id: 7 for i3, 10 for i4."""
+    import json
+
+    from agni_spark.protocol.server import handle_query_range
+    from agni_spark.querier import querier_from_store
+
+    store = str(tmp_path / "range_store")
+    _range_store(spark, store)
+    q = querier_from_store(spark, store)
+    reqs = 'rate(http_requests_total{job="web"}[5m])'
+    mem = 'rate(process_resident_memory_bytes{job="web"}[5m])'
+
+    def result(e):
+        doc = json.loads(handle_query_range(
+            q, {"query": [e], "start": ["0"], "end": ["7199.999"], "step": ["300"]}
+        ))
+        assert doc["status"] == "success", doc
+        return {
+            tuple(sorted(r["metric"].items())): [float(v) for _, v in r["values"]]
+            for r in doc["data"]["result"]
+        }
+
+    web = {i: (("instance", i), ("job", "web")) for i in ("i3", "i4")}
+    for e in (f"{reqs} / {mem}", f"{reqs} / on (job, instance) group_left {mem}"):
+        got = result(e)
+        assert set(got) == set(web.values()), (e, got)
+        assert len(got[web["i3"]]) == 24, e
+        assert set(got[web["i3"]]) == {7.0} and set(got[web["i4"]]) == {10.0}, e
+    # set ops keep the left side's samples under its matched label set
+    left = {web[dict(m)["instance"]]: v for m, v in result(reqs).items()}
+    assert result(f"{reqs} and {mem}") == left
+    assert result(f"{reqs} or {mem}") == left
+    assert result(f"{reqs} unless {mem}") == {}
+
+
 def test_get_errors_are_typed(served_querier, monkeypatch):
     """GET answers 400 for bad input (a missing `query`, a non-numeric
     `start`, a selector that does not parse) and 500 for an engine
