@@ -1727,18 +1727,18 @@ def _match_join(
     Prometheus — a plain `join(right, keys)` drops those pairs, since
     NULL = NULL is not true. Output columns are the plain join's: the
     keys, then left's other columns, then (inner) right's."""
+    keys = list(dict.fromkeys(keys))  # on(..., bucket_ms) repeats the time key
     tmp = {k: f"_mk_{i}" for i, k in enumerate(keys)}
     rk = right.select(
-        *[F.col(c).alias(tmp.get(c, c)) for c in right.columns]
+        *[F.col(c).alias(tmp.get(c, c)) for c in dict.fromkeys(right.columns)]
     )
     if broadcast:
         rk = F.broadcast(rk)
-    cond = [F.col(k).eqNullSafe(F.col(t)) for k, t in tmp.items()]
+    cond = [left[k].eqNullSafe(rk[t]) for k, t in tmp.items()]
     joined = left.join(rk, cond, how)
     if how in ("left_semi", "left_anti"):
         return joined
-    rest = [c for c in left.columns if c not in tmp]
-    rest += [c for c in right.columns if c not in tmp]
+    rest = [c for c in dict.fromkeys(left.columns + right.columns) if c not in tmp]
     return joined.select(*keys, *rest)
 
 
